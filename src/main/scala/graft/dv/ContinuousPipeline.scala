@@ -77,11 +77,6 @@ object ContinuousPipeline {
     allStats.join(sigDf, Seq("table_name", "column_name"))
   }
 
-  private def exists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Materialize metadata rows driver-side, then rewrite the directory —
     * the state is read and replaced in one hook, and it is column-count
     * sized (never data sized).
@@ -127,7 +122,7 @@ object ContinuousPipeline {
     // against a one-table snapshot would flag every OTHER table's columns
     // as vanished
     val mergedState =
-      if (exists(s, st.catalogDir)) {
+      if (DvLoader.pathExists(s, st.catalogDir)) {
         val prev = s.read.parquet(st.catalogDir)
         CatalogScd2.merge(prev.filter(col("table_name") === table), snap, scanTs)
           .unionByName(prev.filter(col("table_name") =!= table))
@@ -152,7 +147,7 @@ object ContinuousPipeline {
       .select(respCols.map(col): _*)
       .withColumn("classified_at", lit(scanTs))
     val responses =
-      if (exists(s, st.responsesDir))
+      if (DvLoader.pathExists(s, st.responsesDir))
         s.read.parquet(st.responsesDir)
           .join(opened, Seq("table_name", "column_name"), "left_anti")
           .unionByName(fresh)
@@ -205,11 +200,11 @@ object ContinuousPipeline {
     * Deterministically ordered by (obj, hk hex).
     */
   private[graft] def pendingErasures(s: SparkSession, ed: String): Seq[Erasure] =
-    if (!exists(s, s"$ed/requests")) Nil
+    if (!DvLoader.pathExists(s, s"$ed/requests")) Nil
     else {
       val reqs = s.read.parquet(s"$ed/requests")
       val pending =
-        if (exists(s, s"$ed/processed"))
+        if (DvLoader.pathExists(s, s"$ed/processed"))
           reqs.join(s.read.parquet(s"$ed/processed").select("obj", "hk"),
             Seq("obj", "hk"), "left_anti")
         else reqs

@@ -1,5 +1,6 @@
 package graft.dv
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,8 +8,9 @@ import org.apache.spark.sql.functions._
   * `dv_load_schema_from_build_id` deserializes the DVSchema a `go()` stored
   * in the repo and `dv_data_loader` generates the hub/sat DML from it
   * (controller/dv_loader.rs:5-66). Here: parse `dv_schema.json` back into
-  * typed specs with Spark's JSON reader and drive the (hk) / (hk, hd)
-  * anti-join increments against the stored parquet objects.
+  * typed specs and drive the (hk) / (hk, hd) anti-join increments against
+  * the stored objects through [[appendNovel]] — the one insert-only append
+  * path, which the streaming sinks and the IVF index share.
   *
   * At scale this is the steady-state pipeline: build once, then every
   * arriving batch is an anti-join append driven by the stored schema — the
@@ -35,35 +37,24 @@ object DvLoader {
 
   /** Parse the repo's dv_schema.json back into typed specs.
     *
-    * DRIVER-SIDE parse (r14, guide §5 "the driver should do almost no data
-    * work" read the other way round: metadata must never cost a CLUSTER
-    * job). The previous `spark.read.json(multiLine)` ran a schema-inference
-    * Spark job + collect per call — and this is called once per incremental
-    * load, TWICE per streaming micro-batch (streamTableLoadBatch +
-    * streamTableLoadPlans) and once per compaction/purge rewrite, so the
-    * bucketed E2E paid ~7 pure-overhead jobs per run and every streaming
-    * micro-batch paid two. The repo schema is a few-KB JSON document;
-    * Jackson (on Spark's own classpath) parses it in microseconds. Same
-    * fix shape as IvfIndexRepo.bucketing's meta parse. The SparkSession
-    * parameter stays: the schema file is read through the session's Hadoop
-    * FS so non-local repo URIs keep working.
+    * DRIVER-SIDE parse (r14): metadata must never cost a cluster job. The
+    * repo schema is a few-KB JSON document; Jackson (on Spark's own
+    * classpath) parses it in microseconds, through the session's Hadoop
+    * FS so non-local repo URIs keep working. The `bucketing` block shares
+    * its parser with the sink and index repos' meta files.
     */
   def readSchema(s: SparkSession, repoDir: String): DvSchemaRef = {
     import scala.jdk.CollectionConverters._
-    val p = new org.apache.hadoop.fs.Path(s"$repoDir/dv_schema.json")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val txt = scala.util.Using.resource(fs.open(p)) { in =>
-      new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    }
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-    def arr(n: com.fasterxml.jackson.databind.JsonNode, field: String) =
+    val path = s"$repoDir/dv_schema.json"
+    val root = readJson(s, path)
+    def arr(n: JsonNode, field: String) =
       Option(n.get(field)).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-    def cols(n: com.fasterxml.jackson.databind.JsonNode, field: String): Seq[Col] =
+    def cols(n: JsonNode, field: String): Seq[Col] =
       arr(n, field).map(c => Col(c.get("name").asText(), c.get("type").asText()))
-    def optText(n: com.fasterxml.jackson.databind.JsonNode, field: String): Option[String] =
+    def optText(n: JsonNode, field: String): Option[String] =
       Option(n.get(field)).filterNot(_.isNull).map(_.asText())
-    val bucketing = Option(root.get("bucketing")).filterNot(_.isNull).map(b =>
-      Bucketing(b.get("table_prefix").asText(), b.get("buckets").asInt()))
+    val bucketing = Option(root.get("bucketing")).filterNot(_.isNull)
+      .map(bucketingOf(_, s"$path bucketing"))
     val hubs = arr(root, "hubs").map(h =>
       HubSpec(h.get("name").asText(), h.get("source").asText(), cols(h, "bk_parts")))
     val sats = arr(root, "satellites").map(t =>
@@ -79,10 +70,31 @@ object DvLoader {
     DvSchemaRef(hubs, sats, links, bucketing)
   }
 
-  /** One incremental load pass over every schema object in `scope`: batch
-    * frames from the current source, anti-join against the stored parquet,
-    * append only novel rows. Returns (object, n_appended).
+  /** One graft-authored JSON document, parsed driver-side through the
+    * session's Hadoop FS.
     */
+  private def readJson(s: SparkSession, path: String): JsonNode = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Using.resource(p.getFileSystem(s.sparkContext.hadoopConfiguration).open(p)) { in =>
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    }
+  }
+
+  /** A `{table_prefix, buckets}` block; a missing field fails naming
+    * `where` and the field.
+    */
+  private def bucketingOf(n: JsonNode, where: String): Bucketing = {
+    def field(k: String): JsonNode =
+      Option(n.get(k)).filterNot(_.isNull).getOrElse(sys.error(s"$where lacks $k"))
+    Bucketing(field("table_prefix").asText(), field("buckets").asInt())
+  }
+
+  /** The bucket spec pinned in a repo meta file (`sink_meta.json`,
+    * `ivf_meta.json`) — None when the file does not exist.
+    */
+  private[graft] def readBucketing(s: SparkSession, metaPath: String): Option[Bucketing] =
+    Option.when(pathExists(s, metaPath))(bucketingOf(readJson(s, metaPath), metaPath))
+
   /** Anti-join keys per schema object, derived from the PARSED schema (not
     * the static plan registry — a hand-authored dv_schema.json must load
     * with its own keys): hash key for hubs/links, (hash key, hash diff)
@@ -94,21 +106,7 @@ object DvLoader {
       .orElse(schema.links.find(l => s"link_${l.name}" == obj).map(l => Seq(l.hkName)))
       .getOrElse(sys.error(s"object $obj not in the repo schema"))
 
-  /** Bucketed-aware stored-side read: the catalog table (re-registered if
-    * this session lacks the entry) when the repo is bucketed — the table
-    * read carries the bucket spec, so the anti-join needs no Exchange on
-    * this side — or the parquet path for a plain repo.
-    */
-  private def storedSide(s: SparkSession, repoDir: String, schema: DvSchemaRef,
-                         obj: String): DataFrame =
-    schema.bucketing match {
-      case Some(b) => storedObject(s, repoDir, obj, schemaKeys(schema, obj), b)
-      case None => s.read.parquet(s"$repoDir/$obj")
-    }
-
-  /** Generic bucketed-object READ — the storedSide discipline with
-    * explicit keys and bucket spec, for repo objects that are not vault
-    * schema objects (the IVF index repo): through the session catalog
+  /** Generic bucketed-object READ: through the session catalog
     * (re-registered if this session lacks the entry) so the table read
     * carries the bucket spec and keyed anti-joins need no Exchange on
     * this side.
@@ -120,19 +118,6 @@ object DvLoader {
       registerBucketed(s, repoDir, obj, keys, b)
     s.table(table)
   }
-
-  /** Bucketed-aware append: through the catalog under the same bucket spec
-    * (creating the external table over the repo path on the first write)
-    * so the layout survives every load — appending plain parquet files
-    * into a bucketed table's directory would corrupt its layout. Plain
-    * repos append parquet directly.
-    */
-  private def appendSide(s: SparkSession, repoDir: String, schema: DvSchemaRef,
-                         obj: String, novel: DataFrame): Unit =
-    schema.bucketing match {
-      case Some(b) => appendObject(s, repoDir, obj, schemaKeys(schema, obj), b, novel)
-      case None => novel.write.mode("append").parquet(s"$repoDir/$obj")
-    }
 
   /** Generic bucketed-object APPEND (see [[storedObject]]): through the
     * catalog under the object's bucket spec, creating the external table
@@ -154,36 +139,121 @@ object DvLoader {
        else w.option("path", s"$repoDir/$obj")).saveAsTable(table)
     }
 
+  /** The insert-only load step shared by every vault object, sink and
+    * index (dv_loader.rs:166-199, 325-357): the `rows` whose `keys` are
+    * absent from the object stored at `path` — the unwritten plan
+    * [[appendNovel]] appends, exposed for the plan sweeps.
+    *
+    * ONLY a missing path means "nothing stored yet" (full insert). A
+    * stored object that cannot be read with its keys (schema drift, a
+    * renamed hash-key column) fails the load loudly, or every batch would
+    * silently degrade to a full duplicate insert. A bucketed object's
+    * stored side reads through the catalog, so the anti-join needs no
+    * Exchange on that side.
+    */
+  private[graft] def novelRows(s: SparkSession, rows: DataFrame, path: String,
+                               keys: Seq[String], bucketing: Option[Bucketing]): DataFrame =
+    if (!pathExists(s, path)) rows
+    else {
+      val stored = bucketing match {
+        case Some(b) =>
+          val (dir, obj) = splitObject(path)
+          storedObject(s, dir, obj, keys, b)
+        case None => s.read.parquet(path)
+      }
+      rows.join(stored.select(keys.head, keys.tail: _*), keys, "left_anti")
+    }
+
+  /** Append [[novelRows]] to `path` and return how many landed. A bucketed
+    * object appends through the catalog under its bucket spec and writer
+    * lease (a plain parquet append would corrupt its layout); an
+    * unbucketed one appends plain parquet. The count rides on the write
+    * pass via an Observation: one action, no cache.
+    */
+  private[graft] def appendNovel(s: SparkSession, rows: DataFrame, path: String,
+                                 keys: Seq[String], bucketing: Option[Bucketing]): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    val novel = novelRows(s, rows, path, keys, bucketing).observe(obs, count(lit(1)).as("n"))
+    bucketing match {
+      case Some(b) =>
+        val (dir, obj) = splitObject(path)
+        appendObject(s, dir, obj, keys, b, novel)
+      case None => novel.write.mode("append").parquet(path)
+    }
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  /** `<repoDir>/<obj>` -> (repoDir, obj), the catalog-object coordinates. */
+  private def splitObject(path: String): (String, String) = {
+    val i = path.lastIndexOf('/')
+    (path.take(i), path.drop(i + 1))
+  }
+
+  /** One schema object's load: its name, anti-join keys and shaped rows. */
+  private final case class ObjectLoad(obj: String, keys: Seq[String], rows: DataFrame)
+
+  /** The shaped rows of every schema object `tableName` feeds, from one
+    * slice of that table (a micro-batch, or the whole source table).
+    * `ordered = false`: these frames feed anti-joins and appends, never
+    * an ordered consumer (r14, guide §2.4).
+    *
+    * Standing erasure suppression (r13 ADVICE — erased data must not be
+    * resurrectable): a SENSITIVE satellite's rows anti-join the erasure
+    * processed log (obj, hk), so a replayed/redelivered batch that still
+    * carries a purged victim's source rows appends nothing for that key,
+    * ever. Request-scale right side → broadcast; hubs, links and ordinary
+    * sats are untouched: erasure rewrites descriptors, never the
+    * pseudonymous skeleton.
+    */
+  private def tableLoads(s: SparkSession, schema: DvSchemaRef, batch: DataFrame,
+                         tableName: String, loadTs: String,
+                         suppressDir: Option[String]): Seq[ObjectLoad] = {
+    def suppress(obj: String, hkName: String, rows: DataFrame): DataFrame =
+      suppressDir.filter(ed => obj.endsWith("_sensitive") && pathExists(s, s"$ed/processed"))
+        .map { ed =>
+          rows.join(broadcast(s.read.parquet(s"$ed/processed")
+              .filter(col("obj") === obj).select(col("hk").as(hkName)).distinct()),
+            Seq(hkName), "left_anti")
+        }.getOrElse(rows)
+    schema.hubs.filter(_.sourceTable == tableName).map(h =>
+      ObjectLoad(s"hub_${h.name}", Seq(h.hkName),
+        DvBuild.hubFrom(s, batch, h, loadTs, ordered = false))) ++
+    schema.sats.filter(_.sourceTable == tableName).map(t =>
+      ObjectLoad(s"sat_${t.name}", Seq(t.hkName, t.hdName),
+        suppress(s"sat_${t.name}", t.hkName, DvBuild.satFrom(batch, t, loadTs, ordered = false)))) ++
+    schema.links.filter(_.sourceTable == tableName).map(l =>
+      ObjectLoad(s"link_${l.name}", Seq(l.hkName),
+        DvBuild.linkFrom(batch, l, loadTs, ordered = false)))
+  }
+
+  /** Append every load concurrently (distinct objects, shared read-only
+    * batch — the scheduler interleaves their jobs, like DvGo.go's builds).
+    * Returns (object, n_appended).
+    */
+  private def appendLoads(s: SparkSession, repoDir: String, schema: DvSchemaRef,
+                          loads: Seq[ObjectLoad]): Seq[(String, Long)] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.sequence(loads.map(l => Future(
+      l.obj -> appendNovel(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.bucketing)))),
+      Duration.Inf)
+  }
+
+  /** One incremental load pass over every schema object in `scope`: each
+    * source table that feeds an in-scope object loads through the same
+    * per-object plans as a micro-batch. Returns (object, n_appended).
+    */
   def incrementalLoad(s: SparkSession, dir: String, repoDir: String,
                       loadTs: String = DvDefaults.LoadTs,
                       scope: String => Boolean = _ => true): Seq[(String, Long)] = {
     val schema = readSchema(s, repoDir)
-    // count-of-appended rides on the write pass via an Observation — one
-    // action per object, no cache (the same pattern as DvGo.go).
-    def append(novel: DataFrame, obj: String): (String, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"load_${obj}_${System.nanoTime()}")
-      appendSide(s, repoDir, schema, obj, novel.observe(obs, count(lit(1)).as("n")))
-      obj -> obs.get("n").asInstanceOf[Long]
-    }
-    def stored(obj: String): DataFrame = storedSide(s, repoDir, schema, obj)
-    // ordered = false throughout: the batch frames feed anti-joins and
-    // appends, never an ordered consumer (r14, guide §2.4)
-    val hubLoads = schema.hubs.filter(h => scope(s"hub_${h.name}")).map { h =>
-      val batch = DvBuild.hub(s, dir, h, loadTs, ordered = false)
-      append(DvBuild.hubIncrement(stored(s"hub_${h.name}").select(h.hkName), batch, h.hkName),
-        s"hub_${h.name}")
-    }
-    val satLoads = schema.sats.filter(t => scope(s"sat_${t.name}")).map { t =>
-      val batch = DvBuild.sat(s, dir, t, loadTs, ordered = false)
-      append(DvBuild.satIncrement(stored(s"sat_${t.name}").select(t.hkName, t.hdName),
-        batch, t.hkName, t.hdName), s"sat_${t.name}")
-    }
-    val linkLoads = schema.links.filter(l => scope(s"link_${l.name}")).map { l =>
-      val batch = DvBuild.link(s, dir, l, loadTs, ordered = false)
-      append(DvBuild.hubIncrement(stored(s"link_${l.name}").select(l.hkName), batch, l.hkName),
-        s"link_${l.name}")
-    }
-    hubLoads ++ satLoads ++ linkLoads
+    val fed = (schema.hubs.map(h => s"hub_${h.name}" -> h.sourceTable) ++
+      schema.sats.map(t => s"sat_${t.name}" -> t.sourceTable) ++
+      schema.links.map(l => s"link_${l.name}" -> l.sourceTable))
+      .collect { case (obj, table) if scope(obj) => table }.distinct
+    fed.flatMap(t => appendLoads(s, repoDir, schema,
+      tableLoads(s, schema, graft.Tables.load(s, dir, t), t, loadTs, None).filter(l => scope(l.obj))))
   }
 
   /** Streaming continuous load — the reference's background-worker refresh
@@ -197,16 +267,7 @@ object DvLoader {
                            repoDir: String, loadTs: String,
                            suppressDir: Option[String] = None): Unit = {
     val schema = readSchema(s, repoDir)
-    // The per-object loads are independent (distinct directories/catalog
-    // tables, shared read-only batch) — submit them concurrently like
-    // DvGo.go's builds; the scheduler interleaves their jobs.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val loads = streamTableLoadPlans(s, batch, tableName, repoDir, loadTs, suppressDir).map {
-      case (obj, novel) => () => appendSide(s, repoDir, schema, obj, novel)
-    }
-    Await.result(Future.sequence(loads.map(f => Future(f()))), Duration.Inf)
+    appendLoads(s, repoDir, schema, tableLoads(s, schema, batch, tableName, loadTs, suppressDir))
   }
 
   /** The per-object micro-batch PLANS of the schema-driven streaming load
@@ -218,56 +279,8 @@ object DvLoader {
                            repoDir: String, loadTs: String,
                            suppressDir: Option[String] = None): Seq[(String, DataFrame)] = {
     val schema = readSchema(s, repoDir)
-    // Standing erasure suppression (r13 ADVICE — erased data must not be
-    // resurrectable): novel rows for a SENSITIVE satellite anti-join the
-    // erasure processed log (obj, hk) — a replayed/redelivered batch that
-    // still carries a purged victim's source rows appends nothing for
-    // that key, ever. Request-scale right side → broadcast; non-sensitive
-    // objects (hubs, links, ordinary sats) are untouched: erasure rewrites
-    // descriptors, never the pseudonymous skeleton.
-    def suppress(obj: String, hkName: String, novel: DataFrame): DataFrame =
-      suppressDir.filter(ed => obj.endsWith("_sensitive") && pathExists(s, s"$ed/processed"))
-        .map { ed =>
-          novel.join(
-            org.apache.spark.sql.functions.broadcast(
-              s.read.parquet(s"$ed/processed")
-                .filter(org.apache.spark.sql.functions.col("obj") === obj)
-                .select(org.apache.spark.sql.functions.col("hk").as(hkName)).distinct()),
-            Seq(hkName), "left_anti")
-        }.getOrElse(novel)
-    // First micro-batch of a fresh repo: nothing stored yet -> full insert.
-    // ONLY a missing path means "fresh" — any other analysis failure
-    // (schema drift, renamed hash-key column) must fail the batch loudly,
-    // or every micro-batch would silently degrade to a full duplicate
-    // insert. Reads and appends route through the bucketed-aware helpers:
-    // a streaming load into a bucketed repo keeps the bucket layout (an
-    // unrouted plain-parquet append would corrupt it for every later read).
-    def novelAgainst(obj: String, keys: Seq[String], b: DataFrame): DataFrame =
-      try {
-        b.join(storedSide(s, repoDir, schema, obj).select(keys.head, keys.tail: _*),
-          keys, "left_anti")
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException if isPathMissing(e) => b
-      }
-    // ordered = false: micro-batch frames feed anti-joins and appends; on
-    // the FIRST batch of a fresh repo the frame is appended raw, where the
-    // builders' trailing sort would actually execute (r14, guide §2.4)
-    schema.hubs.filter(_.sourceTable == tableName).map { h =>
-      s"hub_${h.name}" ->
-        novelAgainst(s"hub_${h.name}", Seq(h.hkName),
-          DvBuild.hubFrom(s, batch, h, loadTs, ordered = false))
-    } ++
-    schema.sats.filter(_.sourceTable == tableName).map { t =>
-      s"sat_${t.name}" ->
-        suppress(s"sat_${t.name}", t.hkName,
-          novelAgainst(s"sat_${t.name}", Seq(t.hkName, t.hdName),
-            DvBuild.satFrom(batch, t, loadTs, ordered = false)))
-    } ++
-    schema.links.filter(_.sourceTable == tableName).map { l =>
-      s"link_${l.name}" ->
-        novelAgainst(s"link_${l.name}", Seq(l.hkName),
-          DvBuild.linkFrom(batch, l, loadTs, ordered = false))
-    }
+    tableLoads(s, schema, batch, tableName, loadTs, suppressDir).map(l =>
+      l.obj -> novelRows(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.bucketing))
   }
 
   /** Re-register a bucketed vault table over its existing repo files —
@@ -287,18 +300,6 @@ object DvLoader {
     s.sql(s"""CREATE TABLE IF NOT EXISTS ${b.tablePrefix}$obj ($ddlSchema) USING parquet
              |CLUSTERED BY ($keyList) SORTED BY ($keyList) INTO ${b.buckets} BUCKETS
              |LOCATION '$loc'""".stripMargin)
-  }
-
-  /** True only for "the stored object does not exist yet" failures.
-    * Primary match is the stable error condition (PATH_NOT_FOUND) rather
-    * than message text — a Spark upgrade rewording the message must not
-    * turn every fresh repo's first micro-batch into a crash. The message
-    * check stays as a fallback for exceptions raised without a condition.
-    */
-  private[graft] def isPathMissing(e: org.apache.spark.sql.AnalysisException): Boolean = {
-    val cond = Option(e.getCondition).getOrElse("")
-    val m = Option(e.getMessage).getOrElse("")
-    cond == "PATH_NOT_FOUND" || m.contains("PATH_NOT_FOUND") || m.contains("Path does not exist")
   }
 
   /** Existence probe through the session's Hadoop FS (works for any
@@ -340,11 +341,9 @@ object DvLoader {
     val scope = Set("hub_customer", "sat_customer")
     val counts = incrementalLoad(s, dir, repo, scope = scope)
     // counts are materialized; the seeded repo is no longer needed
-    deleteRecursively(java.nio.file.Paths.get(repo))
+    deletePath(java.nio.file.Paths.get(repo))
     counts.toDF("object", "n_new").orderBy("object")
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = deletePath(p)
 
   /** Depth-first recursive delete; the Files.walk stream is closed (it
     * holds open directory descriptors until then).

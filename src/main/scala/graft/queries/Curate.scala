@@ -415,15 +415,7 @@ object Curate extends QueryModule {
 
   private def corpusPackWrite(s: SparkSession, dir: String): DataFrame = {
     val path = packedSeqPath(s, dir)
-    val built = packedSeqBuild(s, dir)
-    val fresh = try {
-      val existing = s.read.parquet(path).select("seq_id")
-      built.join(existing, Seq("seq_id"), "left_anti")
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if graft.dv.DvLoader.isPathMissing(e) => built
-    }
-    fresh.write.mode("append").parquet(path)
+    graft.dv.DvLoader.appendNovel(s, packedSeqBuild(s, dir), path, Seq("seq_id"), None)
     s.read.parquet(path)
       .select(col("seq_id"), col("n_docs"), col("n_tokens"),
         sha2(concat_ws(" ", col("tokens")), 256).as("seq_sha"))

@@ -37,9 +37,9 @@ object Docs {
   * session (they ARE the session's materialized derived corpus) and are
   * dropped automatically when the session's SparkContext ends. The
   * listener fires on CONTEXT stop, not session close: a process cycling
-  * many SparkSessions over one long-lived context still accumulates
-  * per-session entries and should call clear() between sessions — only
-  * the common one-context-per-process lifecycle is fully automatic.
+  * many SparkSessions over one long-lived context keeps every session's
+  * entries until that context stops — only the common
+  * one-context-per-process lifecycle is fully automatic.
   */
 private[graft] object SessionCache {
   import org.apache.spark.sql.SparkSession
@@ -172,19 +172,5 @@ private[graft] object SessionCache {
   def onSessionEnd(s: SparkSession, tag: String)(f: => Unit): Unit = {
     hook(s)
     cleanups.putIfAbsent((s, tag), () => f)
-  }
-
-  /** Manual eviction for the many-sessions-per-context lifecycle: drops the
-    * cached frames AND runs every registered companion cleanup (e.g. the
-    * IVF centroid memo), so nothing session-pinned survives.
-    */
-  def clear(): Unit = {
-    entries.values.foreach(_.unpersist())
-    entries.clear()
-    degradedEntries.values.foreach(_._1.unpersist())
-    degradedEntries.clear()
-    scalars.clear()
-    buildTimes.clear()
-    cleanups.keys.toSeq.foreach(k => cleanups.remove(k).foreach(f => f()))
   }
 }

@@ -969,31 +969,6 @@ object Similarity extends QueryModule {
     cents
   }
 
-  /** [[trainCentroidsFrom]] with the per-iteration dim sums as ONE narrow
-    * (cell, pos)-keyed aggregate (argmax projected below the generator, the
-    * ivfDimAgg discipline) instead of a 64-column-wide agg — the driver
-    * re-folds the K×Dim rows. Same Long sums in a different grouping, so
-    * the trained centroids are bit-identical; exists so the optimization
-    * probe can compare the two shapes.
-    */
-  private[graft] def trainCentroidsFromNarrow(vecs: DataFrame): Seq[(Long, Seq[Long])] = {
-    var cents: Seq[(Long, Seq[Long])] = vecs.select(col("vec_id"), col("q"))
-      .filter(col("vec_id") < IvfK)
-      .orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq
-    for (_ <- 1 to IvfIters) {
-      val rows = vecs.select(expr(bestCellExpr(cents, "q")).as("cell"), col("q"))
-        .select(col("cell"), posexplode(col("q")))
-        .groupBy("cell", "pos").agg(sum("col").as("s"))
-        .collect()
-      cents = rows.groupBy(_.getLong(0)).map { case (cell, rs) =>
-        val byPos = rs.map(r => r.getInt(1) -> r.getLong(2)).toMap
-        (cell, (0 until Dim).map(byPos).toSeq)
-      }.toSeq.sortBy(_._1)
-    }
-    cents
-  }
-
   private def annIvf(s: SparkSession, dir: String): DataFrame =
     annIvfWith(s, dir, NProbe, col("vec_id") % ivfQueryMod(s, dir) === 0)
 

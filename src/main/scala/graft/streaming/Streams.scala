@@ -127,24 +127,18 @@ object Streams {
     */
   private[graft] val HubLoadKeys = Seq("hub_hk")
 
-  def hubLoadBatch(spark: SparkSession, batch: DataFrame, keyCol: String, hubPath: String, loadTs: String): Unit = {
-    graft.dv.SinkRepo.ensure(spark, hubPath)
-    graft.dv.SinkRepo.append(spark, hubPath, HubLoadKeys,
-      hubLoadPlan(spark, batch, keyCol, hubPath, loadTs))
-  }
+  def hubLoadBatch(spark: SparkSession, batch: DataFrame, keyCol: String, hubPath: String, loadTs: String): Unit =
+    graft.dv.SinkRepo.load(spark, hubPath, HubLoadKeys, hubRows(batch, keyCol, loadTs))
 
   /** The micro-batch PLAN of #40, exposed unwritten so the streaming plan
     * sweep (r10 verdict #8) audits the exact frame every batch executes.
     */
-  def hubLoadPlan(spark: SparkSession, batch: DataFrame, keyCol: String, hubPath: String, loadTs: String): DataFrame = {
-    val keyed = batch.select(canonByType(batch, keyCol).as("bk")).distinct()
+  def hubLoadPlan(spark: SparkSession, batch: DataFrame, keyCol: String, hubPath: String, loadTs: String): DataFrame =
+    graft.dv.SinkRepo.novel(spark, hubPath, HubLoadKeys, hubRows(batch, keyCol, loadTs))
+
+  private def hubRows(batch: DataFrame, keyCol: String, loadTs: String): DataFrame =
+    batch.select(canonByType(batch, keyCol).as("bk")).distinct()
       .select(dvHash(Seq(col("bk"))).as("hub_hk"), lit(loadTs).as("load_ts"), col("bk"))
-    if (graft.dv.SinkRepo.bucketing(spark, hubPath).isDefined &&
-      graft.dv.SinkRepo.objExists(spark, hubPath))
-      keyed.join(graft.dv.SinkRepo.stored(spark, hubPath, HubLoadKeys)
-        .select("hub_hk"), HubLoadKeys, "left_anti")
-    else keyed // fresh sink: full insert (the streamTableLoadPlans contract)
-  }
 
   /** #41: watermarked stream-stream join — each purchase enriched with
     * ALL of the same user's prior signup-side events within 1 hour (a
@@ -173,29 +167,24 @@ object Streams {
   private[graft] val SatLoadKeys = Seq("hub_hk", "sat_hd")
 
   def satLoadBatch(spark: SparkSession, batch: DataFrame, keyCol: String, descCols: Seq[String],
-                   satPath: String, loadTs: String): Unit = {
-    graft.dv.SinkRepo.ensure(spark, satPath)
-    graft.dv.SinkRepo.append(spark, satPath, SatLoadKeys,
-      satLoadPlan(spark, batch, keyCol, descCols, satPath, loadTs))
-  }
+                   satPath: String, loadTs: String): Unit =
+    graft.dv.SinkRepo.load(spark, satPath, SatLoadKeys, satRows(batch, keyCol, descCols, loadTs))
 
   /** The micro-batch PLAN of #42 (see [[hubLoadPlan]] — same r15 SinkRepo
     * stored side, keyed (hub_hk, sat_hd)).
     */
   def satLoadPlan(spark: SparkSession, batch: DataFrame, keyCol: String, descCols: Seq[String],
-                  satPath: String, loadTs: String): DataFrame = {
-    val keyed = batch
+                  satPath: String, loadTs: String): DataFrame =
+    graft.dv.SinkRepo.novel(spark, satPath, SatLoadKeys, satRows(batch, keyCol, descCols, loadTs))
+
+  private def satRows(batch: DataFrame, keyCol: String, descCols: Seq[String],
+                      loadTs: String): DataFrame =
+    batch
       .select((canonByType(batch, keyCol).as("bk") +: descCols.map(col)): _*)
       .distinct()
       .select((dvHash(Seq(col("bk"))).as("hub_hk") +:
         dvHash(descCols.map(c => canonByType(batch, c))).as("sat_hd") +:
         lit(loadTs).as("load_ts") +: col("bk") +: descCols.map(col)): _*)
-    if (graft.dv.SinkRepo.bucketing(spark, satPath).isDefined &&
-      graft.dv.SinkRepo.objExists(spark, satPath))
-      keyed.join(graft.dv.SinkRepo.stored(spark, satPath, SatLoadKeys)
-        .select("hub_hk", "sat_hd"), SatLoadKeys, "left_anti")
-    else keyed
-  }
 
   def satLoadSink(events: DataFrame, keyCol: String, descCols: Seq[String],
                   satPath: String, checkpoint: String) =
@@ -215,29 +204,22 @@ object Streams {
   private[graft] val LinkLoadKeys = Seq("link_hk")
 
   def linkLoadBatch(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
-                    linkPath: String, loadTs: String): Unit = {
-    graft.dv.SinkRepo.ensure(spark, linkPath)
-    graft.dv.SinkRepo.append(spark, linkPath, LinkLoadKeys,
-      linkLoadPlan(spark, batch, keyCols, linkPath, loadTs))
-  }
+                    linkPath: String, loadTs: String): Unit =
+    graft.dv.SinkRepo.load(spark, linkPath, LinkLoadKeys, linkRows(batch, keyCols, loadTs))
 
   /** The micro-batch PLAN of #45 (see [[hubLoadPlan]] — same r15 SinkRepo
     * stored side, keyed link_hk).
     */
   def linkLoadPlan(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
-                   linkPath: String, loadTs: String): DataFrame = {
-    val bks = keyCols.map(c => canonByType(batch, c).as(s"${c}_bk"))
-    val keyed = batch.select(bks: _*).distinct()
+                   linkPath: String, loadTs: String): DataFrame =
+    graft.dv.SinkRepo.novel(spark, linkPath, LinkLoadKeys, linkRows(batch, keyCols, loadTs))
+
+  private def linkRows(batch: DataFrame, keyCols: Seq[String], loadTs: String): DataFrame =
+    batch.select(keyCols.map(c => canonByType(batch, c).as(s"${c}_bk")): _*).distinct()
       .select((dvHash(keyCols.map(c => col(s"${c}_bk"))).as("link_hk") +:
         lit(loadTs).as("load_ts") +:
         keyCols.map(c => dvHash(Seq(col(s"${c}_bk"))).as(s"hub_${c}_hk"))) ++
         keyCols.map(c => col(s"${c}_bk")): _*)
-    if (graft.dv.SinkRepo.bucketing(spark, linkPath).isDefined &&
-      graft.dv.SinkRepo.objExists(spark, linkPath))
-      keyed.join(graft.dv.SinkRepo.stored(spark, linkPath, LinkLoadKeys)
-        .select("link_hk"), LinkLoadKeys, "left_anti")
-    else keyed
-  }
 
   /** Wire #45 onto a streaming DataFrame via foreachBatch. */
   def linkLoadSink(events: DataFrame, keyCols: Seq[String], linkPath: String, checkpoint: String) =
@@ -346,21 +328,12 @@ object Streams {
     */
   private[graft] val NearDupKeys = Seq("in_doc", "corpus_doc")
 
-  def nearDupBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit = {
-    graft.dv.SinkRepo.ensure(spark, outPath)
-    graft.dv.SinkRepo.append(spark, outPath, NearDupKeys,
-      nearDupSinkPlan(spark, batch, outPath))
-  }
+  def nearDupBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit =
+    graft.dv.SinkRepo.load(spark, outPath, NearDupKeys, batch.dropDuplicates(NearDupKeys))
 
   /** The sink-side micro-batch PLAN of #49 (see [[hubLoadPlan]]). */
-  def nearDupSinkPlan(spark: SparkSession, batch: DataFrame, outPath: String): DataFrame = {
-    val pairs = batch.dropDuplicates("in_doc", "corpus_doc")
-    if (graft.dv.SinkRepo.bucketing(spark, outPath).isDefined &&
-      graft.dv.SinkRepo.objExists(spark, outPath))
-      pairs.join(graft.dv.SinkRepo.stored(spark, outPath, NearDupKeys)
-        .select("in_doc", "corpus_doc"), NearDupKeys, "left_anti")
-    else pairs // fresh sink: full insert (the streamTableLoadPlans contract)
-  }
+  def nearDupSinkPlan(spark: SparkSession, batch: DataFrame, outPath: String): DataFrame =
+    graft.dv.SinkRepo.novel(spark, outPath, NearDupKeys, batch.dropDuplicates(NearDupKeys))
 
   def nearDupSink(docs: DataFrame, corpusBands: DataFrame, corpusShingles: DataFrame,
                   outPath: String, checkpoint: String) =
@@ -385,15 +358,15 @@ object Streams {
   private[graft] val MartRefreshKeys = Seq("hub_order_hk")
 
   def martRefreshBatch(spark: SparkSession, batch: DataFrame, dims: DataFrame,
-                       martPath: String, loadTs: String): Unit = {
-    graft.dv.SinkRepo.ensure(spark, martPath)
-    graft.dv.SinkRepo.append(spark, martPath, MartRefreshKeys,
-      martRefreshPlan(spark, batch, dims, martPath, loadTs))
-  }
+                       martPath: String, loadTs: String): Unit =
+    graft.dv.SinkRepo.load(spark, martPath, MartRefreshKeys, martRows(batch, dims, loadTs))
 
   /** The micro-batch PLAN of #47 (see [[hubLoadPlan]]). */
   def martRefreshPlan(spark: SparkSession, batch: DataFrame, dims: DataFrame,
-                      martPath: String, loadTs: String): DataFrame = {
+                      martPath: String, loadTs: String): DataFrame =
+    graft.dv.SinkRepo.novel(spark, martPath, MartRefreshKeys, martRows(batch, dims, loadTs))
+
+  private def martRows(batch: DataFrame, dims: DataFrame, loadTs: String): DataFrame = {
     // Within-batch dedup must be BY KEY, not by full row: one micro-batch
     // can carry the same order twice with differing attributes (an update
     // delivered alongside the insert) — keep one deterministic
@@ -402,7 +375,7 @@ object Streams {
     val perKey = org.apache.spark.sql.expressions.Window
       .partitionBy("o_orderkey_bk")
       .orderBy("o_orderstatus", "o_totalprice", "o_custkey_bk")
-    val rows = batch
+    batch
       .select(col("o_orderkey").cast("string").as("o_orderkey_bk"),
         col("o_custkey").cast("string").as("o_custkey_bk"),
         col("o_orderstatus"), col("o_totalprice"))
@@ -417,11 +390,6 @@ object Streams {
         col("o_orderkey_bk"), col("o_custkey_bk"),
         col("o_orderstatus"), col("o_totalprice"),
         coalesce(col("region"), lit("UNKNOWN")).as("region"))
-    if (graft.dv.SinkRepo.bucketing(spark, martPath).isDefined &&
-      graft.dv.SinkRepo.objExists(spark, martPath))
-      rows.join(graft.dv.SinkRepo.stored(spark, martPath, MartRefreshKeys)
-        .select("hub_order_hk"), MartRefreshKeys, "left_anti")
-    else rows
   }
 
   /** The customer→region dimension side for #47 (dimension-scale by
@@ -834,20 +802,13 @@ object Streams {
     */
   private[graft] val SemanticProdKeys = Seq("in_vec", "corpus_vec")
 
-  def semanticProdSinkPlan(spark: SparkSession, batch: DataFrame, outPath: String): DataFrame = {
-    val pairs = batch.dropDuplicates("in_vec", "corpus_vec")
-    if (graft.dv.SinkRepo.bucketing(spark, outPath).isDefined &&
-      graft.dv.SinkRepo.objExists(spark, outPath))
-      pairs.join(graft.dv.SinkRepo.stored(spark, outPath, SemanticProdKeys)
-        .select("in_vec", "corpus_vec"), SemanticProdKeys, "left_anti")
-    else pairs
-  }
+  def semanticProdSinkPlan(spark: SparkSession, batch: DataFrame, outPath: String): DataFrame =
+    graft.dv.SinkRepo.novel(spark, outPath, SemanticProdKeys,
+      batch.dropDuplicates(SemanticProdKeys))
 
-  def semanticProdBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit = {
-    graft.dv.SinkRepo.ensure(spark, outPath)
-    graft.dv.SinkRepo.append(spark, outPath, SemanticProdKeys,
-      semanticProdSinkPlan(spark, batch, outPath))
-  }
+  def semanticProdBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit =
+    graft.dv.SinkRepo.load(spark, outPath, SemanticProdKeys,
+      batch.dropDuplicates(SemanticProdKeys))
 
   def semanticProdSink(vecs: DataFrame, corpusBands: DataFrame, corpusVecs: DataFrame,
                        planes: Int, outPath: String, checkpoint: String) =
@@ -866,9 +827,9 @@ object Streams {
     *   1. each arriving vector is quantized and assigned to the
     *      STORED-trained coarse centroids SCAN-LOCALLY (the literal-argmax
     *      codegen projection — no join, no shuffle, no retrain), and
-    *   2. only never-seen vec_ids append to the cell-assignment index
-    *      (the hubLoadPlan anti-join discipline applied to the index, so
-    *      a re-delivered batch appends nothing), while
+    *   2. only never-seen vec_ids append to the repo's bucketed
+    *      cell-assignment index (IvfIndexRepo.appendAssigned, so a
+    *      re-delivered batch appends nothing), while
     *   3. the batch's per-cell drift evidence — the exact-integer
     *      displacement report of the batch kernel — lands on a drift log
     *      keyed by batch_id, joined against a PRECOMPUTED index-scale
@@ -878,29 +839,13 @@ object Streams {
     *      batch reports its drift again — honest monitoring), while the
     *      INDEX stays exactly-once via the anti-join.
     *
-    * At 100 TB the index parquet is a bucketed table like the vault repos
-    * and the stored agg refreshes with each retrain; the reference
-    * analogue is the bgw refresh loop's incremental discipline
-    * (extension/src/controller/dv_loader.rs:5-66).
-    */
-  def ivfAssignPlan(spark: SparkSession, batch: DataFrame,
-                    cents: Seq[(Long, Seq[Long])], indexPath: String,
-                    loadTs: String): DataFrame = {
-    import graft.queries.Similarity
-    val assigned = Similarity.assignCells(
-        Similarity.withQuantized(batch.select(col("vec_id"), col("embedding"))), cents)
-      .select(col("vec_id"), col("cell"), lit(loadTs).as("load_ts"))
-    try {
-      val existing = spark.read.parquet(indexPath).select("vec_id")
-      assigned.join(existing, Seq("vec_id"), "left_anti")
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException if graft.dv.DvLoader.isPathMissing(e) => assigned
-    }
-  }
-
-  /** The per-batch drift report of #56 (see [[ivfAssignPlan]]): the batch
-    * side folds through the same ivfDimAgg the batch op uses, against the
-    * caller's precomputed stored-side aggregate.
+    * The index and the stored agg live in a graft.dv.IvfIndexRepo, and
+    * the stored agg refreshes with each retrain; the reference analogue
+    * is the bgw refresh loop's incremental discipline
+    * (extension/src/controller/dv_loader.rs:5-66). [[ivfIncrRepoSink]]
+    * wires it; this is its per-batch drift report: the batch side folds
+    * through the same ivfDimAgg the batch op uses, against the caller's
+    * precomputed stored-side aggregate.
     */
   def ivfDriftPlan(batch: DataFrame, cents: Seq[(Long, Seq[Long])],
                    storedAgg: DataFrame): DataFrame = {
@@ -971,18 +916,6 @@ object Streams {
       }
   }
 
-  /** Wire #56 onto a streaming vector DataFrame via foreachBatch.
-    *
-    * BOTH appends are idempotent under same-batch_id checkpoint replay
-    * (r12 ADVICE): the index anti-joins on vec_id (never-seen vectors
-    * only), and the drift log anti-joins on batch_id — a crash between
-    * the two appends and the stream commit re-runs the batch but appends
-    * nothing twice, so the spec-pinned per-cell arrival-sum parity holds
-    * across replays. "Honest monitoring" (drift recomputed per DELIVERED
-    * batch) still applies to upstream re-delivery, which arrives under a
-    * NEW batch_id. The seen-batch_ids side is metadata-scale (one id per
-    * micro-batch ever run) — AQE broadcasts the anti-join.
-    */
   /** #58: streaming packed-sequence writer — the continuous form of
     * corpus_pack_write (§2.C 36i''''''), KEYED PER SOURCE: each source's
     * token stream packs independently into fixed SeqLen-token windows
@@ -1065,20 +998,11 @@ object Streams {
     */
   private[graft] val PackKeys = Seq("source", "seq_id")
 
-  def packSinkPlan(spark: SparkSession, batch: DataFrame, outPath: String): DataFrame = {
-    val rows = batch.dropDuplicates("source", "seq_id")
-    if (graft.dv.SinkRepo.bucketing(spark, outPath).isDefined &&
-      graft.dv.SinkRepo.objExists(spark, outPath))
-      rows.join(graft.dv.SinkRepo.stored(spark, outPath, PackKeys)
-        .select("source", "seq_id"), PackKeys, "left_anti")
-    else rows
-  }
+  def packSinkPlan(spark: SparkSession, batch: DataFrame, outPath: String): DataFrame =
+    graft.dv.SinkRepo.novel(spark, outPath, PackKeys, batch.dropDuplicates(PackKeys))
 
-  def packSinkBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit = {
-    graft.dv.SinkRepo.ensure(spark, outPath)
-    graft.dv.SinkRepo.append(spark, outPath, PackKeys,
-      packSinkPlan(spark, batch, outPath))
-  }
+  def packSinkBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit =
+    graft.dv.SinkRepo.load(spark, outPath, PackKeys, batch.dropDuplicates(PackKeys))
 
   def packWriteSink(docs: DataFrame, outPath: String, checkpoint: String) =
     packWriteStream(docs).toDF()
@@ -1088,17 +1012,26 @@ object Streams {
         packSinkBatch(b.sparkSession, b, outPath)
       }
 
-  /** [[ivfIncrSink]] against the VAULT-DISCIPLINED index repo (r12 verdict
-    * #5): centroids and the bucket spec come from the repo's own metadata
+  /** Wire #56 onto a streaming vector DataFrame via foreachBatch, against
+    * the VAULT-DISCIPLINED index repo (r12 verdict #5): centroids and the
+    * bucket spec come from the repo's own metadata
     * (graft.dv.IvfIndexRepo), the exactly-once append goes THROUGH the
-    * session catalog (storedObject/appendObject — never plain parquet into
-    * a bucketed layout), so batch loads (IvfIndexRepo.appendBatch) and
-    * this stream maintain THE SAME index, and
-    * DvMaintenance.compactBucketedObject covers it like any vault object.
-    * Per micro-batch the K-scale centroid read refreshes from the repo —
-    * a retrain that rewrites `ivf_centroids` flows into subsequent
-    * batches without restarting the stream. Drift evidence keeps the
-    * batch_id-keyed idempotent log (same as ivfIncrSink).
+    * session catalog (never plain parquet into a bucketed layout), so
+    * batch loads (IvfIndexRepo.appendBatch) and this stream maintain THE
+    * SAME index, and DvMaintenance.compactBucketedObject covers it like
+    * any vault object. Per micro-batch the K-scale centroid read
+    * refreshes from the repo — a retrain that rewrites `ivf_centroids`
+    * flows into subsequent batches without restarting the stream.
+    *
+    * BOTH appends are idempotent under same-batch_id checkpoint replay
+    * (r12 ADVICE): the index anti-joins on vec_id (never-seen vectors
+    * only), and the drift log anti-joins on batch_id — a crash between
+    * the two appends and the stream commit re-runs the batch but appends
+    * nothing twice, so the spec-pinned per-cell arrival-sum parity holds
+    * across replays. "Honest monitoring" (drift recomputed per DELIVERED
+    * batch) still applies to upstream re-delivery, which arrives under a
+    * NEW batch_id. The seen-batch_ids side is metadata-scale (one id per
+    * micro-batch ever run) — AQE broadcasts the anti-join.
     */
   def ivfIncrRepoSink(vecs: DataFrame, storedAgg: DataFrame, repoDir: String,
                       driftPath: String, checkpoint: String) =
@@ -1117,37 +1050,9 @@ object Streams {
         // the live quantizer generation); the caller's frame is the
         // pre-first-retrain fallback
         val agg = graft.dv.IvfIndexRepo.storedAgg(s, repoDir).getOrElse(storedAgg)
-        val drift = ivfDriftPlan(batch, cents, agg)
-          .withColumn("batch_id", lit(batchId))
-        val fresh = try {
-          val seen = s.read.parquet(driftPath).select("batch_id").distinct()
-          drift.join(seen, Seq("batch_id"), "left_anti")
-        } catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if graft.dv.DvLoader.isPathMissing(e) => drift
-        }
-        fresh.write.mode("append").parquet(driftPath)
-      }
-
-  def ivfIncrSink(vecs: DataFrame, cents: Seq[(Long, Seq[Long])],
-                  storedAgg: DataFrame, indexPath: String, driftPath: String,
-                  checkpoint: String) =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfAssignPlan(batch.sparkSession, batch, cents, indexPath, s"batch_$batchId")
-          .write.mode("append").parquet(indexPath)
-        val drift = ivfDriftPlan(batch, cents, storedAgg)
-          .withColumn("batch_id", lit(batchId))
-        val fresh = try {
-          val seen = batch.sparkSession.read.parquet(driftPath)
-            .select("batch_id").distinct()
-          drift.join(seen, Seq("batch_id"), "left_anti")
-        } catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if graft.dv.DvLoader.isPathMissing(e) => drift
-        }
-        fresh.write.mode("append").parquet(driftPath)
+        graft.dv.DvLoader.appendNovel(s,
+          ivfDriftPlan(batch, cents, agg).withColumn("batch_id", lit(batchId)),
+          driftPath, Seq("batch_id"), None)
+        ()
       }
 }

@@ -60,10 +60,8 @@ class StreamPlanSweepSpec extends SparkSpec {
     locally {
       val emb = Tables.load(spark, sfDir, "embeddings").select("vec_id", "embedding")
       val cents = graft.queries.Similarity.ivfStoredCentroids(spark, sfDir)
-      Streams.ivfAssignPlan(spark, emb.limit(20), cents, s"$dir/ivf", "t0")
-        .write.mode("append").parquet(s"$dir/ivf")
-      // the vault-disciplined repo variant (r13): seed one real append so
-      // the swept repo plan carries the catalog-read anti-join
+      // seed one real index append so the swept repo plan carries the
+      // catalog-read anti-join
       graft.dv.IvfIndexRepo.init(spark, s"$dir/ivfrepo", cents,
         s"sweepivf${System.nanoTime()}_", 4)
       graft.dv.IvfIndexRepo.appendBatch(spark, s"$dir/ivfrepo", emb.limit(20), "t0")
@@ -166,19 +164,16 @@ class StreamPlanSweepSpec extends SparkSpec {
       },
       "stream_computed_sat" -> (() =>
         Seq(plan(Streams.computedSatStream(orderEvs()).toDF()))),
-      // the IVF maintenance op = the seeded exactly-once index append plan
-      // (anti-join IN the plan) PLUS the per-batch drift report against a
-      // precomputed stored-side aggregate
+      // the IVF maintenance op = ivfIncrRepoSink's seeded exactly-once
+      // index append plan (catalog-read anti-join IN the plan) PLUS the
+      // per-batch drift report against a precomputed stored-side aggregate
       "stream_ivf_incr" -> { () =>
         val emb = Tables.load(spark, sfDir, "embeddings").select("vec_id", "embedding")
         val cents = graft.queries.Similarity.ivfStoredCentroids(spark, sfDir)
-        // r13: ALSO sweep ivfIncrRepoSink's append plan — the
-        // vault-disciplined repo variant with the catalog-read anti-join
         import graft.queries.Similarity
         val assigned = Similarity.assignCells(Similarity.withQuantized(emb), cents)
           .select(col("vec_id"), col("cell"), lit("t1").as("load_ts"))
-        Seq(plan(Streams.ivfAssignPlan(spark, emb, cents, s"$tmp/ivf", "t1")),
-          plan(Streams.ivfDriftPlan(emb, cents, Streams.ivfStoredAgg(emb, cents))),
+        Seq(plan(Streams.ivfDriftPlan(emb, cents, Streams.ivfStoredAgg(emb, cents))),
           plan(graft.dv.IvfIndexRepo.appendPlan(spark, s"$tmp/ivfrepo", assigned)))
       },
       // the budget gate plan: scan-local inputs into one source-keyed state

@@ -705,52 +705,62 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.queries.Similarity
+    import graft.dv.IvfIndexRepo
     val vecs = Tables.load(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val stored = vecs.filter(col("vec_id") % Similarity.IncrMod =!= Similarity.IncrRes)
     val arriving = vecs.filter(col("vec_id") % Similarity.IncrMod === Similarity.IncrRes)
     val cents = Similarity.ivfStoredCentroids(spark, sfDir)
     val storedAgg = Streams.ivfStoredAgg(stored, cents)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_incr_stream").toString
-    val (indexPath, driftPath) = (s"$dir/index", s"$dir/drift")
+    val prefix = s"ivfincr${System.nanoTime()}_"
+    val driftPath = s"$dir/drift"
     val rows = arriving.collect().map(r =>
       SVec(r.getLong(0), r.getAs[scala.collection.Seq[Float]](1).toSeq))
     val (b1, b2) = rows.partition(_.vec_id % 20 == Similarity.IncrRes) // two micro-batches
     assert(b1.nonEmpty && b2.nonEmpty, "batch split degenerate")
-    val mem = MemoryStream[SVec]
-    val q = Streams.ivfIncrSink(mem.toDF(), cents, storedAgg, indexPath, driftPath,
-      s"$dir/ckpt").start()
-    mem.addData(b1.toSeq: _*); q.processAllAvailable()
-    mem.addData(b2.toSeq: _*); q.processAllAvailable()
-    q.stop()
-    // the index holds each arriving vector exactly once, with the batch
-    // kernel's exact cell assignment (bit-identical argmax)
-    val index = spark.read.parquet(indexPath)
-    assert(index.count() == rows.length)
-    assert(index.select("vec_id").distinct().count() == rows.length)
-    val expected = Similarity.assignCells(Similarity.withQuantized(arriving), cents)
-    assert(index.select("vec_id", "cell").exceptAll(expected).count() == 0)
-    assert(expected.exceptAll(index.select("vec_id", "cell")).count() == 0)
-    // re-delivery: batch 1 arrives again — the anti-join appends NOTHING
-    // (the batch-1 predicate re-applied to the source frame: inner case
-    // classes can't instantiate through toDF's outer-scope encoder here)
-    val redelivered = Streams.ivfAssignPlan(spark,
-      arriving.filter(col("vec_id") % 20 === Similarity.IncrRes), cents, indexPath, "redo")
-    assert(redelivered.count() == 0, "re-delivered batch leaked into the index")
-    // drift log: per-cell arrivals across the two batches sum to the
-    // registered batch op's n_arrived
-    val batchOp = SparkEntry.queries("ann_ivf_incr")(spark, sfDir)
-    val streamedArrivals = spark.read.parquet(driftPath)
-      .groupBy("cell").agg(sum("n_arrived").as("n")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    batchOp.select("cell", "n_arrived").collect().foreach { r =>
-      assert(streamedArrivals.getOrElse(r.getLong(0), 0L) == r.getLong(1),
-        s"cell ${r.getLong(0)}: streamed arrivals diverge from the batch op")
+    try {
+      IvfIndexRepo.init(spark, dir, cents, prefix, buckets = 4)
+      val mem = MemoryStream[SVec]
+      val q = Streams.ivfIncrRepoSink(mem.toDF(), storedAgg, dir, driftPath,
+        s"$dir/ckpt").start()
+      mem.addData(b1.toSeq: _*); q.processAllAvailable()
+      mem.addData(b2.toSeq: _*); q.processAllAvailable()
+      q.stop()
+      // the index holds each arriving vector exactly once, with the batch
+      // kernel's exact cell assignment (bit-identical argmax)
+      val index = IvfIndexRepo.storedIndex(spark, dir)
+      assert(index.count() == rows.length)
+      assert(index.select("vec_id").distinct().count() == rows.length)
+      val expected = Similarity.assignCells(Similarity.withQuantized(arriving), cents)
+      assert(index.select("vec_id", "cell").exceptAll(expected).count() == 0)
+      assert(expected.exceptAll(index.select("vec_id", "cell")).count() == 0)
+      // re-delivery: batch 1 arrives again — the anti-join appends NOTHING
+      // (the batch-1 predicate re-applied to the source frame: inner case
+      // classes can't instantiate through toDF's outer-scope encoder here)
+      val redelivered = IvfIndexRepo.appendPlan(spark, dir,
+        Similarity.assignCells(Similarity.withQuantized(
+          arriving.filter(col("vec_id") % 20 === Similarity.IncrRes)), cents)
+          .select(col("vec_id"), col("cell"), lit("redo").as("load_ts")))
+      assert(redelivered.count() == 0, "re-delivered batch leaked into the index")
+      // drift log: per-cell arrivals across the two batches sum to the
+      // registered batch op's n_arrived
+      val batchOp = SparkEntry.queries("ann_ivf_incr")(spark, sfDir)
+      val streamedArrivals = spark.read.parquet(driftPath)
+        .groupBy("cell").agg(sum("n_arrived").as("n")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      batchOp.select("cell", "n_arrived").collect().foreach { r =>
+        assert(streamedArrivals.getOrElse(r.getLong(0), 0L) == r.getLong(1),
+          s"cell ${r.getLong(0)}: streamed arrivals diverge from the batch op")
+      }
+      // full-replay parity: ONE batch carrying every arrival reproduces the
+      // registered op bit for bit (same kernel, same stored agg)
+      val oneShot = Streams.ivfDriftPlan(arriving, cents, storedAgg).collect().toSeq
+      assert(oneShot == batchOp.collect().toSeq,
+        "one-batch drift replay diverges from ann_ivf_incr")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS ${prefix}${IvfIndexRepo.IndexObj}")
+      graft.dv.DvLoader.deletePath(java.nio.file.Paths.get(dir))
     }
-    // full-replay parity: ONE batch carrying every arrival reproduces the
-    // registered op bit for bit (same kernel, same stored agg)
-    val oneShot = Streams.ivfDriftPlan(arriving, cents, storedAgg).collect().toSeq
-    assert(oneShot == batchOp.collect().toSeq,
-      "one-batch drift replay diverges from ann_ivf_incr")
   }
 
   test("IVF index repo: batch and stream maintain ONE bucketed index through the catalog; compaction covers it") {
