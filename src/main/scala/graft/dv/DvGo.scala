@@ -261,6 +261,16 @@ object DvGo {
        |}""".stripMargin
   }
 
+  /** The source table a vault object is built from (for per-object build
+    * status: the object's acceptance derives from its source columns'
+    * classification confidence).
+    */
+  private[dv] def objectSourceTable(plan: DvPlan, obj: String): String =
+    plan.hubs.find(h => s"hub_${h.spec.name}" == obj).map(_.spec.sourceTable)
+      .orElse(plan.sats.find(t => s"sat_${t.name}" == obj).map(_.sourceTable))
+      .orElse(plan.links.find(l => s"link_${l.name}" == obj).map(_.sourceTable))
+      .getOrElse(sys.error(s"no source table for unknown vault object $obj"))
+
   /** Build-history repo: every go() appends one row per built object to a
     * `dv_builds` parquet — the reference's auto_dw.build_call insert
     * (lib.rs:29-35 insert_into_build_call; the dv_repo keyed by build_id,
@@ -273,28 +283,23 @@ object DvGo {
     * globally-unique `build_id` (also stored) disambiguates rows if that
     * contract is ever violated, but sequences are only meaningful under a
     * single writer.
+    *
+    * Only a MISSING history is "no builds yet" (sequence 1), the rule
+    * [[DvLoader.appendNovel]] follows: a history that exists but whose
+    * `build_seq` cannot be read (the column is missing, the files are not
+    * parquet) fails before the build runs, and nothing is appended to it.
     */
-  /** The source table a vault object is built from (for per-object build
-    * status: the object's acceptance derives from its source columns'
-    * classification confidence).
-    */
-  private[dv] def objectSourceTable(plan: DvPlan, obj: String): String =
-    plan.hubs.find(h => s"hub_${h.spec.name}" == obj).map(_.spec.sourceTable)
-      .orElse(plan.sats.find(t => s"sat_${t.name}" == obj).map(_.sourceTable))
-      .orElse(plan.links.find(l => s"link_${l.name}" == obj).map(_.sourceTable))
-      .getOrElse(sys.error(s"no source table for unknown vault object $obj"))
-
   def goWithHistory(s: SparkSession, dir: String, outDir: String, historyPath: String,
                     loadTs: String = DvDefaults.LoadTs,
                     include: String => Boolean = _ => true,
                     threshold: Option[Double] = None,
                     classifier: Option[Classifier] = None): (BuildResult, Long) = {
     import s.implicits._
-    val res = go(s, dir, outDir, loadTs, include)
     val prevSeq =
-      try s.read.parquet(historyPath).agg(coalesce(max("build_seq"), lit(0L))).collect()(0).getLong(0)
-      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+      if (!DvLoader.pathExists(s, historyPath)) 0L
+      else s.read.parquet(historyPath).agg(coalesce(max("build_seq"), lit(0L))).collect()(0).getLong(0)
     val seq = prevSeq + 1
+    val res = go(s, dir, outDir, loadTs, include)
     // Per-accepted-object status (the reference's build_call records
     // build_flag/build_status per response, model/queries.rs:325-333):
     // an object's acceptance confidence is the weakest classification among

@@ -265,10 +265,17 @@ object DvLoader {
     */
   def streamTableLoadBatch(s: SparkSession, batch: DataFrame, tableName: String,
                            repoDir: String, loadTs: String,
-                           suppressDir: Option[String] = None): Unit = {
-    val schema = readSchema(s, repoDir)
+                           suppressDir: Option[String] = None): Unit =
+    streamTableLoadBatch(s, readSchema(s, repoDir), batch, tableName, repoDir, loadTs, suppressDir)
+
+  /** [[streamTableLoadBatch]] against a repo schema the caller already
+    * parsed (the micro-batch turn parses `dv_schema.json` once and shares
+    * it with its conform and purge steps).
+    */
+  def streamTableLoadBatch(s: SparkSession, schema: DvSchemaRef, batch: DataFrame,
+                           tableName: String, repoDir: String, loadTs: String,
+                           suppressDir: Option[String]): Unit =
     appendLoads(s, repoDir, schema, tableLoads(s, schema, batch, tableName, loadTs, suppressDir))
-  }
 
   /** The per-object micro-batch PLANS of the schema-driven streaming load
     * — (object name, novel-rows frame) pairs, exposed unwritten so the

@@ -68,6 +68,21 @@ class GoSpec extends SparkSpec {
     assert(held.nonEmpty && held.forall(_.getAs[String]("build_status") == "Held"))
   }
 
+  test("goWithHistory fails on a history it cannot read and appends nothing to it") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_go_hist_bad").toString
+    val hist = s"$tmp/dv_builds"
+    // a history written without build_seq: it exists, so it is not "no builds yet"
+    Seq(("b0", "hub_customer")).toDF("build_id", "object").write.parquet(hist)
+    val e = intercept[Exception] {
+      DvGo.goWithHistory(spark, sfDir, s"$tmp/b1", hist, "2024-01-01 00:00:00", Set("hub_customer"))
+    }
+    assert(e.getMessage.contains("build_seq"))
+    assert(spark.read.parquet(hist).count() == 1)
+    assert(!Files.exists(Paths.get(s"$tmp/b1")), "the build ran before the history was read")
+    DvLoader.deletePath(Paths.get(tmp))
+  }
+
   test("dv_schema.json round-trips to the typed specs") {
     val out = Files.createTempDirectory("graft_schema_rt").toString
     Files.writeString(Paths.get(s"$out/dv_schema.json"), DvGo.planJson(DvPlanner.literalPlan, "rt"))

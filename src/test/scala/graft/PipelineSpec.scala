@@ -1,8 +1,10 @@
 package graft
 
 import graft.dv._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The composed background loop (bgw_init analogue): source change →
   * CatalogScd2 merge → re-classify only what drifted → schema-driven
@@ -237,7 +239,8 @@ class PipelineSpec extends SparkSpec {
       // …request B lands DURING the purge window…
       reqDf(hexes(1)).write.mode("append").parquet(s"${st.erasureDir.get}/requests")
       // …and the turn purges+stamps exactly the snapshot
-      val res = ContinuousPipeline.purgeAndMark(spark, st, snapshot, "t_purge")
+      val res = ContinuousPipeline.purgeAndMark(spark, st, snapshot, "t_purge",
+        DvLoader.readSchema(spark, st.repoDir))
       assert(res.map(_._1) == Seq(obj) && res.head._2 - res.head._3 == 1)
       val processed = spark.read.parquet(s"${st.erasureDir.get}/processed")
         .select(lower(hex(col("hk")))).as[String].collect().toSeq
@@ -253,5 +256,123 @@ class PipelineSpec extends SparkSpec {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       DvLoader.deletePath(Paths.get(tmp))
     }
+  }
+
+  /** RulesClassifier, counting its respond calls (one per full-path turn). */
+  private final class CountingClassifier extends Classifier {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val name: String = RulesClassifier.name
+    def respond(df: DataFrame): DataFrame = { calls.incrementAndGet(); RulesClassifier.respond(df) }
+  }
+
+  /** A fresh loop state over an unbucketed repo holding `scope`. */
+  private def loopState(tag: String, scope: Set[String],
+                        cl: Classifier): (String, ContinuousPipeline.State) = {
+    val tmp = Files.createTempDirectory(tag).toString
+    val st = ContinuousPipeline.State(s"$tmp/catalog", s"$tmp/responses", s"$tmp/repo", cl)
+    Files.createDirectories(Paths.get(st.repoDir))
+    Files.writeString(Paths.get(s"${st.repoDir}/dv_schema.json"),
+      DvGo.planJson(DvPlanner.literalPlan, tag, scope))
+    (tmp, st)
+  }
+
+  private def files(dir: String): Seq[Path] =
+    scala.util.Using.resource(Files.walk(Paths.get(dir)))(_.iterator().asScala.toList)
+      .filter(Files.isRegularFile(_))
+
+  /** (name, size, mtime) of every file under `dir`. */
+  private def listing(dir: String): Set[(String, Long, Long)] =
+    files(dir).map(f => (Paths.get(dir).relativize(f).toString, Files.size(f),
+      Files.getLastModifiedTime(f).toMillis)).toSet
+
+  private def copyDir(from: String, to: String): Unit =
+    files(from).foreach { f =>
+      val dst = Paths.get(to).resolve(Paths.get(from).relativize(f))
+      Files.createDirectories(dst.getParent)
+      Files.copy(f, dst)
+    }
+
+  private def catalogRow(st: ContinuousPipeline.State, column: String) =
+    spark.read.parquet(st.catalogDir)
+      .filter(col("column_name") === column && col("current_flag") === "Y").collect().toSeq
+
+  test("continuous pipeline: a turn with an unchanged schema runs no classifier and rewrites no loop state") {
+    val cl = new CountingClassifier
+    val (tmp, st) = loopState("graft_pipeline_steady", Set("hub_customer", "sat_customer"), cl)
+    try {
+      val cust = Tables.load(spark, sfDir, "customer")
+      ContinuousPipeline.onBatch(spark, st, "customer", cust.filter(col("c_custkey") % 2 === 0),
+        "2024-01-01 00:00:00", "b0")
+      assert(cl.calls.get == 1)
+      val (cat0, resp0) = (listing(st.catalogDir), listing(st.responsesDir))
+      // same schema, new scanTs, the full feed
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-02-01 00:00:00", "b1")
+      assert(cl.calls.get == 1, "a steady-state turn called the classifier")
+      assert(listing(st.catalogDir) == cat0, "a steady-state turn rewrote the catalog")
+      assert(listing(st.responsesDir) == resp0, "a steady-state turn rewrote the responses")
+      // the vault still got everything the two turns delivered
+      val nAll = cust.select("c_custkey").distinct().count()
+      assert(spark.read.parquet(s"${st.repoDir}/hub_customer").count() == nAll + 2)
+      assert(spark.read.parquet(s"${st.repoDir}/sat_customer").count() == nAll)
+    } finally DvLoader.deletePath(Paths.get(tmp))
+  }
+
+  test("continuous pipeline: a replay after a crash between the two rewrites re-classifies the opened column") {
+    val cl = new CountingClassifier
+    val scope = Set("hub_customer", "sat_customer", "sat_customer_sensitive")
+    val (tmp, st) = loopState("graft_pipeline_replay", scope, cl)
+    try {
+      val (t0, t1) = ("2024-01-01 00:00:00", "2024-02-01 00:00:00")
+      val cust = Tables.load(spark, sfDir, "customer")
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, t0, "b0")
+      copyDir(st.responsesDir, s"$tmp/responses_before")
+      val drifted = cust.withColumn("c_acctbal", col("c_acctbal").cast("string"))
+      ContinuousPipeline.onBatch(spark, st, "customer", drifted, t1, "drift")
+      assert(cl.calls.get == 2)
+      // the crash: the catalog rewrite landed, the response rewrite did not
+      DvLoader.deletePath(Paths.get(st.responsesDir))
+      copyDir(s"$tmp/responses_before", st.responsesDir)
+      def acctbal = spark.read.parquet(st.responsesDir)
+        .filter(col("column_name") === "c_acctbal").collect().toSeq
+      assert(acctbal.map(_.getAs[String]("classified_at")) == Seq(t0))
+      // the replay stamps the same scanTs: c_acctbal's slice row was opened
+      // at t1, so the turn takes the full path
+      ContinuousPipeline.onBatch(spark, st, "customer", drifted, t1, "drift")
+      assert(cl.calls.get == 3, "a replay of the opening turn took the fast path")
+      assert(acctbal.map(_.getAs[String]("classified_at")) == Seq(t1))
+    } finally DvLoader.deletePath(Paths.get(tmp))
+  }
+
+  test("continuous pipeline: a column flagged deleted forces the full path, which clears the flag") {
+    val cl = new CountingClassifier
+    val (tmp, st) = loopState("graft_pipeline_deleted", Set("hub_customer"), cl)
+    try {
+      val cust = Tables.load(spark, sfDir, "customer")
+      val last = cust.columns.last
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-01-01 00:00:00", "b0")
+      ContinuousPipeline.onBatch(spark, st, "customer", cust.drop(last), "2024-02-01 00:00:00", "b1")
+      assert(cl.calls.get == 2)
+      assert(catalogRow(st, last).map(_.getAs[String]("deleted_flag")) == Seq("Y"))
+      // the column is back: only the full path's merge clears the flag
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-03-01 00:00:00", "b2")
+      assert(cl.calls.get == 3, "a deleted slice row took the fast path")
+      assert(catalogRow(st, last).map(_.getAs[String]("deleted_flag")) == Seq("N"))
+      // and with the flag cleared, the next same-schema turn is steady
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-04-01 00:00:00", "b3")
+      assert(cl.calls.get == 3)
+    } finally DvLoader.deletePath(Paths.get(tmp))
+  }
+
+  test("continuous pipeline: a catalog without a responses dir takes the full path") {
+    val cl = new CountingClassifier
+    val (tmp, st) = loopState("graft_pipeline_noresp", Set("hub_customer"), cl)
+    try {
+      val cust = Tables.load(spark, sfDir, "customer")
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-01-01 00:00:00", "b0")
+      DvLoader.deletePath(Paths.get(st.responsesDir))
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-02-01 00:00:00", "b1")
+      assert(cl.calls.get == 2, "a turn without a responses dir took the fast path")
+      assert(Files.exists(Paths.get(st.responsesDir)))
+    } finally DvLoader.deletePath(Paths.get(tmp))
   }
 }
