@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * classifies columns without a current response; dv_loader.rs loads the
   * vault) — here as ONE micro-batch hook: every arriving batch of source
   * rows re-scans its schema, SCD2-merges the catalog when that schema
-  * moved, re-classifies ONLY the columns the merge opened, and runs the
+  * moved, classifies ONLY the columns without a current response, and runs the
   * schema-driven incremental vault load. No manual steps between "source changed" and "vault rows
   * landed".
   *
@@ -28,9 +28,12 @@ import org.apache.spark.sql.functions._
   *
   * Catalog and response state are parquet directories of METADATA rows
   * (one per source column — the auto_dw.source_objects /
-  * transformer_responses scale), rewritten via a driver-side materialize
-  * like the reference's transactional UPDATEs; the vault data itself only
-  * ever APPENDS through the bucketed-aware loader.
+  * transformer_responses scale). Where the reference rewrites them with
+  * transactional UPDATEs, every rewrite here is a
+  * [[DvMaintenance.swap]] (stage beside, move in, lease-guarded) and every
+  * turn [[DvMaintenance.restore]]s both dirs first, so a crash at any step
+  * of a turn is repaired by replaying it. The vault data itself only ever
+  * APPENDS through the bucketed-aware loader.
   */
 object ContinuousPipeline {
 
@@ -90,15 +93,6 @@ object ContinuousPipeline {
     allStats.join(sigDf, Seq("table_name", "column_name"))
   }
 
-  /** Materialize metadata rows driver-side, then rewrite the directory —
-    * the state is read and replaced in one hook, and it is column-count
-    * sized (never data sized).
-    */
-  private def rewrite(s: SparkSession, df: DataFrame, dir: String): Unit = {
-    val local = s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-    local.write.mode("overwrite").parquet(dir)
-  }
-
   /** Conform a batch to the vault's declared column types (the repo is
     * the contract: a drifted upstream export must not rewrite the vault's
     * schema — values cast into the declared types, and the (hk, hd)
@@ -145,49 +139,55 @@ object ContinuousPipeline {
     }
 
   /** Steps 1-2 of a turn whose schema moved: re-scan + SCD2 merge of this
-    * table's catalog slice, then classification of ONLY the columns the
-    * merge opened.
+    * table's catalog slice, then classification of every current column
+    * of this table that has no current response: the columns the merge
+    * opened, and any column a lost responses dir no longer answers. Both
+    * rewrites are [[DvMaintenance.swap]]s, so a crash at any step leaves
+    * state a replay of the turn repairs.
     */
   private def refreshLoopState(s: SparkSession, st: State, table: String, batch: DataFrame,
                                scanTs: String): Unit = {
-    // 1. catalog re-scan + SCD2 merge (bgw_source_objects.rs)
+    val keys = Seq("table_name", "column_name")
+    // 1. catalog re-scan + SCD2 merge (bgw_source_objects.rs); the stage
+    //    is written beside the live dir, so the merge reads the live copy
     val snap = schemaSnapshot(s, table, batch)
-    // the catalog is SHARED across tables (auto_dw.source_objects is
-    // global): merge this table's slice only — a whole-catalog merge
-    // against a one-table snapshot would flag every OTHER table's columns
-    // as vanished
-    val mergedState =
-      if (DvLoader.pathExists(s, st.catalogDir)) {
-        val prev = s.read.parquet(st.catalogDir)
-        CatalogScd2.merge(prev.filter(col("table_name") === table), snap, scanTs)
-          .unionByName(prev.filter(col("table_name") =!= table))
-      } else CatalogScd2.init(snap, scanTs)
-    rewrite(s, mergedState, st.catalogDir)
-    // re-read: every later step must see the REWRITTEN state, not a lazy
-    // plan over the files the rewrite just replaced
-    val merged = s.read.parquet(st.catalogDir)
-    // 2. classify ONLY the columns this scan opened (new or drifted) —
-    //    prior responses carry forward untouched (bgw_transformer_client
-    //    processes columns without a current response). Scoped to THIS
+    DvMaintenance.swap(st.catalogDir) { stage =>
+      // the catalog is SHARED across tables (auto_dw.source_objects is
+      // global): merge this table's slice only — a whole-catalog merge
+      // against a one-table snapshot would flag every OTHER table's
+      // columns as vanished
+      val mergedState =
+        if (DvLoader.pathExists(s, st.catalogDir)) {
+          val prev = s.read.parquet(st.catalogDir)
+          CatalogScd2.merge(prev.filter(col("table_name") === table), snap, scanTs)
+            .unionByName(prev.filter(col("table_name") =!= table))
+        } else CatalogScd2.init(snap, scanTs)
+      mergedState.coalesce(1).write.parquet(stage)
+    }
+    // 2. classify the current columns of THIS table that lack a current
+    //    response (bgw_transformer_client processes columns without a
+    //    current response): the ones this scan opened (new or drifted),
+    //    plus any the responses dir does not hold. Prior responses of
+    //    every other column carry forward untouched. Scoped to THIS
     //    table: two sinks can stamp the same scanTs, and another table's
     //    same-stamp rows must not be anti-joined out of the responses.
-    val opened = merged
+    val prior = Option.when(DvLoader.pathExists(s, st.responsesDir))(
+      s.read.parquet(st.responsesDir))
+    val current = s.read.parquet(st.catalogDir)
       .filter(col("table_name") === table &&
-        col("current_flag") === "Y" && col("deleted_flag") === "N" &&
-        col("valid_from") === scanTs)
-      .select("table_name", "column_name")
+        col("current_flag") === "Y" && col("deleted_flag") === "N")
+    val opened = prior.fold(current)(p =>
+        current.join(p.select(keys.map(col) :+ lit(true).as("answered"): _*), keys, "left_outer")
+          .filter(col("valid_from") === scanTs || col("answered").isNull))
+      .select(keys.map(col): _*)
     val respCols = Seq("table_name", "column_name", "category", "confidence", "reason")
     val fresh = st.classifier.respond(profileFromBatch(s, table, batch))
-      .join(opened, Seq("table_name", "column_name"), "left_semi")
+      .join(opened, keys, "left_semi")
       .select(respCols.map(col): _*)
       .withColumn("classified_at", lit(scanTs))
-    val responses =
-      if (DvLoader.pathExists(s, st.responsesDir))
-        s.read.parquet(st.responsesDir)
-          .join(opened, Seq("table_name", "column_name"), "left_anti")
-          .unionByName(fresh)
-      else fresh
-    rewrite(s, responses, st.responsesDir)
+    DvMaintenance.swap(st.responsesDir)(stage =>
+      prior.fold(fresh)(_.join(opened, keys, "left_anti").unionByName(fresh))
+        .coalesce(1).write.parquet(stage))
   }
 
   /** One loop turn: re-scan → SCD2 merge → classify opened columns →
@@ -205,6 +205,8 @@ object ContinuousPipeline {
     */
   def onBatch(s: SparkSession, st: State, table: String, batch: DataFrame,
               scanTs: String, loadTs: String): Unit = {
+    DvMaintenance.restore(st.catalogDir)
+    DvMaintenance.restore(st.responsesDir)
     if (!loopStateCurrent(s, st, table, batch, scanTs))
       refreshLoopState(s, st, table, batch, scanTs)
     val schema = DvLoader.readSchema(s, st.repoDir)

@@ -60,19 +60,6 @@ object DvGo {
       .getOrElse(sys.error(s"no bucket keys for unknown vault object $obj"))
   }
 
-  /** Catalog table prefix for a bucketed build: derived from the output dir
-    * so two builds into different dirs never collide in the session
-    * catalog, and a re-build into the same dir overwrites its own tables.
-    */
-  private[dv] def tablePrefix(outDir: String): String = {
-    // normalize before hashing: "/x/v", "/x/v/" and a relative spelling of
-    // the same directory must yield ONE prefix, or a re-build would
-    // register a second table set over the first build's files
-    val canonical = java.nio.file.Paths.get(outDir).toAbsolutePath.normalize.toString
-    "graft_dv_" + java.util.UUID.nameUUIDFromBytes(canonical.getBytes).toString
-      .replace("-", "").take(12) + "_"
-  }
-
   /** One column-pruned persist per source table, shared by every object
     * built from that table (the r9 share-the-scan fix, factored out so
     * goDerivedParity's 22 frames share it too). Deliberately NOT
@@ -98,7 +85,7 @@ object DvGo {
   }
 
   /** One-click build. With `bucketed = true` every vault object is written
-    * bucketed+sorted by its anti-join keys (Scale.writeBucketed's layout,
+    * bucketed+sorted by its anti-join keys ([[DvLoader.bucketedWriter]],
     * registered as external tables over `outDir`) — the layout that makes
     * every subsequent incremental load shuffle-free on the stored side,
     * the Spark analogue of the reference's insert-into-indexed-table loads
@@ -142,24 +129,16 @@ object DvGo {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val prefix = tablePrefix(outDir)
+    val prefix = DvLoader.tablePrefix(outDir)
     def writeOne(name: String, df: DataFrame): (String, Long) = {
       val obs = org.apache.spark.sql.Observation(s"go_${name}_${System.nanoTime()}")
       val observed = df.observe(obs, count(lit(1)).as("n"))
       if (bucketed) {
-        val keys = bucketKeys(p, name)
-        // repartition by the bucket keys first: repartition's hash IS
-        // the bucket-id hash (both HashPartitioning over the same
-        // columns), so each task owns exactly one bucket and the writer
-        // emits ONE file per bucket. Without it every input task fans
-        // out into `buckets` files (tasks x buckets small files per
-        // object — measured 2x build wall-time at sf0.1) and the first
-        // compaction pays the same shuffle anyway.
-        observed.repartition(buckets, keys.map(col): _*)
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(buckets, keys.head, keys.tail: _*)
-          .sortBy(keys.head, keys.tail: _*)
-          .option("path", s"$outDir/$name")
+        // one file per bucket: without the writer's repartition every
+        // input task fans out into `buckets` files (tasks x buckets small
+        // files per object — measured 2x build wall-time at sf0.1) and
+        // the first compaction pays the same shuffle anyway
+        DvLoader.bucketedWriter(observed, bucketKeys(p, name), buckets, s"$outDir/$name")
           .saveAsTable(s"$prefix$name")
       } else {
         observed.write.mode("overwrite").parquet(s"$outDir/$name")
@@ -541,7 +520,7 @@ object DvGo {
   def goBucketedE2E(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_go_bkt_").toString
-    val prefix = tablePrefix(out)
+    val prefix = DvLoader.tablePrefix(out)
     // try/finally (round-6 advice): a failure anywhere in the lifecycle
     // must not leak the temp vault directory or its graft_dv_* session
     // catalog tables for the rest of the session
@@ -634,7 +613,7 @@ object DvGo {
     val spec = satCustomerSensitive
     val obj = s"sat_${spec.name}"
     val out = java.nio.file.Files.createTempDirectory("graft_dv_purge_").toString
-    val prefix = tablePrefix(out)
+    val prefix = DvLoader.tablePrefix(out)
     try {
       go(s, dir, out, bucketed = true, buckets = 8,
         include = Set("hub_customer", obj))

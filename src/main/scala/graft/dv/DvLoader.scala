@@ -1,7 +1,7 @@
 package graft.dv
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Schema-driven incremental loading — the reference's continuous-load path:
@@ -95,6 +95,44 @@ object DvLoader {
   private[graft] def readBucketing(s: SparkSession, metaPath: String): Option[Bucketing] =
     Option.when(pathExists(s, metaPath))(bucketingOf(readJson(s, metaPath), metaPath))
 
+  /** Pin `{table_prefix, buckets}` in the meta file `<dir>/<name>` unless
+    * it exists, then return the pinned spec: `buckets` only applies to the
+    * creating call. Creation is write-temp + rename through the session's
+    * Hadoop FS: rename does not overwrite, so two sessions racing a fresh
+    * repo both end up reading ONE winner's spec instead of interleaving a
+    * partial write.
+    */
+  private[graft] def pinBucketing(s: SparkSession, dir: String, name: String,
+                                  buckets: Int): Bucketing = {
+    val mp = new org.apache.hadoop.fs.Path(dir, name)
+    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(mp)) {
+      fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
+      val tmp = new org.apache.hadoop.fs.Path(dir,
+        s".$name.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+      scala.util.Using.resource(fs.create(tmp, false)) { out =>
+        out.write(s"""{"table_prefix": "${tablePrefix(dir)}", "buckets": $buckets}"""
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      // the loser of a creation race cleans up its temp and reads the
+      // winner's pinned spec
+      if (!fs.rename(tmp, mp)) fs.delete(tmp, false)
+    }
+    readBucketing(s, mp.toString).get
+  }
+
+  /** Catalog table prefix of a bucketed repo (vault, sink or IVF index),
+    * derived from its dir: two repos in different dirs never collide in
+    * the session catalog, and a re-opened or re-built repo reuses its
+    * entries. Normalized before hashing, so "/x/v", "/x/v/" and a relative
+    * spelling of the same dir yield ONE prefix.
+    */
+  private[graft] def tablePrefix(dir: String): String = {
+    val canonical = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+    "graft_dv_" + java.util.UUID.nameUUIDFromBytes(canonical.getBytes).toString
+      .replace("-", "").take(12) + "_"
+  }
+
   /** Anti-join keys per schema object, derived from the PARSED schema (not
     * the static plan registry — a hand-authored dv_schema.json must load
     * with its own keys): hash key for hubs/links, (hash key, hash diff)
@@ -118,6 +156,22 @@ object DvLoader {
       registerBucketed(s, repoDir, obj, keys, b)
     s.table(table)
   }
+
+  /** The one bucketed OVERWRITE writer (the build's objects and every
+    * rewrite's stage): repartition by the bucket keys first — repartition's
+    * hash IS the bucket-id hash (both HashPartitioning over the same
+    * columns), so each task owns exactly one bucket and the writer emits
+    * ONE file per bucket. The caller names the table in `saveAsTable`, so
+    * the write's job carries the caller's call site. Appends go through
+    * [[appendObject]] instead: they must not repartition.
+    */
+  private[dv] def bucketedWriter(df: DataFrame, keys: Seq[String], buckets: Int,
+                                 path: String): DataFrameWriter[Row] =
+    df.repartition(buckets, keys.map(col): _*)
+      .write.mode("overwrite").format("parquet")
+      .bucketBy(buckets, keys.head, keys.tail: _*)
+      .sortBy(keys.head, keys.tail: _*)
+      .option("path", path)
 
   /** Generic bucketed-object APPEND (see [[storedObject]]): through the
     * catalog under the object's bucket spec, creating the external table
@@ -144,7 +198,9 @@ object DvLoader {
     * absent from the object stored at `path` — the unwritten plan
     * [[appendNovel]] appends, exposed for the plan sweeps.
     *
-    * ONLY a missing path means "nothing stored yet" (full insert). A
+    * ONLY a missing path means "nothing stored yet" (full insert), and
+    * only after [[DvMaintenance.restore]] put back a copy a crashed swap
+    * left set aside — otherwise that copy's rows would re-insert. A
     * stored object that cannot be read with its keys (schema drift, a
     * renamed hash-key column) fails the load loudly, or every batch would
     * silently degrade to a full duplicate insert. A bucketed object's
@@ -152,7 +208,8 @@ object DvLoader {
     * Exchange on that side.
     */
   private[graft] def novelRows(s: SparkSession, rows: DataFrame, path: String,
-                               keys: Seq[String], bucketing: Option[Bucketing]): DataFrame =
+                               keys: Seq[String], bucketing: Option[Bucketing]): DataFrame = {
+    DvMaintenance.restore(path)
     if (!pathExists(s, path)) rows
     else {
       val stored = bucketing match {
@@ -163,6 +220,7 @@ object DvLoader {
       }
       rows.join(stored.select(keys.head, keys.tail: _*), keys, "left_anti")
     }
+  }
 
   /** Append [[novelRows]] to `path` and return how many landed. A bucketed
     * object appends through the catalog under its bucket spec and writer
@@ -184,7 +242,7 @@ object DvLoader {
   }
 
   /** `<repoDir>/<obj>` -> (repoDir, obj), the catalog-object coordinates. */
-  private def splitObject(path: String): (String, String) = {
+  private[dv] def splitObject(path: String): (String, String) = {
     val i = path.lastIndexOf('/')
     (path.take(i), path.drop(i + 1))
   }

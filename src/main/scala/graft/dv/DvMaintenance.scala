@@ -17,6 +17,14 @@ import org.apache.spark.sql.SparkSession
   * bucket. That one co-partitioned exchange is the minimum any
   * defragmentation pays; every subsequent incremental load is
   * shuffle-free again.
+  *
+  * Every persistent REWRITE in graft goes through one primitive here,
+  * [[swap]] (stage beside, move live aside, move stage in, under the
+  * per-object lease), and every reader of a swapped dir calls [[restore]]
+  * first: vault compaction and erasure, sink and IVF index compaction
+  * ([[rewriteObject]]), the IVF centroid and drift-baseline refresh, and
+  * the micro-batch loop's catalog and responses. Appends stay in
+  * [[DvLoader.appendNovel]].
   */
 object DvMaintenance {
 
@@ -91,55 +99,74 @@ object DvMaintenance {
     try body finally releaseLease(repoDir, obj, token)
   }
 
+  /** The one crash-safe stage-and-swap every persistent rewrite goes
+    * through: vault objects, sink and IVF repos, and the loop's catalog
+    * and responses. Under the per-object writer lease it [[restore]]s a
+    * set-aside copy first, clears stale debris, lets `writeStage` write
+    * the replacement to `<path>__compact` (beside the live dir, so the
+    * writer may read the live copy), moves the live dir aside to
+    * `<path>__old`, moves the stage in and deletes the aside copy. The
+    * old data survives on disk until the new copy is in place.
+    *
+    * Crash safety (failure-injected in DvMaintenanceSpec and PipelineSpec):
+    * every state an interrupted swap leaves is repaired by running the
+    * same rewrite again —
+    *  - crash after the stage write: the retry deletes the stale stage
+    *    and re-stages;
+    *  - crash BETWEEN the two moves (live dir aside, stage not yet in):
+    *    the retry restores the aside copy before any cleanup. The restore
+    *    must run first — deleting `<path>__old` first would destroy the
+    *    only surviving copy;
+    *  - crash after the swap, before the aside delete: the retry discards
+    *    the stale aside copy and rewrites the already-swapped dir.
+    */
+  def swap[A](path: String)(writeStage: String => A): A = {
+    import java.nio.file.{Files, Paths}
+    val (dir, obj) = DvLoader.splitObject(path)
+    withLease(dir, obj, "swap") {
+      val (live, stage, aside) =
+        (Paths.get(path), Paths.get(s"${path}__compact"), Paths.get(s"${path}__old"))
+      restore(path)
+      // the aside copy is stale HERE: the restore above already ran, so
+      // if it still exists, the live dir does too
+      DvLoader.deletePath(stage)
+      DvLoader.deletePath(aside)
+      val r = writeStage(stage.toString)
+      if (Files.exists(live)) Files.move(live, aside)
+      Files.move(stage, live)
+      DvLoader.deletePathQuietly(aside, s"swap aside copy of $path")
+      r
+    }
+  }
+
+  /** Mid-swap recovery for readers: if a crash between [[swap]]'s two
+    * moves left only `<path>__old`, move it back. Every reader of a
+    * swapped dir calls this before it probes or reads the dir.
+    */
+  def restore(path: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val (live, aside) = (Paths.get(path), Paths.get(s"${path}__old"))
+    if (!Files.exists(live) && Files.exists(aside)) Files.move(aside, live)
+  }
+
   /** Rewrite a bucketed vault object to one file per bucket. Returns the
     * (files_before, files_after) pair. PRECONDITION: single maintenance
     * writer per object, no concurrent loads during the swap (the same
-    * single-writer window any table-rewriting OPTIMIZE needs).
-    *
-    * Crash safety (failure-injected in DvMaintenanceSpec): every crash
-    * state an interrupted run can leave is repaired by simply calling
-    * compactBucketed again —
-    *  - crash after the stage write: retry pre-cleans the staging dir and
-    *    catalog entry and re-stages;
-    *  - crash BETWEEN the two swap renames (live object already moved to
-    *    `<obj>__old`, compacted copy not yet moved in): retry RESTORES the
-    *    set-aside copy before any cleanup. The restore must run first —
-    *    the r7 pre-clean deleted `<obj>__old` unconditionally, which on
-    *    this retry path would have destroyed the only surviving copy of
-    *    the object;
-    *  - crash after the swap, before the old-copy delete: retry discards
-    *    the stale `<obj>__old` and recompacts the already-compacted
-    *    object (idempotent).
+    * single-writer window any table-rewriting OPTIMIZE needs; the lease
+    * makes a violation fail loudly). Crash safety is [[swap]]'s:
+    * re-running repairs every interrupted state.
     */
-  def compactBucketed(s: SparkSession, repoDir: String, obj: String): (Long, Long) =
-    rewriteBucketed(s, repoDir, obj, identity)
-
-  /** [[compactBucketed]] for a NON-schema bucketed repo object (the IVF
-    * index repo): same stage-and-swap rewrite and crash-safety ladder,
-    * with the keys and bucket spec supplied by the object's own metadata
-    * instead of dv_schema.json.
-    */
-  def compactBucketedObject(s: SparkSession, repoDir: String, obj: String,
-                            keys: Seq[String], b: DvLoader.Bucketing): (Long, Long) =
-    rewriteBucketedWith(s, repoDir, obj, keys, b, identity)
-
-  /** The stage-and-swap rewrite with a caller transform, public for
-    * maintenance operators that REPLACE a bucketed object's rows rather
-    * than defragment them (IVF retrain re-deriving cell assignments,
-    * streaming PIT state merge): same crash-safety ladder, same lease,
-    * same one-file-per-bucket layout on the way out.
-    */
-  def rewriteBucketedObject(s: SparkSession, repoDir: String, obj: String,
-                            keys: Seq[String], b: DvLoader.Bucketing,
-                            transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) =
-    rewriteBucketedWith(s, repoDir, obj, keys, b, transform)
+  def compactBucketed(s: SparkSession, repoDir: String, obj: String): (Long, Long) = {
+    val (keys, b) = schemaSpec(s, repoDir, obj)
+    rewriteObject(s, repoDir, obj, keys, b, identity)
+  }
 
   /** Physical erasure for sensitive satellites (r11 verdict #8 — GDPR
     * right-to-erasure): rewrite `sat_*_sensitive` DROPPING every row whose
     * hash key appears in `victims` (one `hkCol` column, metadata-scale: one
     * row per erasure request), while PRESERVING the bucketed layout — the
-    * same stage-and-swap rewrite as compaction, so the post-purge object
-    * is also one file per bucket and subsequent incremental loads stay
+    * same [[rewriteObject]] as compaction, so the post-purge object is
+    * also one file per bucket and subsequent incremental loads stay
     * shuffle-free. The vault's ordinary delete story stays LOGICAL
     * (`dv_sat_status`); THIS is the physical hop for data the law says
     * must not exist anymore — which is exactly why the reference splits
@@ -153,9 +180,7 @@ object DvMaintenance {
     * unconditionally even if a victim hk collides with one. The victims
     * side is broadcast into an anti-join (erasure requests are
     * request-scale, never corpus-scale). Returns (rows_before,
-    * rows_after). Crash safety: identical to compaction — every
-    * interrupted state is repaired by re-running (same stage/swap/restore
-    * discipline).
+    * rows_after). Crash safety: [[swap]]'s, like compaction.
     */
   def purgeSensitive(s: SparkSession, repoDir: String, obj: String,
                      victims: org.apache.spark.sql.DataFrame,
@@ -172,7 +197,8 @@ object DvMaintenance {
     val obsG = org.apache.spark.sql.Observation(s"purge_g_${System.nanoTime()}")
     val obsP = org.apache.spark.sql.Observation(s"purge_p_${System.nanoTime()}")
     val obsS = org.apache.spark.sql.Observation(s"purge_s_${System.nanoTime()}")
-    rewriteBucketed(s, repoDir, obj, df => {
+    val (keys, b) = schemaSpec(s, repoDir, obj)
+    rewriteObject(s, repoDir, obj, keys, b, df => {
       val ghosts = df.filter(col("record_source") === lit(DvDefaults.GhostSource))
         .observe(obsG, count(lit(1)).as("n"))
       val purgeable = df.filter(col("record_source") =!= lit(DvDefaults.GhostSource))
@@ -186,76 +212,48 @@ object DvMaintenance {
     (g + p, surv + g)
   }
 
-  private def rewriteBucketed(s: SparkSession, repoDir: String, obj: String,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) = {
+  /** A schema repo object's anti-join keys and the repo's bucket spec. */
+  private def schemaSpec(s: SparkSession, repoDir: String, obj: String): (Seq[String], DvLoader.Bucketing) = {
     val schema = DvLoader.readSchema(s, repoDir)
-    val b = schema.bucketing.getOrElse(
-      sys.error(s"compactBucketed: repo at $repoDir is not bucketed"))
-    rewriteBucketedWith(s, repoDir, obj, DvLoader.schemaKeys(schema, obj), b, transform)
+    (DvLoader.schemaKeys(schema, obj), schema.bucketing.getOrElse(
+      sys.error(s"compactBucketed: repo at $repoDir is not bucketed")))
   }
 
-  private def rewriteBucketedWith(s: SparkSession, repoDir: String, obj: String,
-      keys: Seq[String], b: DvLoader.Bucketing,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) =
-    withLease(repoDir, obj, "rewrite") {
-      rewriteBucketedLeased(s, repoDir, obj, keys, b, transform)
-    }
-
-  private def rewriteBucketedLeased(s: SparkSession, repoDir: String, obj: String,
-      keys: Seq[String], b: DvLoader.Bucketing,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) = {
+  /** [[swap]] a bucketed object, keyed by `keys` under bucket spec `b`,
+    * to `transform` of its rows, one file per bucket: compaction
+    * (`identity`), erasure, the IVF retrain's cell reassignment. Returns
+    * (files_before, files_after).
+    *
+    * The stage reads the PLAIN parquet path, not the catalog table: a
+    * bucketed-table read of an appended object advertises hash
+    * partitioning while actually splitting buckets per append file set,
+    * which lets the optimizer elide the repartition and defeats the
+    * consolidation. Only the staging table's catalog entry is dropped;
+    * the live table keeps its entry (the transforms keep the schema) and
+    * is refreshed after the swap, or registered if this session lacks it.
+    */
+  def rewriteObject(s: SparkSession, repoDir: String, obj: String,
+                    keys: Seq[String], b: DvLoader.Bucketing,
+                    transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) = {
     val table = s"${b.tablePrefix}$obj"
-    val objPath = java.nio.file.Paths.get(s"$repoDir/$obj")
-    val stagePath = java.nio.file.Paths.get(s"$repoDir/${obj}__compact")
-    val asidePath = java.nio.file.Paths.get(s"$repoDir/${obj}__old")
-    // mid-swap crash recovery — BEFORE the debris cleanup and BEFORE any
-    // catalog registration against the (possibly missing) live path
-    if (!java.nio.file.Files.exists(objPath) && java.nio.file.Files.exists(asidePath))
-      java.nio.file.Files.move(asidePath, objPath)
-    if (!s.catalog.tableExists(table))
-      DvLoader.registerBucketed(s, repoDir, obj, keys, b)
-    def dataFiles(p: java.nio.file.Path): Long = {
+    val path = s"$repoDir/$obj"
+    def dataFiles(): Long = {
       import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(p)) { w =>
+      scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(path))) { w =>
         w.iterator().asScala.count(f => f.getFileName.toString.startsWith("part-")).toLong
       }
     }
-    val staging = s"${table}__compact"
-    // pre-clean debris from a crashed earlier run — a retry must not fail
-    // on a non-empty staging location or a stale set-aside copy (the
-    // set-aside copy is stale HERE because the restore above already ran:
-    // if it still exists, the live object does too)
-    s.sql(s"DROP TABLE IF EXISTS $staging")
-    DvLoader.deletePath(stagePath)
-    DvLoader.deletePath(asidePath)
-    val before = dataFiles(objPath)
-    // partition i == bucket i under repartition-by-keys (repartition and
-    // the bucketed writer share the same HashPartitioning), so the writer
-    // emits one file per bucket. The rewrite reads the PLAIN parquet path,
-    // not the catalog table: a bucketed-table read of an appended object
-    // advertises hash partitioning while actually splitting buckets per
-    // append file set, which lets the optimizer elide the repartition and
-    // defeats the consolidation. Stage beside the object, then swap.
-    transform(s.read.parquet(objPath.toString))
-      .repartition(b.buckets, keys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(b.buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .option("path", stagePath.toString)
-      .saveAsTable(staging)
-    // swap: drop both catalog entries (external — files stay), rename the
-    // live object aside, move the compacted directory in, then delete the
-    // old copy and re-register. The table name never changes, only its
-    // files; the old data survives on disk until the new copy is in place.
-    s.sql(s"DROP TABLE IF EXISTS $staging")
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    java.nio.file.Files.move(objPath, asidePath)
-    java.nio.file.Files.move(stagePath, objPath)
-    // re-register FIRST: the aside copy is garbage once the compacted files
-    // are in place, and a failed garbage delete must not leave the table
-    // dropped (the pre-clean above removes a surviving aside on retry)
-    DvLoader.registerBucketed(s, repoDir, obj, keys, b)
-    DvLoader.deletePathQuietly(asidePath, s"compaction aside copy for $table")
-    (before, dataFiles(objPath))
+    val before = swap(path) { stage =>
+      val staging = s"${table}__compact"
+      s.sql(s"DROP TABLE IF EXISTS $staging")
+      val n = dataFiles()
+      DvLoader.bucketedWriter(transform(s.read.parquet(path)), keys, b.buckets, stage)
+        .saveAsTable(staging)
+      s.sql(s"DROP TABLE IF EXISTS $staging")
+      n
+    }
+    if (s.catalog.tableExists(table)) s.catalog.refreshTable(table)
+    else DvLoader.registerBucketed(s, repoDir, obj, keys, b)
+    (before, dataFiles())
   }
 }

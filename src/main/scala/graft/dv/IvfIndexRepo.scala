@@ -11,22 +11,26 @@ import org.apache.spark.sql.functions._
   *
   *  - `ivf_centroids` — the stored-trained coarse quantizer, K × Dim exact
   *    integer rows. Metadata-scale, stored as plain parquet (bucketing a
-  *    K-row object buys nothing); refreshed wholesale on retrain.
+  *    K-row object buys nothing); refreshed wholesale on retrain through
+  *    [[DvMaintenance.swap]], and [[DvMaintenance.restore]]d before reads.
   *  - `ivf_index` — the cell-assignment index (vec_id, cell, load_ts),
   *    BUCKETED BY vec_id and appended ONLY through
   *    [[DvLoader.appendNovel]] (the bucketed-repo invariant: plain
   *    parquet appends would corrupt the bucket layout), so the
   *    exactly-once anti-join carries the bucket spec on its stored side
   *    and needs no Exchange there.
-  *  - `ivf_meta.json` — (table_prefix, buckets), pinned at init so every
-  *    batch and streaming session resolves the SAME bucket spec (the
-  *    dv_schema.json discipline applied to the index).
+  *  - `ivf_meta.json` — (table_prefix, buckets), pinned create-once at
+  *    init (the `sink_meta.json` writer) so every batch and streaming
+  *    session resolves the SAME bucket spec (the dv_schema.json
+  *    discipline applied to the index).
   *
   * Batch loads ([[appendBatch]]) and the streaming maintainer
   * (`Streams.ivfIncrRepoSink`) maintain THE SAME index through these
-  * entry points, and [[compact]] (= [[DvMaintenance.compactBucketedObject]],
-  * the vault stage-and-swap rewrite with its crash-safety ladder) rewrites
-  * it to one file per bucket after N incremental loads. Reference
+  * entry points, and [[compact]] (= [[DvMaintenance.rewriteObject]], the
+  * one stage-and-swap rewrite with its crash-safety ladder) rewrites it to
+  * one file per bucket after N incremental loads. Every persistent
+  * rewrite here — centroids, index, drift baseline — goes through
+  * [[DvMaintenance.swap]]. Reference
   * analogue: the bgw refresh loop's incremental discipline
   * (extension/src/controller/dv_loader.rs:5-66) applied to an ANN index
   * instead of a vault object.
@@ -40,19 +44,14 @@ object IvfIndexRepo {
     */
   val Keys: Seq[String] = Seq("vec_id")
 
+  /** Create the repo: pin `ivf_meta.json` create-once (its table prefix
+    * derived from `repoDir`, [[DvLoader.pinBucketing]]) and write the
+    * initial quantizer.
+    */
   def init(s: SparkSession, repoDir: String, cents: Seq[(Long, Seq[Long])],
-           tablePrefix: String, buckets: Int = 8): Unit = {
+           buckets: Int = 8): Unit = {
     import s.implicits._
-    // meta IO through the session's Hadoop FS (r15 ADVICE — the SinkRepo
-    // fix applied to the pre-existing pattern here): java.nio only worked
-    // for local repo URIs while the data layer handles any filesystem
-    val mp = new org.apache.hadoop.fs.Path(s"$repoDir/ivf_meta.json")
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(repoDir))
-    scala.util.Using.resource(fs.create(mp, true)) { out =>
-      out.write(s"""{"table_prefix": "$tablePrefix", "buckets": $buckets}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    DvLoader.pinBucketing(s, repoDir, "ivf_meta.json", buckets)
     cents.toDF("cell", "q").coalesce(1)
       .write.mode("overwrite").parquet(s"$repoDir/$CentObj")
   }
@@ -66,51 +65,24 @@ object IvfIndexRepo {
 
   /** The stored-trained quantizer, read back in the exact literal form the
     * assignment kernel takes (K-scale collect — the coarse codebook is
-    * metadata, never corpus). Self-heals a crash between
-    * [[swapCentroids]]' two renames (live missing, aside present →
-    * restore) before reading — the DvMaintenance recovery-first ladder.
+    * metadata, never corpus). [[DvMaintenance.restore]]s a copy a crashed
+    * centroid swap set aside before reading.
     */
   def centroids(s: SparkSession, repoDir: String): Seq[(Long, Seq[Long])] = {
-    val live = java.nio.file.Paths.get(s"$repoDir/$CentObj")
-    val aside = java.nio.file.Paths.get(s"$repoDir/${CentObj}__old")
-    if (!java.nio.file.Files.exists(live) && java.nio.file.Files.exists(aside))
-      java.nio.file.Files.move(aside, live)
-    s.read.parquet(live.toString).orderBy("cell").collect()
+    DvMaintenance.restore(s"$repoDir/$CentObj")
+    s.read.parquet(s"$repoDir/$CentObj").orderBy("cell").collect()
       .map(r => (r.getLong(0), r.getAs[scala.collection.Seq[Long]](1).toSeq)).toSeq
   }
-
-  /** Crash-safe wholesale refresh of the K-scale `ivf_centroids` object —
-    * the stage-and-swap ladder (stage beside, move live aside, move stage
-    * in, drop the aside copy) under the object's writer lease. Metadata
-    * scale, so the object stays plain parquet; the ladder is what makes a
-    * retrain crash at any point recoverable by re-running (or by the next
-    * [[centroids]] read, which restores a set-aside copy first).
-    */
-  def swapCentroids(s: SparkSession, repoDir: String, cents: Seq[(Long, Seq[Long])]): Unit =
-    DvMaintenance.withLease(repoDir, CentObj, "retrain") {
-      import s.implicits._
-      import java.nio.file.{Files, Paths}
-      val live = Paths.get(s"$repoDir/$CentObj")
-      val stage = Paths.get(s"$repoDir/${CentObj}__stage")
-      val aside = Paths.get(s"$repoDir/${CentObj}__old")
-      // recovery first (the DvMaintenance ladder): a crash between the two
-      // renames left the only copy set aside — restore before any cleanup
-      if (!Files.exists(live) && Files.exists(aside)) Files.move(aside, live)
-      DvLoader.deletePath(stage)
-      DvLoader.deletePath(aside)
-      cents.toDF("cell", "q").coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      Files.move(live, aside)
-      Files.move(stage, live)
-      DvLoader.deletePathQuietly(aside, "centroid swap aside copy")
-    }
 
   /** Close the drift loop (r13 verdict #1 — the retrain half the trigger
     * lacked): deterministic Lloyd retrain over `vecs` — the STORED +
     * ARRIVED corpus; the caller owns the corpus frame because the index
-    * stores assignments, not embeddings — then [[swapCentroids]] and a
-    * stage-and-swap rewrite of the assignment index against the new
-    * quantizer (every indexed vec_id re-derived; load_ts lineage kept).
-    * Both swaps ride the crash ladder + writer lease, and because the
+    * stores assignments, not embeddings — then three
+    * [[DvMaintenance.swap]]s: the K-scale centroids (plain parquet), the
+    * assignment index re-derived against the new quantizer
+    * ([[DvMaintenance.rewriteObject]]; load_ts lineage kept) and the
+    * drift baseline. Every swap rides the crash ladder + writer lease, so
+    * re-running the retrain repairs a crash at any step, and because the
     * per-batch centroid read seam re-reads the repo ([[centroids]]), a
     * RUNNING streaming maintainer picks the new quantizer up on its next
     * micro-batch without restart (pinned in StreamingSpec). The Lloyd
@@ -143,17 +115,17 @@ object IvfIndexRepo {
       }
     try {
       val newCents = Similarity.trainCentroidsFrom(q)
-      swapCentroids(s, repoDir, newCents)
-      DvMaintenance.rewriteBucketedObject(s, repoDir, IndexObj, Keys, bucketing(s, repoDir),
+      import s.implicits._
+      DvMaintenance.swap(s"$repoDir/$CentObj")(stage =>
+        newCents.toDF("cell", "q").coalesce(1).write.parquet(stage))
+      DvMaintenance.rewriteObject(s, repoDir, IndexObj, Keys, bucketing(s, repoDir),
         stored => reassignFrame(stored, q, newCents))
       // refresh the stored-side drift baseline to the NEW quantizer
       // (index-scale: cells × Dim rows) so a running maintainer's drift
       // evidence tracks the retrained generation (Streams.ivfIncrRepoSink
-      // prefers this over its caller-supplied fallback). A crash here
-      // leaves the baseline missing/stale; re-running the retrain repairs
-      // it like every other step of the ladder.
-      Similarity.ivfDimAgg(q, newCents, "s_d", "n_s")
-        .write.mode("overwrite").parquet(s"$repoDir/$StoredAggObj")
+      // prefers this over its caller-supplied fallback)
+      DvMaintenance.swap(s"$repoDir/$StoredAggObj")(stage =>
+        Similarity.ivfDimAgg(q, newCents, "s_d", "n_s").write.parquet(stage))
       newCents.size
     } finally ephemeral.foreach(_.unpersist())
   }
@@ -175,10 +147,11 @@ object IvfIndexRepo {
     */
   val StoredAggObj = "ivf_stored_agg"
 
-  def storedAgg(s: SparkSession, repoDir: String): Option[DataFrame] =
-    if (DvLoader.pathExists(s, s"$repoDir/$StoredAggObj"))
-      Some(s.read.parquet(s"$repoDir/$StoredAggObj"))
-    else None
+  def storedAgg(s: SparkSession, repoDir: String): Option[DataFrame] = {
+    DvMaintenance.restore(s"$repoDir/$StoredAggObj")
+    Option.when(DvLoader.pathExists(s, s"$repoDir/$StoredAggObj"))(
+      s.read.parquet(s"$repoDir/$StoredAggObj"))
+  }
 
   /** The maintenance DECISION (drift evidence → action): retrain iff the
     * drift report flags any cell (`retrain_flag` — orphaned cell or mean
@@ -249,10 +222,10 @@ object IvfIndexRepo {
     appendAssigned(s, repoDir, assigned)
   }
 
-  /** One-file-per-bucket rewrite — the vault compaction (stage-and-swap,
-    * crash-safe) applied to the index object.
+  /** One-file-per-bucket rewrite — [[DvMaintenance.rewriteObject]] (the
+    * vault compaction's stage-and-swap, crash-safe) applied to the index
+    * object.
     */
   def compact(s: SparkSession, repoDir: String): (Long, Long) =
-    DvMaintenance.compactBucketedObject(s, repoDir, IndexObj, Keys,
-      bucketing(s, repoDir))
+    DvMaintenance.rewriteObject(s, repoDir, IndexObj, Keys, bucketing(s, repoDir), identity)
 }

@@ -1,6 +1,6 @@
 package graft.dv
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cluster-scale load-path utilities (SURVEY.md §6).
@@ -9,29 +9,15 @@ import org.apache.spark.sql.functions._
   * every incremental load. The two levers:
   *
   *  1. **Bucketed layout**: persist DV objects bucketed (and sorted) by
-  *     their hash key. An incremental anti-join against a bucketed table
-  *     needs no exchange on the stored side — only the (small) batch side
-  *     shuffles into the same bucketing.
+  *     their hash key (`DvGo.go(bucketed = true)`). An incremental
+  *     anti-join against a bucketed table needs no exchange on the stored
+  *     side — only the (small) batch side shuffles into the same
+  *     bucketing (`DvLoader.novelRows`).
   *  2. **Salting**: skewed group-by keys (one user producing 1% of all
   *     events) pre-aggregate under a deterministic salt, then merge —
   *     bounding any single reducer's input.
   */
 object Scale {
-
-  /** Persist a DV object bucketed+sorted by its hash key. */
-  def writeBucketed(df: DataFrame, table: String, hkCol: String, buckets: Int = 64): Unit =
-    df.write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, hkCol)
-      .sortBy(hkCol)
-      .saveAsTable(table)
-
-  /** Incremental load against a bucketed hub: only new hash keys remain.
-    * With `table` bucketed on `hkCol`, the physical plan has no Exchange on
-    * the stored side (verified in ScaleSpec).
-    */
-  def incrementAgainstBucketed(s: SparkSession, batch: DataFrame, table: String, hkCol: String): DataFrame =
-    batch.join(s.table(table).select(hkCol), Seq(hkCol), "left_anti")
 
   /** Bloom-prefiltered incremental anti-join (VERDICT r1 #9): build a bloom
     * filter over the (small) batch side's hash keys — one two-phase

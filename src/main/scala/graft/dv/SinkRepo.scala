@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Exchange.
   * `sink_meta.json` pins (table_prefix, buckets) exactly like
   * `ivf_meta.json` / dv_schema.json's bucketing block, so any session
-  * resolves the same spec; compaction is the ordinary
-  * [[DvMaintenance.compactBucketedObject]] stage-and-swap, and the
+  * resolves the same spec; compaction is [[DvMaintenance.rewriteObject]],
+  * the one stage-and-swap every persistent rewrite uses, and the
   * per-object writer lease covers appends like every vault object.
   *
   * Single writer per sink dir: the sink's foreachBatch hook IS the
@@ -32,17 +32,7 @@ object SinkRepo {
   // for local paths only, while the data layer underneath already handles
   // any supported filesystem URI — a sink on hdfs://s3 would have failed
   // at the META read, the confusing place).
-  private def metaPath(dir: String) = s"$dir/sink_meta.json"
-
-  /** Unique, rebuild-stable catalog prefix per sink dir (the
-    * DvGo.tablePrefix derivation): normalized-path hash, so two sinks in
-    * different dirs never collide and a re-opened sink reuses its entry.
-    */
-  private def tablePrefix(dir: String): String = {
-    val canonical = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-    "graft_sink_" + java.util.UUID.nameUUIDFromBytes(canonical.getBytes).toString
-      .replace("-", "").take(12) + "_"
-  }
+  private val MetaName = "sink_meta.json"
 
   /** The sink's bucket spec, creating the meta on first call. Idempotent;
     * `buckets` only applies to the creating call (later calls read the
@@ -53,41 +43,27 @@ object SinkRepo {
     * live outside `rows/`, so adopting it silently would make every stored
     * row invisible to the anti-join (a resumed checkpoint would re-append
     * previously flagged pairs). Fail loudly instead of violating
-    * exactly-once. Meta creation is write-temp + rename: rename does not
-    * overwrite, so two sessions racing a fresh sink both end up reading
-    * ONE winner's spec instead of interleaving a partial write.
+    * exactly-once. The meta is pinned create-once
+    * ([[DvLoader.pinBucketing]]).
     */
   def ensure(s: SparkSession, dir: String, buckets: Int = 8): DvLoader.Bucketing = {
-    val mp = new org.apache.hadoop.fs.Path(metaPath(dir))
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mp)) {
-      val dirP = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(dirP)) {
-        val legacy = fs.listStatus(dirP).exists(st =>
-          st.isFile && st.getPath.getName.startsWith("part-"))
-        require(!legacy,
-          s"$dir holds top-level parquet files but no sink_meta.json — this is a " +
-            "pre-SinkRepo plain-parquet sink; migrate its files into " +
-            s"$dir/$Obj (and write a sink_meta.json) before reopening, or the " +
-            "stored rows would be invisible to the exactly-once anti-join")
-      }
-      fs.mkdirs(dirP)
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        s".sink_meta.json.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      scala.util.Using.resource(fs.create(tmp, false)) { out =>
-        out.write(s"""{"table_prefix": "${tablePrefix(dir)}", "buckets": $buckets}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      // rename refuses an existing destination: the loser of a creation
-      // race cleans up its temp and reads the winner's pinned spec
-      if (!fs.rename(tmp, mp)) fs.delete(tmp, false)
+    val dirP = new org.apache.hadoop.fs.Path(dir)
+    val fs = dirP.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, MetaName)) && fs.exists(dirP)) {
+      val legacy = fs.listStatus(dirP).exists(st =>
+        st.isFile && st.getPath.getName.startsWith("part-"))
+      require(!legacy,
+        s"$dir holds top-level parquet files but no $MetaName — this is a " +
+          "pre-SinkRepo plain-parquet sink; migrate its files into " +
+          s"$dir/$Obj (and write a $MetaName) before reopening, or the " +
+          "stored rows would be invisible to the exactly-once anti-join")
     }
-    bucketing(s, dir).get
+    DvLoader.pinBucketing(s, dir, MetaName, buckets)
   }
 
   /** The pinned bucket spec, None before [[ensure]] created the meta. */
   def bucketing(s: SparkSession, dir: String): Option[DvLoader.Bucketing] =
-    DvLoader.readBucketing(s, metaPath(dir))
+    DvLoader.readBucketing(s, s"$dir/$MetaName")
 
   /** The exactly-once micro-batch plan: `rows` whose `keys` the sink has
     * not stored yet ([[DvLoader.novelRows]] on the bucketed object).
@@ -107,10 +83,11 @@ object SinkRepo {
     */
   def read(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/$Obj")
 
-  /** One-file-per-bucket rewrite — the vault compaction applied to the
-    * sink's stored object (same crash ladder, same lease).
+  /** One-file-per-bucket rewrite — [[DvMaintenance.rewriteObject]] (the
+    * vault compaction's stage-and-swap, lease and crash ladder) applied to
+    * the sink's stored object.
     */
   def compact(s: SparkSession, dir: String, keys: Seq[String]): (Long, Long) =
-    DvMaintenance.compactBucketedObject(s, dir, Obj, keys,
-      bucketing(s, dir).getOrElse(sys.error(s"sink repo at $dir not initialized")))
+    DvMaintenance.rewriteObject(s, dir, Obj, keys,
+      bucketing(s, dir).getOrElse(sys.error(s"sink repo at $dir not initialized")), identity)
 }

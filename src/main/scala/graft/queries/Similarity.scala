@@ -1153,7 +1153,7 @@ object Similarity extends QueryModule {
   // dropped without a corpus-scale driver collect.
   private def annIvfRetrain(s: SparkSession, dir: String): DataFrame = {
     val out = java.nio.file.Files.createTempDirectory("graft_ivf_retrain_").toString
-    val prefix = s"graft_ivfrt_${java.lang.Long.toHexString(System.nanoTime())}_"
+    val prefix = graft.dv.DvLoader.tablePrefix(out)
     try {
       // the session-memoized quantized corpus: appendBatch's assignment,
       // the retrain's Lloyd rounds, the reassignment rewrite and the drift
@@ -1161,7 +1161,7 @@ object Similarity extends QueryModule {
       // instead of re-quantizing from parquet per pass (measured 4.5 s ->
       // ~2.8 s isolated at sf0.1; same qExpr, bit-identical assignments)
       val vecs = qVecs(s, dir)
-      graft.dv.IvfIndexRepo.init(s, out, ivfStoredCentroids(s, dir), prefix, buckets = 8)
+      graft.dv.IvfIndexRepo.init(s, out, ivfStoredCentroids(s, dir), buckets = 8)
       graft.dv.IvfIndexRepo.appendBatch(s, out, vecs, "t0")
       graft.dv.IvfIndexRepo.retrainIvf(s, out, vecs)
       graft.dv.IvfIndexRepo.storedIndex(s, out)

@@ -1018,8 +1018,8 @@ object Streams {
     * (graft.dv.IvfIndexRepo), the exactly-once append goes THROUGH the
     * session catalog (never plain parquet into a bucketed layout), so
     * batch loads (IvfIndexRepo.appendBatch) and this stream maintain THE
-    * SAME index, and DvMaintenance.compactBucketedObject covers it like
-    * any vault object. Per micro-batch the K-scale centroid read
+    * SAME index, and DvMaintenance.rewriteObject compacts it like any
+    * vault object. Per micro-batch the K-scale centroid read
     * refreshes from the repo — a retrain that rewrites `ivf_centroids`
     * flows into subsequent batches without restarting the stream.
     *

@@ -373,6 +373,45 @@ class PipelineSpec extends SparkSpec {
       ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-02-01 00:00:00", "b1")
       assert(cl.calls.get == 2, "a turn without a responses dir took the fast path")
       assert(Files.exists(Paths.get(st.responsesDir)))
+      // every current column of the table is classified again, not only
+      // the columns opened at this scanTs (none were)
+      assert(spark.read.parquet(st.responsesDir).count() == cust.columns.length,
+        "the rewritten responses miss current columns of customer")
     } finally DvLoader.deletePath(Paths.get(tmp))
+  }
+
+  test("continuous pipeline: a drift turn that crashes mid-swap of the catalog is repaired by its replay") {
+    val scope = Set("hub_customer", "sat_customer", "sat_customer_sensitive")
+    val (t0, t1) = ("2024-01-01 00:00:00", "2024-02-01 00:00:00")
+    val cust = Tables.load(spark, sfDir, "customer")
+    val drifted = cust.withColumn("c_acctbal", col("c_acctbal").cast("string"))
+    /** Catalog rows (SCD2 history included), responses rows, hub/sat counts. */
+    def outcome(st: ContinuousPipeline.State) = (
+      spark.read.parquet(st.catalogDir).collect().map(_.toString).sorted.toSeq,
+      spark.read.parquet(st.responsesDir).collect().map(_.toString).sorted.toSeq,
+      scope.toSeq.sorted.map(o => o -> spark.read.parquet(s"${st.repoDir}/$o").count()))
+    val (refTmp, ref) = loopState("graft_pipeline_ladder_ref", scope, RulesClassifier)
+    val tmps = scala.collection.mutable.ArrayBuffer(refTmp)
+    try {
+      ContinuousPipeline.onBatch(spark, ref, "customer", cust, t0, "b0")
+      ContinuousPipeline.onBatch(spark, ref, "customer", drifted, t1, "drift")
+      val want = outcome(ref)
+      assert(spark.read.parquet(ref.catalogDir).filter(col("current_flag") === "N").count() == 1,
+        "the reference run closed no catalog version")
+      // the two crash states of the drift turn's catalog swap: (a) the
+      // merged catalog staged beside the live dir, not swapped; (b) the
+      // live dir moved aside to __old, the stage not yet moved in
+      for (movedAside <- Seq(false, true)) {
+        val (tmp, st) = loopState(s"graft_pipeline_ladder_$movedAside", scope, RulesClassifier)
+        tmps += tmp
+        ContinuousPipeline.onBatch(spark, st, "customer", cust, t0, "b0")
+        copyDir(ref.catalogDir, s"${st.catalogDir}__compact")
+        if (movedAside) Files.move(Paths.get(st.catalogDir), Paths.get(s"${st.catalogDir}__old"))
+        ContinuousPipeline.onBatch(spark, st, "customer", drifted, t1, "drift")
+        assert(outcome(st) == want, s"replay after crash state movedAside=$movedAside diverged")
+        assert(!Files.exists(Paths.get(s"${st.catalogDir}__compact")) &&
+          !Files.exists(Paths.get(s"${st.catalogDir}__old")), "swap debris survived the replay")
+      }
+    } finally tmps.foreach(t => DvLoader.deletePath(Paths.get(t)))
   }
 }

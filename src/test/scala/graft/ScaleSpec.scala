@@ -1,22 +1,28 @@
 package graft
 
-import graft.dv.{DvBuild, DvPlanner, Scale}
+import graft.dv.{DvBuild, DvGo, DvLoader, Scale}
 import org.apache.spark.sql.functions._
 
 class ScaleSpec extends SparkSpec {
 
   test("bucketed hub: incremental anti-join has no Exchange on the stored side") {
-    val hub = DvBuild.hub(spark, sfDir, DvPlanner.hubCustomer)
-    Scale.writeBucketed(hub, "hub_customer_bucketed", "hub_customer_hk", buckets = 8)
-    val batch = Tables.load(spark, sfDir, "customer")
-      .select(graft.functions.GraftFunctions.dvHash(Seq(col("c_custkey").cast("string")))
-        .as("hub_customer_hk"))
-    val inc = Scale.incrementAgainstBucketed(spark, batch, "hub_customer_bucketed", "hub_customer_hk")
-    val physical = inc.queryExecution.executedPlan.toString
-    // the bucketed (right/stored) side must be scan->join with no shuffle:
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(physical).size
-    assert(exchanges <= 1, s"expected at most the batch-side exchange, got:\n$physical")
-    assert(inc.count() == 0) // same keys -> nothing new
+    val out = java.nio.file.Files.createTempDirectory("graft_scale_bucketed").toString
+    try {
+      DvGo.go(spark, sfDir, out, include = Set("hub_customer"), bucketed = true, buckets = 8)
+      val batch = Tables.load(spark, sfDir, "customer")
+        .select(graft.functions.GraftFunctions.dvHash(Seq(col("c_custkey").cast("string")))
+          .as("hub_customer_hk"))
+      val inc = DvLoader.novelRows(spark, batch, s"$out/hub_customer", Seq("hub_customer_hk"),
+        DvLoader.readSchema(spark, out).bucketing)
+      val physical = inc.queryExecution.executedPlan.toString
+      // the bucketed (right/stored) side must be scan->join with no shuffle:
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(physical).size
+      assert(exchanges <= 1, s"expected at most the batch-side exchange, got:\n$physical")
+      assert(inc.count() == 0) // same keys -> nothing new
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS ${DvLoader.tablePrefix(out)}hub_customer")
+      DvLoader.deletePath(java.nio.file.Paths.get(out))
+    }
   }
 
   test("bloom-prefiltered anti-join prunes the stored side and keeps the result exact") {

@@ -595,11 +595,11 @@ class SimilaritySpec extends SparkSpec {
   test("repo recall probe: pair-set parity with ann_cosine_ivf_probe on a full-corpus repo") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_recall").toString
-    val prefix = s"ivfrc${System.nanoTime()}_"
+    val prefix = graft.dv.DvLoader.tablePrefix(dir)
     try {
       val vecs = Tables.load(spark, sfDir, "embeddings").select("vec_id", "embedding")
       graft.dv.IvfIndexRepo.init(spark, dir,
-        Similarity.ivfCentroids(spark, sfDir), prefix, buckets = 4)
+        Similarity.ivfCentroids(spark, sfDir), buckets = 4)
       graft.dv.IvfIndexRepo.appendBatch(spark, dir, vecs, "t0")
       val repoPairs = Similarity.repoIvfProbePairs(spark, dir, vecs)
         .select("query_id", "rank", "neighbor_id", "cosine")

@@ -62,8 +62,7 @@ class StreamPlanSweepSpec extends SparkSpec {
       val cents = graft.queries.Similarity.ivfStoredCentroids(spark, sfDir)
       // seed one real index append so the swept repo plan carries the
       // catalog-read anti-join
-      graft.dv.IvfIndexRepo.init(spark, s"$dir/ivfrepo", cents,
-        s"sweepivf${System.nanoTime()}_", 4)
+      graft.dv.IvfIndexRepo.init(spark, s"$dir/ivfrepo", cents, 4)
       graft.dv.IvfIndexRepo.appendBatch(spark, s"$dir/ivfrepo", emb.limit(20), "t0")
     }
     locally {

@@ -712,14 +712,14 @@ class StreamingSpec extends SparkSpec {
     val cents = Similarity.ivfStoredCentroids(spark, sfDir)
     val storedAgg = Streams.ivfStoredAgg(stored, cents)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_incr_stream").toString
-    val prefix = s"ivfincr${System.nanoTime()}_"
+    val prefix = graft.dv.DvLoader.tablePrefix(dir)
     val driftPath = s"$dir/drift"
     val rows = arriving.collect().map(r =>
       SVec(r.getLong(0), r.getAs[scala.collection.Seq[Float]](1).toSeq))
     val (b1, b2) = rows.partition(_.vec_id % 20 == Similarity.IncrRes) // two micro-batches
     assert(b1.nonEmpty && b2.nonEmpty, "batch split degenerate")
     try {
-      IvfIndexRepo.init(spark, dir, cents, prefix, buckets = 4)
+      IvfIndexRepo.init(spark, dir, cents, buckets = 4)
       val mem = MemoryStream[SVec]
       val q = Streams.ivfIncrRepoSink(mem.toDF(), storedAgg, dir, driftPath,
         s"$dir/ckpt").start()
@@ -773,8 +773,8 @@ class StreamingSpec extends SparkSpec {
     val arriving = vecs.filter(col("vec_id") % Similarity.IncrMod === Similarity.IncrRes)
     val cents = Similarity.ivfStoredCentroids(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_repo").toString
-    val prefix = s"ivfrepo${System.nanoTime()}_"
-    IvfIndexRepo.init(spark, dir, cents, prefix, buckets = 4)
+    val prefix = graft.dv.DvLoader.tablePrefix(dir)
+    IvfIndexRepo.init(spark, dir, cents, buckets = 4)
     // the stored quantizer round-trips in the kernel's exact literal form
     assert(IvfIndexRepo.centroids(spark, dir) == cents)
     // BATCH face: load the first arrival slice, then re-deliver it —
@@ -833,9 +833,9 @@ class StreamingSpec extends SparkSpec {
     val stored = vecs.filter(col("vec_id") % Similarity.IncrMod =!= Similarity.IncrRes)
     val cents = Similarity.ivfStoredCentroids(spark, sfDir) // the stale, pre-drift quantizer
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_retrain_loop").toString
-    val prefix = s"ivfrt${System.nanoTime()}_"
+    val prefix = graft.dv.DvLoader.tablePrefix(dir)
     try {
-      IvfIndexRepo.init(spark, dir, cents, prefix, buckets = 4)
+      IvfIndexRepo.init(spark, dir, cents, buckets = 4)
       assert(IvfIndexRepo.appendBatch(spark, dir, stored, "t0") == stored.count())
       val storedAgg = Streams.ivfStoredAgg(stored, cents)
       // a calm re-delivery-shaped batch (== stored): drift is EXACTLY zero
