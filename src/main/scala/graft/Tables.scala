@@ -176,6 +176,12 @@ object Tables {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+    // load-bearing for bucketed rewrites (DvMaintenance.rewriteObject): a
+    // rewrite reads its object's bucketed scan so the planner can drop the
+    // writer's repartition, and with auto bucketed scan on Spark then turns
+    // that scan off (no operator left needs its partitioning), scattering
+    // each bucket over several tasks and files; the rewrite refuses that
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false",
     "spark.io.compression.codec" -> ioCodecFor(dataDirs),
     // local-mode resilience: the executor IS the driver, so a heartbeat
     // timeout can only be a false positive (a long GC pause or a host-level

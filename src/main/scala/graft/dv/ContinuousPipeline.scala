@@ -41,6 +41,13 @@ object ContinuousPipeline {
                          classifier: Classifier = RulesClassifier,
                          erasureDir: Option[String] = None)
 
+  /** The erasure processed log `<ed>/processed`, read with the schema
+    * [[purgeAndMark]] writes: loop state is graft-written, so its reads
+    * skip the parquet-footer job of schema inference.
+    */
+  private[dv] def readProcessed(s: SparkSession, ed: String): DataFrame =
+    s.read.schema("obj STRING, hk BINARY, purged_ts STRING").parquet(s"$ed/processed")
+
   /** A batch's live schema as catalog (column_name, ordinal, data_type) rows. */
   private def liveColumns(batch: DataFrame): Seq[(String, Int, String)] =
     batch.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
@@ -127,9 +134,13 @@ object ContinuousPipeline {
   private def loopStateCurrent(s: SparkSession, st: State, table: String, batch: DataFrame,
                                scanTs: String): Boolean =
     DvLoader.pathExists(s, st.catalogDir) && DvLoader.pathExists(s, st.responsesDir) && {
-      val slice = s.read.parquet(st.catalogDir)
+      // typed as CatalogScd2 writes them; valid_to is left out, because its
+      // null literal is stored as BOOLEAN until a version closes
+      val slice = s.read.schema("table_name STRING, column_name STRING, ordinal INT, " +
+          "data_type STRING, valid_from STRING, current_flag STRING, deleted_flag STRING")
+        .parquet(st.catalogDir)
         .filter(col("table_name") === table && col("current_flag") === "Y")
-        .select(col("column_name"), col("ordinal").cast("int"), col("data_type"),
+        .select(col("column_name"), col("ordinal"), col("data_type"),
           col("deleted_flag"), col("valid_from"))
         .collect()
       val live = liveColumns(batch)
@@ -254,21 +265,25 @@ object ContinuousPipeline {
   final case class Erasure(obj: String, hk: Array[Byte])
 
   /** The pending set, materialized driver-side in one snapshot (the
-    * request feed is metadata-scale: one row per erasure request).
-    * Deterministically ordered by (obj, hk hex).
+    * request feed is metadata-scale: one row per erasure request): the
+    * distinct requests minus the processed log, diffed on the driver.
+    * Deterministically ordered by (obj, hk hex). The requests are caller
+    * input, so their schema is read from the files (a malformed feed fails
+    * here, loudly); the processed log is graft's own.
     */
   private[graft] def pendingErasures(s: SparkSession, ed: String): Seq[Erasure] =
     if (!DvLoader.pathExists(s, s"$ed/requests")) Nil
     else {
-      val reqs = s.read.parquet(s"$ed/requests")
-      val pending =
-        if (DvLoader.pathExists(s, s"$ed/processed"))
-          reqs.join(s.read.parquet(s"$ed/processed").select("obj", "hk"),
-            Seq("obj", "hk"), "left_anti")
-        else reqs
-      pending.select("obj", "hk").distinct().collect()
-        .map(r => Erasure(r.getString(0), r.getAs[Array[Byte]](1)))
-        .sortBy(e => (e.obj, e.hk.map(b => f"$b%02x").mkString)).toSeq
+      def keyed(df: DataFrame): Seq[((String, String), Erasure)] =
+        df.select("obj", "hk").collect().toSeq.map { r =>
+          val e = Erasure(r.getString(0), r.getAs[Array[Byte]](1))
+          (e.obj, e.hk.map(b => f"$b%02x").mkString) -> e
+        }
+      val done =
+        if (DvLoader.pathExists(s, s"$ed/processed")) keyed(readProcessed(s, ed)).map(_._1).toSet
+        else Set.empty[(String, String)]
+      keyed(s.read.parquet(s"$ed/requests")).toMap.removedAll(done)
+        .toSeq.sortBy(_._1).map(_._2)
     }
 
   /** Purge exactly `pending` and stamp exactly `pending` processed —

@@ -158,16 +158,22 @@ object DvLoader {
   }
 
   /** The one bucketed OVERWRITE writer (the build's objects and every
-    * rewrite's stage): repartition by the bucket keys first — repartition's
-    * hash IS the bucket-id hash (both HashPartitioning over the same
-    * columns), so each task owns exactly one bucket and the writer emits
-    * ONE file per bucket. The caller names the table in `saveAsTable`, so
-    * the write's job carries the caller's call site. Appends go through
-    * [[appendObject]] instead: they must not repartition.
+    * rewrite's stage): repartition by the bucket keys, then coalesce to
+    * at most `defaultParallelism` tasks. Repartition's hash IS the
+    * bucket-id hash (both HashPartitioning over the same columns), and
+    * coalescing only merges whole partitions, so every bucket is written
+    * by exactly one task and the writer emits ONE file per bucket from at
+    * most nproc tasks. When `df` is already partitioned by bucket (a
+    * rewrite's bucketed catalog scan), the planner drops the repartition
+    * and no shuffle runs; otherwise (the build) it shuffles once. The
+    * caller names the table in `saveAsTable`, so the write's job carries
+    * the caller's call site. Appends go through [[appendObject]] instead:
+    * they must not repartition.
     */
   private[dv] def bucketedWriter(df: DataFrame, keys: Seq[String], buckets: Int,
                                  path: String): DataFrameWriter[Row] =
     df.repartition(buckets, keys.map(col): _*)
+      .coalesce(math.min(buckets, df.sparkSession.sparkContext.defaultParallelism))
       .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
@@ -269,8 +275,8 @@ object DvLoader {
     def suppress(obj: String, hkName: String, rows: DataFrame): DataFrame =
       suppressDir.filter(ed => obj.endsWith("_sensitive") && pathExists(s, s"$ed/processed"))
         .map { ed =>
-          rows.join(broadcast(s.read.parquet(s"$ed/processed")
-              .filter(col("obj") === obj).select(col("hk").as(hkName)).distinct()),
+          rows.join(broadcast(ContinuousPipeline.readProcessed(s, ed)
+              .filter(col("obj") === obj).select(col("hk").as(hkName))),
             Seq(hkName), "left_anti")
         }.getOrElse(rows)
     schema.hubs.filter(_.sourceTable == tableName).map(h =>

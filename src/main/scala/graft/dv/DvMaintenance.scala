@@ -10,13 +10,16 @@ import org.apache.spark.sql.SparkSession
   * after N loads every bucket of a vault object holds N small files, and
   * scan fan-in (open cost, footer reads, row-group fragmentation) degrades
   * even though the bucketed layout is still correct. Compaction rewrites
-  * the object to exactly one file per bucket: the rewrite repartitions by
-  * the bucket keys — Spark's repartition hash IS the bucket-id hash
-  * (both are HashPartitioning over the same columns), so partition i
-  * holds exactly bucket i and the bucketed writer emits one file per
-  * bucket. That one co-partitioned exchange is the minimum any
-  * defragmentation pays; every subsequent incremental load is
-  * shuffle-free again.
+  * the object to exactly one file per bucket without a shuffle: the
+  * rewrite reads the object through its bucketed catalog table, whose
+  * scan is already hash-partitioned by the bucket keys (one partition
+  * per bucket, every append's file of that bucket in it), so the
+  * planner drops the writer's repartition and each of at most nproc
+  * tasks merges whole buckets ([[DvLoader.bucketedWriter]]). That holds
+  * only while `spark.sql.sources.bucketing.autoBucketedScan.enabled` is
+  * false (a [[graft.Tables.sessionConfs]] default): with it on, Spark
+  * turns the bucketed scan off once the repartition is gone and buckets
+  * scatter across tasks, which [[rewriteObject]] refuses before its swap.
   *
   * Every persistent REWRITE in graft goes through one primitive here,
   * [[swap]] (stage beside, move live aside, move stage in, under the
@@ -177,39 +180,29 @@ object DvMaintenance {
     *
     * Guards: the object must be a `_sensitive` satellite (refuse to purge
     * structural objects), and ghost rows (record_source = SYSTEM) survive
-    * unconditionally even if a victim hk collides with one. The victims
-    * side is broadcast into an anti-join (erasure requests are
-    * request-scale, never corpus-scale). Returns (rows_before,
-    * rows_after). Crash safety: [[swap]]'s, like compaction.
+    * unconditionally even if a victim hk collides with one. The purge is
+    * ONE pass that keeps the bucket partitioning: a broadcast anti-join
+    * against the victims (request-scale, never corpus-scale) whose
+    * condition exempts ghosts, so the rewrite stays shuffle-free like
+    * compaction. Returns (rows_before, rows_after), observed on that
+    * pass. Crash safety: [[swap]]'s, like compaction.
     */
   def purgeSensitive(s: SparkSession, repoDir: String, obj: String,
                      victims: org.apache.spark.sql.DataFrame,
                      hkCol: String): (Long, Long) = {
+    import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     require(obj.endsWith("_sensitive"),
       s"purgeSensitive: $obj is not a sensitive satellite — logical deletes (dv_sat_status) cover it")
-    // the (before, after) counts ride the rewrite's own write pass as
-    // observed metrics (r14, guide §1.2 step 1 "don't compute things you
-    // throw away"): the previous shape re-read the whole object twice —
-    // two extra passes that at 100 TB are real scans. Each branch is
-    // observed exactly once: before = ghosts + purgeable, after =
-    // survivors + ghosts (ghosts survive unconditionally).
-    val obsG = org.apache.spark.sql.Observation(s"purge_g_${System.nanoTime()}")
-    val obsP = org.apache.spark.sql.Observation(s"purge_p_${System.nanoTime()}")
-    val obsS = org.apache.spark.sql.Observation(s"purge_s_${System.nanoTime()}")
+    val (obsBefore, obsAfter) = (Observation(), Observation())
     val (keys, b) = schemaSpec(s, repoDir, obj)
-    rewriteObject(s, repoDir, obj, keys, b, df => {
-      val ghosts = df.filter(col("record_source") === lit(DvDefaults.GhostSource))
-        .observe(obsG, count(lit(1)).as("n"))
-      val purgeable = df.filter(col("record_source") =!= lit(DvDefaults.GhostSource))
-        .observe(obsP, count(lit(1)).as("n"))
-      purgeable.join(broadcast(victims.select(col(hkCol)).distinct()), Seq(hkCol), "left_anti")
-        .observe(obsS, count(lit(1)).as("n"))
-        .unionByName(ghosts)
-    })
-    val (g, p, surv) = (obsG.get("n").asInstanceOf[Long],
-      obsP.get("n").asInstanceOf[Long], obsS.get("n").asInstanceOf[Long])
-    (g + p, surv + g)
+    rewriteObject(s, repoDir, obj, keys, b, df =>
+      df.observe(obsBefore, count(lit(1)).as("n"))
+        .join(broadcast(victims.select(col(hkCol).as("victim_hk"))),
+          col(hkCol) === col("victim_hk") && col("record_source") =!= lit(DvDefaults.GhostSource),
+          "left_anti")
+        .observe(obsAfter, count(lit(1)).as("n")))
+    (obsBefore.get("n").asInstanceOf[Long], obsAfter.get("n").asInstanceOf[Long])
   }
 
   /** A schema repo object's anti-join keys and the repo's bucket spec. */
@@ -224,36 +217,50 @@ object DvMaintenance {
     * (`identity`), erasure, the IVF retrain's cell reassignment. Returns
     * (files_before, files_after).
     *
-    * The stage reads the PLAIN parquet path, not the catalog table: a
-    * bucketed-table read of an appended object advertises hash
-    * partitioning while actually splitting buckets per append file set,
-    * which lets the optimizer elide the repartition and defeats the
-    * consolidation. Only the staging table's catalog entry is dropped;
-    * the live table keeps its entry (the transforms keep the schema) and
-    * is refreshed after the swap, or registered if this session lacks it.
+    * The stage reads the live object through its catalog table (listing
+    * refreshed first, registered if this session lacks it), so a
+    * `transform` that keeps the bucket partitioning writes each bucket
+    * from one task with no shuffle, and one that moves it (a join that
+    * repartitions) keeps the writer's repartition. Before the swap the
+    * stage must hold at most one data file per bucket id; otherwise the
+    * rewrite fails, leaving the live object untouched. Only the staging
+    * table's catalog entry is dropped; the live table keeps its entry
+    * (the transforms keep the schema) and is refreshed after the swap.
     */
   def rewriteObject(s: SparkSession, repoDir: String, obj: String,
                     keys: Seq[String], b: DvLoader.Bucketing,
                     transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) = {
     val table = s"${b.tablePrefix}$obj"
     val path = s"$repoDir/$obj"
-    def dataFiles(): Long = {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(path))) { w =>
-        w.iterator().asScala.count(f => f.getFileName.toString.startsWith("part-")).toLong
-      }
-    }
-    val before = swap(path) { stage =>
+    val counts = swap(path) { stage =>
       val staging = s"${table}__compact"
       s.sql(s"DROP TABLE IF EXISTS $staging")
-      val n = dataFiles()
-      DvLoader.bucketedWriter(transform(s.read.parquet(path)), keys, b.buckets, stage)
-        .saveAsTable(staging)
-      s.sql(s"DROP TABLE IF EXISTS $staging")
-      n
+      val before = dataFiles(s, path).size
+      // a listing cached before another session appended would hide rows
+      if (s.catalog.tableExists(table)) s.catalog.refreshTable(table)
+      try DvLoader.bucketedWriter(transform(DvLoader.storedObject(s, repoDir, obj, keys, b)),
+          keys, b.buckets, stage).saveAsTable(staging)
+      finally s.sql(s"DROP TABLE IF EXISTS $staging")
+      val staged = dataFiles(s, stage)
+      val split = staged.groupBy(org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId)
+        .collect { case (id, fs) if fs.size > 1 => id.fold("none")(_.toString) }
+      if (split.nonEmpty) throw new IllegalStateException(
+        s"rewrite of $path staged more than one file for bucket(s) ${split.toSeq.sorted.mkString(", ")} " +
+          "— the bucketed scan was turned off; run with " +
+          "spark.sql.sources.bucketing.autoBucketedScan.enabled=false (graft.Tables.sessionConfs)")
+      (before.toLong, staged.size.toLong)
     }
-    if (s.catalog.tableExists(table)) s.catalog.refreshTable(table)
-    else DvLoader.registerBucketed(s, repoDir, obj, keys, b)
-    (before, dataFiles())
+    s.catalog.refreshTable(table)
+    counts
+  }
+
+  /** Names of the data files (`part-*`) under `dir`, listed through the
+    * session's Hadoop FS.
+    */
+  private def dataFiles(s: SparkSession, dir: String): List[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val it = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.getName)
+      .filter(_.startsWith("part-")).toList
   }
 }

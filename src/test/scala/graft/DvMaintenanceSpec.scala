@@ -28,15 +28,56 @@ class DvMaintenanceSpec extends SparkSpec {
     }
   }
 
-  /** Fragmented bucketed repo fixture; returns (repoDir, tableName). */
-  private def fragmentedRepo(tag: String): (String, String) = {
+  /** Fragmented bucketed repo fixture (every object of `include` holds a
+    * build file set and one appended file set); returns (repoDir,
+    * hub tableName).
+    */
+  private def fragmentedRepo(tag: String, buckets: Int = 4,
+                             include: Set[String] = Set("hub_customer")): (String, String) = {
     val out = Files.createTempDirectory(s"graft_compact_$tag").toString
-    DvGo.go(spark, sfDir, out, include = Set("hub_customer"), bucketed = true, buckets = 4)
+    DvGo.go(spark, sfDir, out, include = include, bucketed = true, buckets = buckets)
     val prefix = DvLoader.readSchema(spark, out).bucketing.get.tablePrefix
     val cust = Tables.load(spark, sfDir, "customer")
     DvLoader.streamTableLoadBatch(spark,
       cust.withColumn("c_custkey", col("c_custkey") + 1000000L), "customer", out, "b1")
     (out, s"${prefix}hub_customer")
+  }
+
+  /** Runs `body` and returns its result with the node names of every
+    * physical plan it executed (initial and adaptive updates) and the
+    * task count of every stage it ran.
+    */
+  private def observed[A](body: => A): (A, Seq[String], Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val nodes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    def walk(p: SparkPlanInfo): Unit = { nodes.add(p.nodeName); p.children.foreach(walk) }
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        tasks.add(e.stageInfo.numTasks)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => walk(x.sparkPlanInfo)
+        case x: SparkListenerSQLAdaptiveExecutionUpdate => walk(x.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (r, nodes.asScala.toSeq, tasks.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def partFiles(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(Files.walk(Paths.get(dir))) { w =>
+      w.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq.sorted
+    }
   }
 
   private def contentHash(table: String): (Long, Long) = {
@@ -99,6 +140,65 @@ class DvMaintenanceSpec extends SparkSpec {
       assert(after == 4, s"expected one file per bucket, files=$after")
       assert(contentHash(table) == want, "object content changed across recovery")
       assert(!Files.exists(Paths.get(s"$out/hub_customer__old")))
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      DvLoader.deletePath(Paths.get(out))
+    }
+  }
+
+  test("compaction and erasure merge each bucket in place: no shuffle, min(buckets, nproc) write tasks") {
+    import spark.implicits._
+    val obj = "sat_customer_sensitive"
+    val hk = "hub_customer_hk"
+    val (out, table) = fragmentedRepo("inplace", buckets = 8, include = Set("hub_customer", obj))
+    val satT = table.replace("hub_customer", obj)
+    val writeTasks = math.min(8, spark.sparkContext.defaultParallelism)
+    try {
+      assert(writeTasks < 8, "the fixture needs more buckets than cores to tell them apart")
+      assert(partFiles(s"$out/hub_customer").size > 8 && partFiles(s"$out/$obj").size > 8,
+        "vacuous compaction — the fixture is not fragmented")
+      val want = contentHash(table)
+      val ((_, after), nodes, tasks) = observed(DvMaintenance.compactBucketed(spark, out, "hub_customer"))
+      assert(after == 8 && partFiles(s"$out/hub_customer").size == 8)
+      assert(contentHash(table) == want, "compaction changed the object's rows")
+      assert(nodes.contains("WriteFiles") && !nodes.contains("Exchange"),
+        s"compaction shuffled: ${nodes.mkString(", ")}")
+      assert(tasks.nonEmpty && tasks.forall(_ == writeTasks), s"compaction stage tasks: $tasks")
+      val sourced = spark.table(satT).filter(col("record_source") =!= "SYSTEM")
+      val victims = sourced.select(col(hk)).distinct().orderBy(hk).limit(10)
+        .collect().map(_.getAs[Array[Byte]](0)).toSeq
+      val n = spark.table(satT).count()
+      val nVictim = sourced.filter(col(hk).isin(victims: _*)).count()
+      assert(nVictim > 0, "vacuous purge — no victim rows present")
+      val ((b, a), pNodes, pTasks) = observed(
+        DvMaintenance.purgeSensitive(spark, out, obj, victims.toDF(hk), hk))
+      assert(b == n && a == n - nVictim, s"purge counts off: before=$b after=$a")
+      assert(spark.table(satT).count() == a && partFiles(s"$out/$obj").size == 8)
+      assert(pNodes.contains("WriteFiles") && !pNodes.contains("Exchange"),
+        s"erasure shuffled: ${pNodes.mkString(", ")}")
+      assert(pTasks.nonEmpty && pTasks.forall(_ == writeTasks), s"erasure stage tasks: $pTasks")
+    } finally {
+      Seq(table, satT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      DvLoader.deletePath(Paths.get(out))
+    }
+  }
+
+  test("a rewrite whose bucketed scan was turned off fails loudly before its swap") {
+    val (out, table) = fragmentedRepo("autoscan")
+    val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    try {
+      val (want, files) = (contentHash(table), partFiles(s"$out/hub_customer"))
+      val prev = spark.conf.get(conf)
+      spark.conf.set(conf, "true")
+      val e = try intercept[IllegalStateException] {
+        DvMaintenance.compactBucketed(spark, out, "hub_customer")
+      } finally spark.conf.set(conf, prev)
+      assert(e.getMessage.contains(conf), e.getMessage)
+      assert(partFiles(s"$out/hub_customer") == files, "the refused rewrite touched the live object")
+      assert(contentHash(table) == want)
+      // the lease was released: with graft's confs the retry compacts
+      val (_, after) = DvMaintenance.compactBucketed(spark, out, "hub_customer")
+      assert(after == 4 && contentHash(table) == want)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       DvLoader.deletePath(Paths.get(out))
