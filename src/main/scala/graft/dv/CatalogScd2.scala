@@ -20,11 +20,17 @@ object CatalogScd2 {
   private val Key = Seq("table_name", "column_name")
   private val Attrs = Seq("ordinal", "data_type")
 
+  /** valid_to of an open version: a STRING null. An untyped null literal
+    * is NullType, which parquet stores as BOOLEAN until a merge closes a
+    * version, so the catalog would not read under one declared schema.
+    */
+  private def openValidTo = lit(null).cast("string").as("valid_to")
+
   /** Empty-state bootstrap: every snapshot row becomes a current version. */
   def init(snapshot: DataFrame, ts: String): DataFrame =
     snapshot.select(
       (Key ++ Attrs).map(col) :+
-        lit(ts).as("valid_from") :+ lit(null: String).as("valid_to") :+
+        lit(ts).as("valid_from") :+ openValidTo :+
         lit("Y").as("current_flag") :+ lit("N").as("deleted_flag"): _*)
 
   /** One re-scan merge: previous SCD2 state + fresh snapshot -> new state. */
@@ -56,7 +62,7 @@ object CatalogScd2 {
     // ...and open the new one; brand-new columns open too
     val opened = joined.filter(nKey.isNotNull && (pKey.isNull || changed))
       .select((Key ++ Attrs).map(k => col(s"n.$k")) :+
-        lit(ts).as("valid_from") :+ lit(null: String).as("valid_to") :+
+        lit(ts).as("valid_from") :+ openValidTo :+
         lit("Y").as("current_flag") :+ lit("N").as("deleted_flag"): _*)
     // vanished: keep current but mark deleted
     val deleted = joined.filter(pKey.isNotNull && nKey.isNull)

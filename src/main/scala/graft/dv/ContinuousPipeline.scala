@@ -134,8 +134,7 @@ object ContinuousPipeline {
   private def loopStateCurrent(s: SparkSession, st: State, table: String, batch: DataFrame,
                                scanTs: String): Boolean =
     DvLoader.pathExists(s, st.catalogDir) && DvLoader.pathExists(s, st.responsesDir) && {
-      // typed as CatalogScd2 writes them; valid_to is left out, because its
-      // null literal is stored as BOOLEAN until a version closes
+      // typed as CatalogScd2 writes them; valid_to is not needed here
       val slice = s.read.schema("table_name STRING, column_name STRING, ordinal INT, " +
           "data_type STRING, valid_from STRING, current_flag STRING, deleted_flag STRING")
         .parquet(st.catalogDir)

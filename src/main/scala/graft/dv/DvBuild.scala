@@ -95,13 +95,6 @@ object DvBuild {
     if (ordered) all.orderBy(spec.hkName) else all
   }
 
-  /** Consolidated hub from a DerivedHub's cataloged sources. */
-  def hubMulti(s: SparkSession, dir: String, hub: DerivedHub, loadTs: String = LoadTs,
-               ordered: Boolean = true): DataFrame =
-    hubMultiFrom(s, hub.spec,
-      hub.sources.map(src => (src.table, Tables.load(s, dir, src.table), src.parts)),
-      loadTs, ordered)
-
   /** Satellite load: hash key + hash-diff over canonical descriptors, with
     * raw descriptor columns carried (dv_loader.rs:325-357). Insert-only
     * SCD2: one row per distinct (hk, hd).

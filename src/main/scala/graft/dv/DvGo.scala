@@ -10,8 +10,9 @@ import graft.Tables
   * parquet under `outDir`, write the plan as dv_schema.json (the dv_repo
   * analogue, model/dv_schema.rs), and return a build summary.
   *
-  * At warehouse scale the writers bucket by hash key (`bucketBy` on _hk)
-  * so downstream incremental loads anti-join shuffle-free on the big side.
+  * Every vault is bucketed: the writers bucket by the anti-join keys
+  * (`bucketBy` on _hk) so downstream incremental loads anti-join
+  * shuffle-free on the big side, and maintenance can compact and purge it.
   */
 object DvGo {
   import DvPlanner._
@@ -84,17 +85,22 @@ object DvGo {
     }
   }
 
-  /** One-click build. With `bucketed = true` every vault object is written
-    * bucketed+sorted by its anti-join keys ([[DvLoader.bucketedWriter]],
-    * registered as external tables over `outDir`) — the layout that makes
-    * every subsequent incremental load shuffle-free on the stored side,
-    * the Spark analogue of the reference's insert-into-indexed-table loads
+  /** One-click build. Every vault object is written bucketed+sorted by
+    * its anti-join keys ([[DvLoader.bucketedWriter]], registered as
+    * external tables over `outDir`) — the layout that makes every
+    * subsequent incremental load shuffle-free on the stored side, the
+    * Spark analogue of the reference's insert-into-indexed-table loads
     * (controller/dv_loader.rs:166-199).
+    *
+    * `bucketed` must be true: the unbucketed layout was removed, and the
+    * parameter stays only until its last caller stops passing it.
     */
   def go(s: SparkSession, dir: String, outDir: String, loadTs: String = DvDefaults.LoadTs,
          include: String => Boolean = _ => true,
-         bucketed: Boolean = false, buckets: Int = 64,
+         bucketed: Boolean = true, buckets: Int = 64,
          plan: Option[DvPlan] = None): BuildResult = {
+    require(bucketed, "go(bucketed = false): the unbucketed vault layout was removed; " +
+      "every vault is bucketed")
     val buildId = java.util.UUID.nameUUIDFromBytes(s"graft:$dir:$loadTs".getBytes).toString
     val p = plan.getOrElse(derivedPlan(s, dir))
     // SHARE the classified-source scan across the object materializations
@@ -132,65 +138,51 @@ object DvGo {
     val prefix = DvLoader.tablePrefix(outDir)
     def writeOne(name: String, df: DataFrame): (String, Long) = {
       val obs = org.apache.spark.sql.Observation(s"go_${name}_${System.nanoTime()}")
-      val observed = df.observe(obs, count(lit(1)).as("n"))
-      if (bucketed) {
-        // one file per bucket: without the writer's repartition every
-        // input task fans out into `buckets` files (tasks x buckets small
-        // files per object — measured 2x build wall-time at sf0.1) and
-        // the first compaction pays the same shuffle anyway
-        DvLoader.bucketedWriter(observed, bucketKeys(p, name), buckets, s"$outDir/$name")
-          .saveAsTable(s"$prefix$name")
-      } else {
-        observed.write.mode("overwrite").parquet(s"$outDir/$name")
-      }
+      // one file per bucket: without the writer's repartition every
+      // input task fans out into `buckets` files (tasks x buckets small
+      // files per object — measured 2x build wall-time at sf0.1) and
+      // the first compaction pays the same shuffle anyway
+      DvLoader.bucketedWriter(df.observe(obs, count(lit(1)).as("n")), bucketKeys(p, name),
+        buckets, s"$outDir/$name").saveAsTable(s"$prefix$name")
       name -> obs.get("n").asInstanceOf[Long]
     }
     val counts = try {
-      if (bucketed) {
-        // ADAPTIVELY STAGED bucketed writes (r9 verdict #4): the bucketed
-        // path pays a distinct shuffle AND a bucket repartition shuffle
-        // per object, and with all 11 objects in flight their shuffle
-        // files coexist — measured > 69 GB transient /tmp at sf10 on one
-        // node, the reason the r9 sf10 ratio run failed. Past
-        // SeqThresholdBytes of source parquet the writes go fully
-        // OBJECT-sequential with a ContextCleaner nudge per object, so
-        // peak transient disk is bounded by the largest single object
-        // (measured: sf3 peak 30.4 -> 14.4 GB with zstd; sf10 completes
-        // at 52 GB peak). Below the threshold the original fully-
-        // concurrent shape stands — a cluster deployment sizes the
-        // threshold by executor-local disk instead.
-        val srcBytes = shared.keys.map(t => dirBytes(s, Tables.path(dir, t))).sum
-        if (srcBytes <= SeqThresholdBytes) {
-          // small sources: transient disk is nowhere near the node budget —
-          // keep the fully-concurrent shape (staging + GC nudges measured
-          // +8 s on the sf0.1 bucketed E2E for zero benefit there)
-          Await.result(
-            Future.sequence(builds.map { case (name, df) => Future(writeOne(name, df)) }),
-            Duration.Inf)
-        } else {
-          // past the threshold: fully OBJECT-sequential with a cleaner
-          // nudge per object, bounding peak transient disk by the largest
-          // single object (group order preserved for the summary)
-          val groups = builds.groupBy { case (name, _) => objectSourceTable(p, name) }
-          val groupOrder = builds.map { case (name, _) => objectSourceTable(p, name) }.distinct
-          val got = groupOrder.flatMap { t =>
-            groups(t).map { case (name, df) =>
-              val r = writeOne(name, df)
-              System.gc() // release finished shuffle refs -> ContextCleaner deletes files
-              r
-            }
-          }.toMap
-          builds.map { case (name, _) => name -> got(name) }
-        }
-      } else {
-        // non-bucketed: one distinct-shuffle per object, all concurrent
+      // ADAPTIVELY STAGED bucketed writes (r9 verdict #4): each object
+      // pays a distinct shuffle AND a bucket repartition shuffle, and
+      // with all 11 objects in flight their shuffle files coexist —
+      // measured > 69 GB transient /tmp at sf10 on one node, the reason
+      // the r9 sf10 ratio run failed. Past SeqThresholdBytes of source
+      // parquet the writes go fully OBJECT-sequential with a
+      // ContextCleaner nudge per object, so peak transient disk is
+      // bounded by the largest single object (measured: sf3 peak 30.4 ->
+      // 14.4 GB with zstd; sf10 completes at 52 GB peak). Below the
+      // threshold the fully-concurrent shape stands — a cluster
+      // deployment sizes the threshold by executor-local disk instead.
+      val srcBytes = shared.keys.map(t => dirBytes(s, Tables.path(dir, t))).sum
+      if (srcBytes <= SeqThresholdBytes) {
+        // small sources: transient disk is nowhere near the node budget —
+        // keep the fully-concurrent shape (staging + GC nudges measured
+        // +8 s on the sf0.1 bucketed E2E for zero benefit there)
         Await.result(
           Future.sequence(builds.map { case (name, df) => Future(writeOne(name, df)) }),
           Duration.Inf)
+      } else {
+        // past the threshold: fully OBJECT-sequential with a cleaner
+        // nudge per object, bounding peak transient disk by the largest
+        // single object (group order preserved for the summary)
+        val groups = builds.groupBy { case (name, _) => objectSourceTable(p, name) }
+        val groupOrder = builds.map { case (name, _) => objectSourceTable(p, name) }.distinct
+        val got = groupOrder.flatMap { t =>
+          groups(t).map { case (name, df) =>
+            val r = writeOne(name, df)
+            System.gc() // release finished shuffle refs -> ContextCleaner deletes files
+            r
+          }
+        }.toMap
+        builds.map { case (name, _) => name -> got(name) }
       }
     } finally shared.values.foreach(_.unpersist())
-    val schemaJson = planJson(p, buildId, include,
-      bucketing = if (bucketed) Some((prefix, buckets)) else None)
+    val schemaJson = planJson(p, buildId, include, bucketing = (prefix, buckets))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/dv_schema.json"), schemaJson)
     // DDL scoped to what this build wrote (sat_orders_link, for example, is
@@ -205,10 +197,11 @@ object DvGo {
     * `include` scopes the serialized schema to the objects the build
     * actually materialized — a scoped go() must not register a repo that
     * advertises objects it never wrote (the schema-driven loader trusts
-    * the repo and would crash on the missing paths).
+    * the repo and would crash on the missing paths). `bucketing` is the
+    * repo's (table prefix, bucket count).
     */
   def planJson(plan: DvPlan, buildId: String, include: String => Boolean = _ => true,
-               bucketing: Option[(String, Int)] = None): String = {
+               bucketing: (String, Int)): String = {
     def q(x: String) = "\"" + x + "\""
     def colJ(c: Col) = s"""{"name": ${q(c.name)}, "type": ${q(c.typeName)}}"""
     // hub "source" stays the home table (sources.head) — the schema-driven
@@ -228,13 +221,12 @@ object DvGo {
         s"""{"hub": ${q(m.hubName)}, "parts": [${m.parts.map(colJ).mkString(", ")}]}""")
       s"""{"name": ${q(l.name)}, "source": ${q(l.sourceTable)}, "members": [${membersJ.mkString(", ")}], "degenerate": [${l.degenerate.map(colJ).mkString(", ")}]}"""
     }
-    val bucketJ = bucketing.map { case (prefix, n) =>
-      s"""  "bucketing": {"table_prefix": ${q(prefix)}, "buckets": $n},\n"""
-    }.getOrElse("")
+    val (prefix, buckets) = bucketing
     s"""{
        |  "build_id": ${q(buildId)},
        |  "dw_schema": "graft_dv",
-       |$bucketJ  "hubs": [${hubsJ.mkString(",\n    ")}],
+       |  "bucketing": {"table_prefix": ${q(prefix)}, "buckets": $buckets},
+       |  "hubs": [${hubsJ.mkString(",\n    ")}],
        |  "satellites": [${satsJ.mkString(",\n    ")}],
        |  "links": [${linksJ.mkString(",\n    ")}]
        |}""".stripMargin
@@ -313,28 +305,25 @@ object DvGo {
     val tmp = java.nio.file.Files.createTempDirectory("graft_go_hist_").toString
     val hist = s"$tmp/dv_builds"
     val scope = Set("hub_customer", "sat_customer")
-    // the oracle (buildHistorySql) is STATIC rules-at-default-threshold
-    // SQL, so this checked op pins those explicitly — resolving them from
-    // session conf would silently diverge from the oracle whenever a
-    // non-default DvConfig is set
-    goWithHistory(s, dir, s"$tmp/b1", hist, "2024-01-01 00:00:00", scope,
-      threshold = Some(Classify.Threshold), classifier = Some(RulesClassifier))
-    goWithHistory(s, dir, s"$tmp/b2", hist, "2024-01-02 00:00:00", scope,
-      threshold = Some(Classify.Threshold), classifier = Some(RulesClassifier))
-    val stored = s.read.parquet(hist)
-      .select(col("build_seq"), col("load_ts"), col("object"), col("row_count"),
-        col("min_confidence"), col("threshold"), col("build_status"))
-      .orderBy("build_seq", "object")
-    // The history rows are tiny (objects x builds): materialize them
-    // driver-side so the temp vault+history dir can be deleted now instead
-    // of leaking a build tree per invocation (same policy as
-    // DvLoader.loadFromRepo).
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(stored.collect(): _*), stored.schema)
-    // quiet: the history rows are already materialized driver-side — a
-    // cleanup failure must not discard them (ADVICE r9 audit)
-    DvLoader.deletePathQuietly(java.nio.file.Paths.get(tmp), "buildHistory temp vault")
-    out
+    val builds = Seq(s"$tmp/b1" -> "2024-01-01 00:00:00", s"$tmp/b2" -> "2024-01-02 00:00:00")
+    try {
+      // the oracle (buildHistorySql) is STATIC rules-at-default-threshold
+      // SQL, so this checked op pins those explicitly — resolving them from
+      // session conf would silently diverge from the oracle whenever a
+      // non-default DvConfig is set
+      builds.foreach { case (out, ts) =>
+        goWithHistory(s, dir, out, hist, ts, scope,
+          threshold = Some(Classify.Threshold), classifier = Some(RulesClassifier))
+      }
+      val stored = s.read.parquet(hist)
+        .select(col("build_seq"), col("load_ts"), col("object"), col("row_count"),
+          col("min_confidence"), col("threshold"), col("build_status"))
+        .orderBy("build_seq", "object")
+      // The history rows are tiny (objects x builds): materialize them
+      // driver-side so the temp vaults and history can be disposed of now
+      // instead of leaking a build tree per invocation
+      s.createDataFrame(java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    } finally disposeTempVault(s, tmp, builds.map(_._1))
   }
 
   private def hubCountSql(h: HubSpec) = {
@@ -475,12 +464,32 @@ object DvGo {
   def goSummary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_go_").toString
-    val res = go(s, dir, out)
     // the summary lives in res.objects (driver-side counts from observe()),
-    // so the materialized temp vault can be deleted immediately — same
-    // no-leak policy as buildHistory / loadFromRepo
-    DvLoader.deletePathQuietly(java.nio.file.Paths.get(out), "goSummary temp vault")
-    res.objects.toDF("object", "row_count").orderBy("object")
+    // so the materialized temp vault can be disposed of immediately
+    try go(s, dir, out).objects.toDF("object", "row_count").orderBy("object")
+    finally disposeTempVault(s, out)
+  }
+
+  /** Dispose of a temp vault dir `root`: drop the `<prefix>*` catalog
+    * tables that the bucketed writes registered for `root` and for each
+    * vault dir in `vaults`, then delete `root`. Never throws: a cleanup
+    * failure must not replace the caller's primary exception (a throw in
+    * `finally` discards the in-flight one — at sf10 a disk-full job abort
+    * once surfaced as the cleanup's DirectoryNotEmptyException and hid the
+    * real cause), so it logs instead.
+    */
+  private[dv] def disposeTempVault(s: SparkSession, root: String,
+                                   vaults: Seq[String] = Nil): Unit = {
+    val prefixes = (root +: vaults).map(DvLoader.tablePrefix)
+    try {
+      s.catalog.listTables().collect().map(_.name)
+        .filter(t => prefixes.exists(t.startsWith))
+        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[dv] catalog cleanup of $root failed (NON-masking): $e")
+    }
+    DvLoader.deletePathQuietly(java.nio.file.Paths.get(root), s"temp vault $root")
   }
 
   /** Oracle twin of goSummary: row counts straight from source cardinality
@@ -525,7 +534,7 @@ object DvGo {
     // must not leak the temp vault directory or its graft_dv_* session
     // catalog tables for the rest of the session
     try {
-      val res = go(s, dir, out, bucketed = true, buckets = 16)
+      val res = go(s, dir, out, buckets = 16)
       val shifted = Tables.load(s, dir, "customer")
         .withColumn("c_custkey", col("c_custkey") + lit(BucketKeyShift))
       DvLoader.streamTableLoadBatch(s, shifted, "customer", out, "2024-02-01 00:00:00")
@@ -548,22 +557,7 @@ object DvGo {
         Future(obj -> s.table(s"$prefix$obj").count())
       }), Duration.Inf)
       counts.toDF("object", "row_count").orderBy("object")
-    } finally {
-      // drop whatever subset of the vault's tables got registered before
-      // any failure, then the directory itself — NON-masking (r9): a
-      // cleanup throw here would replace the primary exception (it did at
-      // sf10, where a disk-full job abort surfaced as the finally's
-      // DirectoryNotEmptyException and hid the real cause)
-      try {
-        s.catalog.listTables().collect().map(_.name)
-          .filter(_.startsWith(prefix))
-          .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[dv] goBucketedE2E catalog cleanup failed (NON-masking): $e")
-      }
-      DvLoader.deletePathQuietly(java.nio.file.Paths.get(out), "goBucketedE2E vault")
-    }
+    } finally disposeTempVault(s, out)
   }
 
   /** Oracle twin of goBucketedE2E: goSummary's source-cardinality counts
@@ -615,8 +609,7 @@ object DvGo {
     val out = java.nio.file.Files.createTempDirectory("graft_dv_purge_").toString
     val prefix = DvLoader.tablePrefix(out)
     try {
-      go(s, dir, out, bucketed = true, buckets = 8,
-        include = Set("hub_customer", obj))
+      go(s, dir, out, buckets = 8, include = Set("hub_customer", obj))
       val victims = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") % PurgeMod === PurgeRes)
         .select(dvHash(spec.bkParts.map(p => canon(col(p.name), p.typeName)))
@@ -633,17 +626,7 @@ object DvGo {
           col(spec.hdName)) ++ spec.descriptors.map(d => col(d.name))): _*)
         .write.mode("overwrite").parquet(resPath)
       s.read.parquet(resPath).orderBy(spec.hkName, spec.hdName)
-    } finally {
-      try {
-        s.catalog.listTables().collect().map(_.name)
-          .filter(_.startsWith(prefix))
-          .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[dv] satPurgeE2E catalog cleanup failed (NON-masking): $e")
-      }
-      DvLoader.deletePathQuietly(java.nio.file.Paths.get(out), "satPurgeE2E vault")
-    }
+    } finally disposeTempVault(s, out)
   }
 
   /** Oracle twin of satPurgeE2E: the satellite rebuild restricted to

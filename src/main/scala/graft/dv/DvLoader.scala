@@ -18,22 +18,24 @@ import org.apache.spark.sql.functions._
   */
 object DvLoader {
 
-  /** Bucketed-layout marker a bucketed go() writes into the repo: vault
-    * objects live as catalog tables `<tablePrefix><object>` bucketed by
-    * their anti-join keys, so loads must read (and append) through the
-    * catalog — reading the parquet path directly would drop the bucket
-    * metadata and reintroduce the stored-side shuffle.
-    *
-    * The bucket spec lives in the catalog, not in the parquet files: on a
-    * cluster that is a shared metastore; in a fresh in-memory-catalog
-    * session the loader re-registers each table from the repo path + this
-    * marker (CREATE TABLE ... CLUSTERED BY ... LOCATION) before reading,
-    * so a bucketed repo is loadable from any session.
+  /** The bucket spec every repo pins (dv_schema.json's `bucketing` block,
+    * `sink_meta.json`, `ivf_meta.json`): objects live as catalog tables
+    * `<tablePrefix><object>` bucketed by their anti-join keys, so loads
+    * read and append through the catalog — reading the parquet path
+    * directly would drop the bucket metadata and reintroduce the
+    * stored-side shuffle. A session whose catalog lacks a table
+    * re-registers it from the repo path and this spec ([[registerBucketed]]).
     */
   final case class Bucketing(tablePrefix: String, buckets: Int)
 
+  /** A parsed repo schema. Every repo is bucketed: `layout` is its
+    * `bucketing` block.
+    */
   final case class DvSchemaRef(hubs: Seq[HubSpec], sats: Seq[SatSpec], links: Seq[LinkSpec],
-                               bucketing: Option[Bucketing] = None)
+                               layout: Bucketing) {
+    /** [[layout]] as an Option, for callers that `.get` it; never None. */
+    def bucketing: Option[Bucketing] = Some(layout)
+  }
 
   /** Parse the repo's dv_schema.json back into typed specs.
     *
@@ -41,7 +43,8 @@ object DvLoader {
     * repo schema is a few-KB JSON document; Jackson (on Spark's own
     * classpath) parses it in microseconds, through the session's Hadoop
     * FS so non-local repo URIs keep working. The `bucketing` block shares
-    * its parser with the sink and index repos' meta files.
+    * its parser with the sink and index repos' meta files; a schema
+    * without one fails, naming the file and the field.
     */
   def readSchema(s: SparkSession, repoDir: String): DvSchemaRef = {
     import scala.jdk.CollectionConverters._
@@ -53,8 +56,8 @@ object DvLoader {
       arr(n, field).map(c => Col(c.get("name").asText(), c.get("type").asText()))
     def optText(n: JsonNode, field: String): Option[String] =
       Option(n.get(field)).filterNot(_.isNull).map(_.asText())
-    val bucketing = Option(root.get("bucketing")).filterNot(_.isNull)
-      .map(bucketingOf(_, s"$path bucketing"))
+    val layout = bucketingOf(Option(root.get("bucketing")).filterNot(_.isNull)
+      .getOrElse(sys.error(s"$path lacks bucketing")), s"$path bucketing")
     val hubs = arr(root, "hubs").map(h =>
       HubSpec(h.get("name").asText(), h.get("source").asText(), cols(h, "bk_parts")))
     val sats = arr(root, "satellites").map(t =>
@@ -67,7 +70,7 @@ object DvLoader {
         arr(l, "members").map(m =>
           LinkMember(m.get("hub").asText(), cols(m, "parts"))),
         cols(l, "degenerate")))
-    DvSchemaRef(hubs, sats, links, bucketing)
+    DvSchemaRef(hubs, sats, links, layout)
   }
 
   /** One graft-authored JSON document, parsed driver-side through the
@@ -201,49 +204,39 @@ object DvLoader {
 
   /** The insert-only load step shared by every vault object, sink and
     * index (dv_loader.rs:166-199, 325-357): the `rows` whose `keys` are
-    * absent from the object stored at `path` — the unwritten plan
-    * [[appendNovel]] appends, exposed for the plan sweeps.
+    * absent from the bucketed object stored at `path` — the unwritten
+    * plan [[appendNovel]] appends, exposed for the plan sweeps.
     *
     * ONLY a missing path means "nothing stored yet" (full insert), and
     * only after [[DvMaintenance.restore]] put back a copy a crashed swap
     * left set aside — otherwise that copy's rows would re-insert. A
     * stored object that cannot be read with its keys (schema drift, a
     * renamed hash-key column) fails the load loudly, or every batch would
-    * silently degrade to a full duplicate insert. A bucketed object's
-    * stored side reads through the catalog, so the anti-join needs no
-    * Exchange on that side.
+    * silently degrade to a full duplicate insert. The stored side reads
+    * through the catalog, so the anti-join needs no Exchange on that side.
     */
   private[graft] def novelRows(s: SparkSession, rows: DataFrame, path: String,
-                               keys: Seq[String], bucketing: Option[Bucketing]): DataFrame = {
+                               keys: Seq[String], b: Bucketing): DataFrame = {
     DvMaintenance.restore(path)
     if (!pathExists(s, path)) rows
     else {
-      val stored = bucketing match {
-        case Some(b) =>
-          val (dir, obj) = splitObject(path)
-          storedObject(s, dir, obj, keys, b)
-        case None => s.read.parquet(path)
-      }
-      rows.join(stored.select(keys.head, keys.tail: _*), keys, "left_anti")
+      val (dir, obj) = splitObject(path)
+      rows.join(storedObject(s, dir, obj, keys, b).select(keys.head, keys.tail: _*),
+        keys, "left_anti")
     }
   }
 
-  /** Append [[novelRows]] to `path` and return how many landed. A bucketed
-    * object appends through the catalog under its bucket spec and writer
-    * lease (a plain parquet append would corrupt its layout); an
-    * unbucketed one appends plain parquet. The count rides on the write
-    * pass via an Observation: one action, no cache.
+  /** Append [[novelRows]] to `path` through the catalog under its bucket
+    * spec and writer lease ([[appendObject]]; a plain parquet append would
+    * corrupt the layout) and return how many landed. The count rides on
+    * the write pass via an Observation: one action, no cache.
     */
   private[graft] def appendNovel(s: SparkSession, rows: DataFrame, path: String,
-                                 keys: Seq[String], bucketing: Option[Bucketing]): Long = {
+                                 keys: Seq[String], b: Bucketing): Long = {
     val obs = org.apache.spark.sql.Observation()
-    val novel = novelRows(s, rows, path, keys, bucketing).observe(obs, count(lit(1)).as("n"))
-    bucketing match {
-      case Some(b) =>
-        val (dir, obj) = splitObject(path)
-        appendObject(s, dir, obj, keys, b, novel)
-      case None => novel.write.mode("append").parquet(path)
-    }
+    val (dir, obj) = splitObject(path)
+    appendObject(s, dir, obj, keys, b,
+      novelRows(s, rows, path, keys, b).observe(obs, count(lit(1)).as("n")))
     obs.get("n").asInstanceOf[Long]
   }
 
@@ -300,7 +293,7 @@ object DvLoader {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     Await.result(Future.sequence(loads.map(l => Future(
-      l.obj -> appendNovel(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.bucketing)))),
+      l.obj -> appendNovel(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.layout)))),
       Duration.Inf)
   }
 
@@ -351,7 +344,7 @@ object DvLoader {
                            suppressDir: Option[String] = None): Seq[(String, DataFrame)] = {
     val schema = readSchema(s, repoDir)
     tableLoads(s, schema, batch, tableName, loadTs, suppressDir).map(l =>
-      l.obj -> novelRows(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.bucketing))
+      l.obj -> novelRows(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.layout))
   }
 
   /** Re-register a bucketed vault table over its existing repo files —
@@ -381,17 +374,8 @@ object DvLoader {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Wire the continuous load onto a streaming source of `tableName` rows. */
-  def streamTableLoadSink(rows: DataFrame, tableName: String, repoDir: String,
-                          checkpoint: String) =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        streamTableLoadBatch(batch.sparkSession, batch, tableName, repoDir, s"batch_$batchId")
-      }
-
-  /** Query face: seed a repo with a partial build (customers with
-    * custkey % 5 != 0), then run the schema-driven load from the full
+  /** Query face: seed a bucketed repo with a partial build (customers
+    * with custkey % 5 != 0), then run the schema-driven load from the full
     * source — the appended counts are exactly the % 5 == 0 remainder, which
     * the oracle derives from source cardinality.
     */
@@ -399,21 +383,24 @@ object DvLoader {
     import s.implicits._
     import DvPlanner.{hubCustomer, satCustomer}
     val repo = java.nio.file.Files.createTempDirectory("graft_dv_repo_").toString
+    val b = Bucketing(tablePrefix(repo), 8)
     val keep = expr("cast(c_custkey_bk as bigint) % 5 != 0") // ghosts (-1,-2) stay
-    // ordered = false: seed frames are written, never read ordered (r14)
-    val hub0 = DvBuild.hub(s, dir, hubCustomer, ordered = false).filter(keep)
-    hub0.write.mode("overwrite").parquet(s"$repo/hub_customer")
-    DvBuild.sat(s, dir, satCustomer, ordered = false)
-      .join(hub0.select(satCustomer.hkName), Seq(satCustomer.hkName), "left_semi")
-      .write.mode("overwrite").parquet(s"$repo/sat_customer")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$repo/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, "repo-load-demo", Set("hub_customer", "sat_customer")))
-    val scope = Set("hub_customer", "sat_customer")
-    val counts = incrementalLoad(s, dir, repo, scope = scope)
-    // counts are materialized; the seeded repo is no longer needed
-    deletePath(java.nio.file.Paths.get(repo))
-    counts.toDF("object", "n_new").orderBy("object")
+    try {
+      // ordered = false: seed frames are written, never read ordered (r14)
+      val hub0 = DvBuild.hub(s, dir, hubCustomer, ordered = false).filter(keep)
+      bucketedWriter(hub0, Seq(hubCustomer.hkName), b.buckets, s"$repo/hub_customer")
+        .saveAsTable(s"${b.tablePrefix}hub_customer")
+      bucketedWriter(DvBuild.sat(s, dir, satCustomer, ordered = false)
+          .join(hub0.select(satCustomer.hkName), Seq(satCustomer.hkName), "left_semi"),
+        Seq(satCustomer.hkName, satCustomer.hdName), b.buckets, s"$repo/sat_customer")
+        .saveAsTable(s"${b.tablePrefix}sat_customer")
+      val scope = Set("hub_customer", "sat_customer")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$repo/dv_schema.json"),
+        DvGo.planJson(DvPlanner.literalPlan, "repo-load-demo", scope, (b.tablePrefix, b.buckets)))
+      // the counts are driver-side, so the seeded repo can go right away
+      incrementalLoad(s, dir, repo, scope = scope).toDF("object", "n_new").orderBy("object")
+    } finally DvGo.disposeTempVault(s, repo)
   }
 
   /** Depth-first recursive delete; the Files.walk stream is closed (it

@@ -208,8 +208,7 @@ object DvMaintenance {
   /** A schema repo object's anti-join keys and the repo's bucket spec. */
   private def schemaSpec(s: SparkSession, repoDir: String, obj: String): (Seq[String], DvLoader.Bucketing) = {
     val schema = DvLoader.readSchema(s, repoDir)
-    (DvLoader.schemaKeys(schema, obj), schema.bucketing.getOrElse(
-      sys.error(s"compactBucketed: repo at $repoDir is not bucketed")))
+    (DvLoader.schemaKeys(schema, obj), schema.layout)
   }
 
   /** [[swap]] a bucketed object, keyed by `keys` under bucket spec `b`,

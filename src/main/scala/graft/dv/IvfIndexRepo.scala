@@ -4,10 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Vault-disciplined persistent home for the incremental IVF index (r12
-  * verdict #5). Before r13, `ann_ivf_incr`/`stream_ivf_incr` appended to a
-  * caller-supplied plain-parquet indexPath — no shared spec, no layout
-  * discipline, no compaction story. This repo gives the index the same
-  * treatment as a bucketed vault object:
+  * verdict #5): the index gets the same treatment as a vault object.
   *
   *  - `ivf_centroids` — the stored-trained coarse quantizer, K × Dim exact
   *    integer rows. Metadata-scale, stored as plain parquet (bucketing a
@@ -195,7 +192,7 @@ object IvfIndexRepo {
     */
   def appendPlan(s: SparkSession, repoDir: String, assigned: DataFrame): DataFrame =
     DvLoader.novelRows(s, assigned.dropDuplicates("vec_id"), s"$repoDir/$IndexObj", Keys,
-      Some(bucketing(s, repoDir)))
+      bucketing(s, repoDir))
 
   /** Append only never-seen vec_ids from an assigned frame
     * (vec_id, cell, load_ts) through [[DvLoader.appendNovel]]. Returns rows
@@ -203,7 +200,7 @@ object IvfIndexRepo {
     */
   def appendAssigned(s: SparkSession, repoDir: String, assigned: DataFrame): Long =
     DvLoader.appendNovel(s, assigned.dropDuplicates("vec_id"), s"$repoDir/$IndexObj", Keys,
-      Some(bucketing(s, repoDir)))
+      bucketing(s, repoDir))
 
   /** Batch face: assign a vector batch to the repo's stored centroids
     * (scan-local literal argmax — no retrain) and append exactly-once.

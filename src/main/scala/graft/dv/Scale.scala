@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * every incremental load. The two levers:
   *
   *  1. **Bucketed layout**: persist DV objects bucketed (and sorted) by
-  *     their hash key (`DvGo.go(bucketed = true)`). An incremental
+  *     their hash key (every `DvGo.go` vault is). An incremental
   *     anti-join against a bucketed table needs no exchange on the stored
   *     side — only the (small) batch side shuffles into the same
   *     bucketing (`DvLoader.novelRows`).

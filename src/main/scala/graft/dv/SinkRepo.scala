@@ -2,21 +2,15 @@ package graft.dv
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bucketed-catalog home for a streaming sink's exactly-once stored side —
-  * the IvfIndexRepo discipline generalized to the pair/window sinks (r13
-  * verdict #2): `nearDupSinkPlan`, `semanticProdSinkPlan` and
-  * `packSinkPlan` used to re-read a PLAIN-parquet stored side per
-  * micro-batch — an unbucketed anti-join right side at corpus-pair scale,
-  * reshuffled on every batch, forever. Here the stored rows live as ONE
-  * bucketed object keyed by the sink's anti-join keys, read AND appended
-  * and appended only through [[DvLoader.appendNovel]] (the bucketed-repo
-  * invariant: plain parquet appends would corrupt the bucket layout), so
-  * the anti-join's stored side carries its bucket spec and needs no
-  * Exchange.
-  * `sink_meta.json` pins (table_prefix, buckets) exactly like
-  * `ivf_meta.json` / dv_schema.json's bucketing block, so any session
-  * resolves the same spec; compaction is [[DvMaintenance.rewriteObject]],
-  * the one stage-and-swap every persistent rewrite uses, and the
+/** Bucketed-catalog home for every insert-only store outside a vault and
+  * the IVF index: the streaming pair/window sinks' exactly-once stored
+  * sides, the IVF drift log (`Streams.ivfIncrRepoSink`) and the
+  * `corpus_pack_write` sequence table. The stored rows live as ONE
+  * bucketed object keyed by the anti-join keys, read and appended only
+  * through [[DvLoader.appendNovel]], so the anti-join's stored side
+  * carries its bucket spec and needs no Exchange. `sink_meta.json` pins
+  * (table_prefix, buckets) like `ivf_meta.json` / dv_schema.json's
+  * bucketing block; compaction is [[DvMaintenance.rewriteObject]], and the
   * per-object writer lease covers appends like every vault object.
   *
   * Single writer per sink dir: the sink's foreachBatch hook IS the
@@ -66,17 +60,19 @@ object SinkRepo {
     DvLoader.readBucketing(s, s"$dir/$MetaName")
 
   /** The exactly-once micro-batch plan: `rows` whose `keys` the sink has
-    * not stored yet ([[DvLoader.novelRows]] on the bucketed object).
+    * not stored yet ([[DvLoader.novelRows]] on the bucketed object). A
+    * sink without meta has stored nothing ([[load]] pins the meta before
+    * its first append), so all of `rows` is novel.
     */
   def novel(s: SparkSession, dir: String, keys: Seq[String], rows: DataFrame): DataFrame =
-    DvLoader.novelRows(s, rows, s"$dir/$Obj", keys, bucketing(s, dir))
+    bucketing(s, dir).fold(rows)(DvLoader.novelRows(s, rows, s"$dir/$Obj", keys, _))
 
   /** Append [[novel]] through the catalog under the pinned spec and the
     * per-object writer lease ([[DvLoader.appendNovel]]), creating the
     * meta on the first batch. Returns rows appended.
     */
   def load(s: SparkSession, dir: String, keys: Seq[String], rows: DataFrame): Long =
-    DvLoader.appendNovel(s, rows, s"$dir/$Obj", keys, Some(ensure(s, dir)))
+    DvLoader.appendNovel(s, rows, s"$dir/$Obj", keys, ensure(s, dir))
 
   /** Content face for consumers and parity checks (plain read — row
     * content only; loads read the bucketed stored side through [[novel]]).

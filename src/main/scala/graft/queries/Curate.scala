@@ -379,8 +379,8 @@ object Curate extends QueryModule {
   // whose groups are EXACTLY SeqLen rows (no skew by construction); the
   // in-sequence order is index-ordered array accumulation over unique
   // gpos (SURVEY §5), never a window. The span-map join reuses the
-  // memoized two-phase prefix sum. At 100 TB the table is a bucketed
-  // parquet like the vault repos; here the path is session-scoped (the
+  // memoized two-phase prefix sum. The table is a SinkRepo, bucketed by
+  // seq_id like the vault repos; its path is session-scoped (the
   // embedPairsTable precedent: warehouse dir + random suffix, cleaned on
   // session end, shared storage on a cluster).
   private[graft] def packedSeqBuild(s: SparkSession, dir: String): DataFrame = {
@@ -415,8 +415,8 @@ object Curate extends QueryModule {
 
   private def corpusPackWrite(s: SparkSession, dir: String): DataFrame = {
     val path = packedSeqPath(s, dir)
-    graft.dv.DvLoader.appendNovel(s, packedSeqBuild(s, dir), path, Seq("seq_id"), None)
-    s.read.parquet(path)
+    graft.dv.SinkRepo.load(s, path, Seq("seq_id"), packedSeqBuild(s, dir))
+    graft.dv.SinkRepo.read(s, path)
       .select(col("seq_id"), col("n_docs"), col("n_tokens"),
         sha2(concat_ws(" ", col("tokens")), 256).as("seq_sha"))
       .orderBy("seq_id")

@@ -30,10 +30,6 @@ object Similarity extends QueryModule {
 
   private def emb(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "embeddings")
 
-  /** Index-ordered dot product of two float[] columns as double. */
-  private def dotExpr(a: String, b: String): String =
-    s"aggregate(sequence(1, $Dim), cast(0 as double), (acc, i) -> acc + cast(element_at($a, i) as double) * cast(element_at($b, i) as double))"
-
   private def dotDuck(a: String, b: String): String =
     s"list_sum(list_transform(generate_series(1, $Dim), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 

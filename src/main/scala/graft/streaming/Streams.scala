@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.GraftFunctions.dvHash
 
 /** SURVEY.md §2.D — Structured Streaming twins of the batch operators.
   *
@@ -102,44 +101,6 @@ object Streams {
       }
   }
 
-  /** Canonicalize a business-key/descriptor column by its SCHEMA type so
-    * streaming hash keys and hash-diffs match the batch DvBuild contract
-    * (doubles hash as DECIMAL(12,2) text, timestamps as epoch millis — a
-    * plain cast-to-string would diverge: '123.4' vs '123.40').
-    */
-  private def canonByType(df: DataFrame, name: String) = {
-    val t = df.schema(name).dataType match {
-      case org.apache.spark.sql.types.DoubleType => "double"
-      case _: org.apache.spark.sql.types.TimestampType => "timestamp"
-      case _ => "string"
-    }
-    graft.functions.GraftFunctions.canon(col(name), t)
-  }
-
-  /** #40: streaming incremental hub load — every micro-batch anti-joins
-    * the stored hub on the hash key and appends only new keys (the
-    * streaming form of DvBuild.hubIncrement). r15 (r14 verdict #9): the
-    * stored side moved from plain parquet — re-read and RESHUFFLED per
-    * micro-batch, forever — to a SinkRepo bucketed catalog object keyed
-    * by the anti-join key, like the pair/window sinks and the
-    * schema-driven loads; the anti-join's stored side now carries its
-    * bucket spec and needs no Exchange.
-    */
-  private[graft] val HubLoadKeys = Seq("hub_hk")
-
-  def hubLoadBatch(spark: SparkSession, batch: DataFrame, keyCol: String, hubPath: String, loadTs: String): Unit =
-    graft.dv.SinkRepo.load(spark, hubPath, HubLoadKeys, hubRows(batch, keyCol, loadTs))
-
-  /** The micro-batch PLAN of #40, exposed unwritten so the streaming plan
-    * sweep (r10 verdict #8) audits the exact frame every batch executes.
-    */
-  def hubLoadPlan(spark: SparkSession, batch: DataFrame, keyCol: String, hubPath: String, loadTs: String): DataFrame =
-    graft.dv.SinkRepo.novel(spark, hubPath, HubLoadKeys, hubRows(batch, keyCol, loadTs))
-
-  private def hubRows(batch: DataFrame, keyCol: String, loadTs: String): DataFrame =
-    batch.select(canonByType(batch, keyCol).as("bk")).distinct()
-      .select(dvHash(Seq(col("bk"))).as("hub_hk"), lit(loadTs).as("load_ts"), col("bk"))
-
   /** #41: watermarked stream-stream join — each purchase enriched with
     * ALL of the same user's prior signup-side events within 1 hour (a
     * purchase with several in-window signups emits one row per signup;
@@ -159,76 +120,6 @@ object Streams {
         col("s_ts") <= col("p_ts") &&
         col("s_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
   }
-
-  /** #42: streaming satellite load — per micro-batch, anti-join the sat
-    * parquet on (hash key, hash-diff) and append only changed attribute
-    * versions (the streaming form of DvBuild.satIncrement).
-    */
-  private[graft] val SatLoadKeys = Seq("hub_hk", "sat_hd")
-
-  def satLoadBatch(spark: SparkSession, batch: DataFrame, keyCol: String, descCols: Seq[String],
-                   satPath: String, loadTs: String): Unit =
-    graft.dv.SinkRepo.load(spark, satPath, SatLoadKeys, satRows(batch, keyCol, descCols, loadTs))
-
-  /** The micro-batch PLAN of #42 (see [[hubLoadPlan]] — same r15 SinkRepo
-    * stored side, keyed (hub_hk, sat_hd)).
-    */
-  def satLoadPlan(spark: SparkSession, batch: DataFrame, keyCol: String, descCols: Seq[String],
-                  satPath: String, loadTs: String): DataFrame =
-    graft.dv.SinkRepo.novel(spark, satPath, SatLoadKeys, satRows(batch, keyCol, descCols, loadTs))
-
-  private def satRows(batch: DataFrame, keyCol: String, descCols: Seq[String],
-                      loadTs: String): DataFrame =
-    batch
-      .select((canonByType(batch, keyCol).as("bk") +: descCols.map(col)): _*)
-      .distinct()
-      .select((dvHash(Seq(col("bk"))).as("hub_hk") +:
-        dvHash(descCols.map(c => canonByType(batch, c))).as("sat_hd") +:
-        lit(loadTs).as("load_ts") +: col("bk") +: descCols.map(col)): _*)
-
-  def satLoadSink(events: DataFrame, keyCol: String, descCols: Seq[String],
-                  satPath: String, checkpoint: String) =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        satLoadBatch(batch.sparkSession, batch, keyCol, descCols, satPath, s"batch_$batchId")
-      }
-
-  /** #45: streaming link load — per micro-batch, hash the relationship's
-    * combined business keys into the link hash key, anti-join the link
-    * parquet on it, and append only never-seen relationships (the
-    * streaming form of the batch dv_link_incr; the reference loads links
-    * with the same hk anti-join as hubs, dv_loader.rs:166-199).
-    */
-  private[graft] val LinkLoadKeys = Seq("link_hk")
-
-  def linkLoadBatch(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
-                    linkPath: String, loadTs: String): Unit =
-    graft.dv.SinkRepo.load(spark, linkPath, LinkLoadKeys, linkRows(batch, keyCols, loadTs))
-
-  /** The micro-batch PLAN of #45 (see [[hubLoadPlan]] — same r15 SinkRepo
-    * stored side, keyed link_hk).
-    */
-  def linkLoadPlan(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
-                   linkPath: String, loadTs: String): DataFrame =
-    graft.dv.SinkRepo.novel(spark, linkPath, LinkLoadKeys, linkRows(batch, keyCols, loadTs))
-
-  private def linkRows(batch: DataFrame, keyCols: Seq[String], loadTs: String): DataFrame =
-    batch.select(keyCols.map(c => canonByType(batch, c).as(s"${c}_bk")): _*).distinct()
-      .select((dvHash(keyCols.map(c => col(s"${c}_bk"))).as("link_hk") +:
-        lit(loadTs).as("load_ts") +:
-        keyCols.map(c => dvHash(Seq(col(s"${c}_bk"))).as(s"hub_${c}_hk"))) ++
-        keyCols.map(c => col(s"${c}_bk")): _*)
-
-  /** Wire #45 onto a streaming DataFrame via foreachBatch. */
-  def linkLoadSink(events: DataFrame, keyCols: Seq[String], linkPath: String, checkpoint: String) =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        linkLoadBatch(batch.sparkSession, batch, keyCols, linkPath, s"batch_$batchId")
-      }
 
   /** #46: streaming anomaly detection — the streaming twin of the batch
     * events_anomaly. Per event type, keep the exact integer running stats
@@ -319,11 +210,8 @@ object Streams {
   /** Exactly-once sink for [[nearDupStream]]: per micro-batch, distinct
     * (in_doc, corpus_doc) pairs anti-joined against the flagged-pairs
     * store — redelivered or multi-band-matched pairs never double-land.
-    * The stored side is a BUCKETED catalog object keyed by the anti-join
-    * keys (r14, the IvfIndexRepo discipline via [[graft.dv.SinkRepo]]):
-    * the plain-parquet store reshuffled the full stored pair set on EVERY
-    * micro-batch at corpus-pair scale; bucketed-through-the-catalog, the
-    * anti-join's stored side needs no Exchange (swept in
+    * The stored side is a [[graft.dv.SinkRepo]] keyed by the anti-join
+    * keys, so its anti-join needs no Exchange (swept in
     * StreamPlanSweepSpec) and compaction covers the append debris.
     */
   private[graft] val NearDupKeys = Seq("in_doc", "corpus_doc")
@@ -331,7 +219,9 @@ object Streams {
   def nearDupBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit =
     graft.dv.SinkRepo.load(spark, outPath, NearDupKeys, batch.dropDuplicates(NearDupKeys))
 
-  /** The sink-side micro-batch PLAN of #49 (see [[hubLoadPlan]]). */
+  /** The sink-side micro-batch PLAN of #49, exposed unwritten so the
+    * streaming plan sweep audits the exact frame every batch executes.
+    */
   def nearDupSinkPlan(spark: SparkSession, batch: DataFrame, outPath: String): DataFrame =
     graft.dv.SinkRepo.novel(spark, outPath, NearDupKeys, batch.dropDuplicates(NearDupKeys))
 
@@ -341,85 +231,6 @@ object Streams {
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch((b: DataFrame, _: Long) => nearDupBatch(b.sparkSession, b, outPath))
-
-  /** #47: streaming information-mart maintenance — the consumer-facing
-    * mart stays continuously fresh instead of being rebuilt on a
-    * schedule: each micro-batch of order rows joins the (dimension-scale,
-    * broadcast) customer→region lookup and appends only never-seen order
-    * keys to the mart parquet, so a redelivered order never double-lands
-    * (the same hash-key anti-join every vault load uses). Stream-static
-    * joins keep NO streaming state; the dim frame is re-resolved per
-    * micro-batch, so dimension changes flow into subsequent batches
-    * while the insert-only mart preserves what earlier batches saw.
-    */
-  final case class OrderRow(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
-                            o_totalprice: Double)
-
-  private[graft] val MartRefreshKeys = Seq("hub_order_hk")
-
-  def martRefreshBatch(spark: SparkSession, batch: DataFrame, dims: DataFrame,
-                       martPath: String, loadTs: String): Unit =
-    graft.dv.SinkRepo.load(spark, martPath, MartRefreshKeys, martRows(batch, dims, loadTs))
-
-  /** The micro-batch PLAN of #47 (see [[hubLoadPlan]]). */
-  def martRefreshPlan(spark: SparkSession, batch: DataFrame, dims: DataFrame,
-                      martPath: String, loadTs: String): DataFrame =
-    graft.dv.SinkRepo.novel(spark, martPath, MartRefreshKeys, martRows(batch, dims, loadTs))
-
-  private def martRows(batch: DataFrame, dims: DataFrame, loadTs: String): DataFrame = {
-    // Within-batch dedup must be BY KEY, not by full row: one micro-batch
-    // can carry the same order twice with differing attributes (an update
-    // delivered alongside the insert) — keep one deterministic
-    // representative per key (min by attribute order), or the mart-level
-    // anti-join would let both rows land.
-    val perKey = org.apache.spark.sql.expressions.Window
-      .partitionBy("o_orderkey_bk")
-      .orderBy("o_orderstatus", "o_totalprice", "o_custkey_bk")
-    batch
-      .select(col("o_orderkey").cast("string").as("o_orderkey_bk"),
-        col("o_custkey").cast("string").as("o_custkey_bk"),
-        col("o_orderstatus"), col("o_totalprice"))
-      .withColumn("rn", row_number().over(perKey)).filter(col("rn") === 1).drop("rn")
-      // LEFT join: a fact whose customer has not reached the dimension yet
-      // must still land (the stream never redelivers it — an inner join
-      // would lose it forever). It lands under the UNKNOWN member, the
-      // mart twin of the vault's ghost records.
-      .join(broadcast(dims), col("o_custkey_bk") === col("c_custkey_bk"), "left")
-      .select(dvHash(Seq(col("o_orderkey_bk"))).as("hub_order_hk"),
-        lit(loadTs).as("load_ts"),
-        col("o_orderkey_bk"), col("o_custkey_bk"),
-        col("o_orderstatus"), col("o_totalprice"),
-        coalesce(col("region"), lit("UNKNOWN")).as("region"))
-  }
-
-  /** The customer→region dimension side for #47 (dimension-scale by
-    * construction: customer keys + region names).
-    */
-  def martDims(spark: SparkSession, dir: String): DataFrame = {
-    val t = graft.Tables
-    t.load(spark, dir, "customer")
-      .join(t.load(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .join(t.load(spark, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey").cast("string").as("c_custkey_bk"), col("r_name").as("region"))
-  }
-
-  /** Wire #47 onto a streaming DataFrame via foreachBatch. */
-  def martRefreshSink(orders: DataFrame, dims: DataFrame, martPath: String, checkpoint: String) =
-    orders.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        martRefreshBatch(batch.sparkSession, batch, dims, martPath, s"batch_$batchId")
-      }
-
-  /** Wire #40 onto a streaming DataFrame via foreachBatch. */
-  def hubLoadSink(events: DataFrame, keyCol: String, hubPath: String, checkpoint: String) =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hubLoadBatch(batch.sparkSession, batch, keyCol, hubPath, s"batch_$batchId")
-      }
 
   /** How long a user's last-event state survives inactivity before the
     * transition chain forgets them (state bound vs chain continuity: a
@@ -810,15 +621,6 @@ object Streams {
     graft.dv.SinkRepo.load(spark, outPath, SemanticProdKeys,
       batch.dropDuplicates(SemanticProdKeys))
 
-  def semanticProdSink(vecs: DataFrame, corpusBands: DataFrame, corpusVecs: DataFrame,
-                       planes: Int, outPath: String, checkpoint: String) =
-    semanticDedupProdStream(vecs, corpusBands, corpusVecs, planes)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        semanticProdBatch(b.sparkSession, b, outPath)
-      }
-
   /** #56: streaming INCREMENTAL IVF index maintenance — the streaming
     * form of `ann_ivf_incr` (§2.C 36b''), closing the loop between
     * continuous vector arrival (stream_semantic_dedup admits them) and
@@ -1004,14 +806,6 @@ object Streams {
   def packSinkBatch(spark: SparkSession, batch: DataFrame, outPath: String): Unit =
     graft.dv.SinkRepo.load(spark, outPath, PackKeys, batch.dropDuplicates(PackKeys))
 
-  def packWriteSink(docs: DataFrame, outPath: String, checkpoint: String) =
-    packWriteStream(docs).toDF()
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        packSinkBatch(b.sparkSession, b, outPath)
-      }
-
   /** Wire #56 onto a streaming vector DataFrame via foreachBatch, against
     * the VAULT-DISCIPLINED index repo (r12 verdict #5): centroids and the
     * bucket spec come from the repo's own metadata
@@ -1025,7 +819,8 @@ object Streams {
     *
     * BOTH appends are idempotent under same-batch_id checkpoint replay
     * (r12 ADVICE): the index anti-joins on vec_id (never-seen vectors
-    * only), and the drift log anti-joins on batch_id — a crash between
+    * only), and the drift log — a [[graft.dv.SinkRepo]] at `driftPath`,
+    * read back through `SinkRepo.read` — anti-joins on batch_id: a crash between
     * the two appends and the stream commit re-runs the batch but appends
     * nothing twice, so the spec-pinned per-cell arrival-sum parity holds
     * across replays. "Honest monitoring" (drift recomputed per DELIVERED
@@ -1050,9 +845,8 @@ object Streams {
         // the live quantizer generation); the caller's frame is the
         // pre-first-retrain fallback
         val agg = graft.dv.IvfIndexRepo.storedAgg(s, repoDir).getOrElse(storedAgg)
-        graft.dv.DvLoader.appendNovel(s,
-          ivfDriftPlan(batch, cents, agg).withColumn("batch_id", lit(batchId)),
-          driftPath, Seq("batch_id"), None)
+        graft.dv.SinkRepo.load(s, driftPath, Seq("batch_id"),
+          ivfDriftPlan(batch, cents, agg).withColumn("batch_id", lit(batchId)))
         ()
       }
 }

@@ -85,7 +85,8 @@ class GoSpec extends SparkSpec {
 
   test("dv_schema.json round-trips to the typed specs") {
     val out = Files.createTempDirectory("graft_schema_rt").toString
-    Files.writeString(Paths.get(s"$out/dv_schema.json"), DvGo.planJson(DvPlanner.literalPlan, "rt"))
+    Files.writeString(Paths.get(s"$out/dv_schema.json"),
+      DvGo.planJson(DvPlanner.literalPlan, "rt", bucketing = (DvLoader.tablePrefix(out), 4)))
     val ref = DvLoader.readSchema(spark, out)
     assert(ref.hubs.toSet == DvPlanner.hubs.toSet)
     assert(ref.sats.map(t => (t.name, t.sourceTable, t.bkParts, t.descriptors)).toSet ==
@@ -99,17 +100,11 @@ class GoSpec extends SparkSpec {
       .map(r => r.getAs[String]("object") -> r.getAs[Long]("n_new")).toMap
     assert(counts("hub_customer") > 0 && counts("sat_customer") > 0)
     // a second pass over an up-to-date repo appends nothing: seed a full
-    // repo, then load from the same source
+    // repo of the literal objects, then load from the same source
     val repo = Files.createTempDirectory("graft_repo_idem").toString
-    DvBuild.hub(spark, sfDir, DvPlanner.hubCustomer)
-      .write.mode("overwrite").parquet(s"$repo/hub_customer")
-    DvBuild.sat(spark, sfDir, DvPlanner.satCustomer)
-      .write.mode("overwrite").parquet(s"$repo/sat_customer")
-    DvBuild.link(spark, sfDir, DvPlanner.linkOrders)
-      .write.mode("overwrite").parquet(s"$repo/link_orders")
-    Files.writeString(Paths.get(s"$repo/dv_schema.json"), DvGo.planJson(DvPlanner.literalPlan, "idem"))
-    val again = DvLoader.incrementalLoad(spark, sfDir, repo,
-      scope = Set("hub_customer", "sat_customer", "link_orders")).toMap
+    val scope = Set("hub_customer", "sat_customer", "link_orders")
+    DvGo.go(spark, sfDir, repo, include = scope, buckets = 4, plan = Some(DvPlanner.literalPlan))
+    val again = DvLoader.incrementalLoad(spark, sfDir, repo, scope = scope).toMap
     assert(again.keySet == Set("hub_customer", "sat_customer", "link_orders"))
     assert(again.values.forall(_ == 0L), s"second load not idempotent: $again")
   }
@@ -232,16 +227,15 @@ class GoSpec extends SparkSpec {
 
   test("streaming continuous load converges to the batch build (bgw loop)") {
     val tmp = Files.createTempDirectory("graft_stream_repo").toString
-    val repo = s"$tmp/repo"
-    Files.createDirectories(Paths.get(repo))
-    Files.writeString(Paths.get(s"$repo/dv_schema.json"), DvGo.planJson(DvPlanner.literalPlan, "stream"))
+    val repo = emptyVault(s"$tmp/repo", "stream")
+    val st = ContinuousPipeline.State(s"$tmp/catalog", s"$tmp/responses", repo)
     // customer rows arrive as two file chunks on a streaming source
     val cust = Tables.load(spark, sfDir, "customer")
     val src = s"$tmp/incoming"
     cust.filter(col("c_custkey") % 2 === 0).write.mode("append").parquet(src)
     val stream = spark.readStream.schema(cust.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = DvLoader.streamTableLoadSink(stream, "customer", repo, s"$tmp/ckpt").start()
+    val q = ContinuousPipeline.sink(stream, "customer", st, s"$tmp/ckpt").start()
     q.processAllAvailable()
     cust.filter(col("c_custkey") % 2 === 1).write.mode("append").parquet(src)
     q.processAllAvailable()
@@ -256,5 +250,40 @@ class GoSpec extends SparkSpec {
     val streamedSat = spark.read.parquet(s"$repo/sat_customer")
     val batchSat = DvBuild.sat(spark, sfDir, DvPlanner.satCustomer)
     assert(streamedSat.count() == batchSat.count())
+  }
+
+  test("a default go() vault can be compacted and purged") {
+    import graft.functions.GraftFunctions.{canon, dvHash}
+    val out = Files.createTempDirectory("graft_go_default_maint").toString
+    val spec = DvPlanner.satCustomerSensitive
+    val obj = s"sat_${spec.name}"
+    DvGo.go(spark, sfDir, out, include = Set("hub_customer", obj))
+    val prefix = DvLoader.readSchema(spark, out).layout.tablePrefix
+    try {
+      val cust = Tables.load(spark, sfDir, "customer")
+      // one appended micro-batch leaves a second file set in the buckets
+      DvLoader.streamTableLoadBatch(spark,
+        cust.withColumn("c_custkey", col("c_custkey") + 1000000L), "customer", out, "b1")
+      val rows = spark.table(s"$prefix$obj").count()
+      val (before, after) = DvMaintenance.compactBucketed(spark, out, obj)
+      assert(after < before, s"compaction left $after of $before files")
+      assert(spark.table(s"$prefix$obj").count() == rows)
+      val victims = cust.filter(col("c_custkey") % 7 === 3)
+        .select(dvHash(spec.bkParts.map(p => canon(col(p.name), p.typeName))).as(spec.hkName))
+      val hit = spark.table(s"$prefix$obj").join(victims, spec.hkName).count()
+      val (n0, n1) = DvMaintenance.purgeSensitive(spark, out, obj, victims, spec.hkName)
+      assert(hit > 0 && n0 == rows && n1 == rows - hit)
+      assert(spark.table(s"$prefix$obj").join(victims, spec.hkName).count() == 0)
+    } finally {
+      Seq("hub_customer", obj).foreach(o => spark.sql(s"DROP TABLE IF EXISTS $prefix$o"))
+      DvLoader.deletePath(Paths.get(out))
+    }
+  }
+
+  test("goSummary leaves the session's table list as it found it") {
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    assert(DvGo.goSummary(spark, sfDir).count() == 11)
+    assert(tables() == before)
   }
 }

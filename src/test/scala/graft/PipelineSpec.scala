@@ -16,10 +16,7 @@ class PipelineSpec extends SparkSpec {
   test("continuous pipeline: two micro-batches with a schema drift land correct vault rows") {
     val tmp = Files.createTempDirectory("graft_pipeline").toString
     val st = ContinuousPipeline.State(s"$tmp/catalog", s"$tmp/responses", s"$tmp/repo")
-    Files.createDirectories(Paths.get(st.repoDir))
-    val scope = Set("hub_customer", "sat_customer", "sat_customer_sensitive")
-    Files.writeString(Paths.get(s"${st.repoDir}/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, "pipeline", scope))
+    emptyVault(st.repoDir, "pipeline", Set("hub_customer", "sat_customer", "sat_customer_sensitive"))
 
     val cust = Tables.load(spark, sfDir, "customer")
     val evens = cust.filter(col("c_custkey") % 2 === 0)
@@ -92,7 +89,7 @@ class PipelineSpec extends SparkSpec {
     Files.createDirectories(Paths.get(st.repoDir))
     val scope = Set("hub_customer", "sat_customer", "sat_customer_sensitive")
     Files.writeString(Paths.get(s"${st.repoDir}/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, "pipeline_purge", scope, Some((prefix, 4))))
+      DvGo.planJson(DvPlanner.literalPlan, "pipeline_purge", scope, (prefix, 4)))
     val obj = "sat_customer_sensitive"
     val hk = "hub_customer_hk"
     try {
@@ -163,7 +160,7 @@ class PipelineSpec extends SparkSpec {
     Files.createDirectories(Paths.get(st.repoDir))
     val scope = Set("hub_customer", "sat_customer", "sat_customer_sensitive")
     Files.writeString(Paths.get(s"${st.repoDir}/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, "pipeline_resurrect", scope, Some((prefix, 4))))
+      DvGo.planJson(DvPlanner.literalPlan, "pipeline_resurrect", scope, (prefix, 4)))
     val obj = "sat_customer_sensitive"
     val hk = "hub_customer_hk"
     try {
@@ -220,7 +217,7 @@ class PipelineSpec extends SparkSpec {
     Files.createDirectories(Paths.get(st.repoDir))
     val scope = Set("hub_customer", "sat_customer", "sat_customer_sensitive")
     Files.writeString(Paths.get(s"${st.repoDir}/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, "pipeline_toctou", scope, Some((prefix, 4))))
+      DvGo.planJson(DvPlanner.literalPlan, "pipeline_toctou", scope, (prefix, 4)))
     val obj = "sat_customer_sensitive"
     val hk = "hub_customer_hk"
     try {
@@ -265,14 +262,12 @@ class PipelineSpec extends SparkSpec {
     def respond(df: DataFrame): DataFrame = { calls.incrementAndGet(); RulesClassifier.respond(df) }
   }
 
-  /** A fresh loop state over an unbucketed repo holding `scope`. */
+  /** A fresh loop state over an empty bucketed repo holding `scope`. */
   private def loopState(tag: String, scope: Set[String],
                         cl: Classifier): (String, ContinuousPipeline.State) = {
     val tmp = Files.createTempDirectory(tag).toString
     val st = ContinuousPipeline.State(s"$tmp/catalog", s"$tmp/responses", s"$tmp/repo", cl)
-    Files.createDirectories(Paths.get(st.repoDir))
-    Files.writeString(Paths.get(s"${st.repoDir}/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, tag, scope))
+    emptyVault(st.repoDir, tag, scope)
     (tmp, st)
   }
 
@@ -295,6 +290,26 @@ class PipelineSpec extends SparkSpec {
   private def catalogRow(st: ContinuousPipeline.State, column: String) =
     spark.read.parquet(st.catalogDir)
       .filter(col("column_name") === column && col("current_flag") === "Y").collect().toSeq
+
+  test("continuous pipeline: the whole catalog reads with valid_to declared STRING, after the first turn and after a drift") {
+    val (tmp, st) = loopState("graft_pipeline_validto", Set("hub_customer"), RulesClassifier)
+    try {
+      val cust = Tables.load(spark, sfDir, "customer")
+      def typedCatalog() = spark.read
+        .schema("table_name STRING, column_name STRING, ordinal INT, data_type STRING, " +
+          "valid_from STRING, valid_to STRING, current_flag STRING, deleted_flag STRING")
+        .parquet(st.catalogDir).collect().toSeq
+      ContinuousPipeline.onBatch(spark, st, "customer", cust, "2024-01-01 00:00:00", "b0")
+      val first = typedCatalog()
+      assert(first.size == cust.columns.length && first.forall(_.isNullAt(5)))
+      ContinuousPipeline.onBatch(spark, st, "customer",
+        cust.withColumn("c_acctbal", col("c_acctbal").cast("string")), "2024-02-01 00:00:00", "drift")
+      val second = typedCatalog()
+      assert(second.size == cust.columns.length + 1)
+      assert(second.filterNot(_.isNullAt(5)).map(r => (r.getString(1), r.getString(5))) ==
+        Seq(("c_acctbal", "2024-02-01 00:00:00")))
+    } finally DvLoader.deletePath(Paths.get(tmp))
+  }
 
   test("continuous pipeline: a turn with an unchanged schema runs no classifier and rewrites no loop state") {
     val cl = new CountingClassifier

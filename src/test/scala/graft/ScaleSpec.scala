@@ -13,7 +13,7 @@ class ScaleSpec extends SparkSpec {
         .select(graft.functions.GraftFunctions.dvHash(Seq(col("c_custkey").cast("string")))
           .as("hub_customer_hk"))
       val inc = DvLoader.novelRows(spark, batch, s"$out/hub_customer", Seq("hub_customer_hk"),
-        DvLoader.readSchema(spark, out).bucketing)
+        DvLoader.readSchema(spark, out).layout)
       val physical = inc.queryExecution.executedPlan.toString
       // the bucketed (right/stored) side must be scan->join with no shuffle:
       val exchanges = "Exchange hashpartitioning".r.findAllIn(physical).size

@@ -11,6 +11,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // shared session, leave running
+
+  /** An empty bucketed vault at `repo`: a dv_schema.json of the literal
+    * plan's `scope` objects, 4 buckets, nothing stored yet. Returns `repo`.
+    */
+  def emptyVault(repo: String, tag: String, scope: String => Boolean = _ => true): String = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(repo))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$repo/dv_schema.json"),
+      graft.dv.DvGo.planJson(graft.dv.DvPlanner.literalPlan, tag, scope,
+        (graft.dv.DvLoader.tablePrefix(repo), 4)))
+    repo
+  }
 }
 
 object SparkSpec {

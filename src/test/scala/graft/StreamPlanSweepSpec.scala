@@ -1,11 +1,11 @@
 package graft
 
 import graft.streaming.Streams
-import graft.dv.{DvGo, DvLoader, DvPlanner}
+import graft.dv.DvLoader
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** r10 verdict #8: the batch ScaleSpec sweep never sees the frames the
   * streaming ops execute — they run through foreachBatch bodies and
@@ -17,8 +17,9 @@ import java.nio.file.{Files, Paths}
   * a future streaming op cannot land unswept without failing here.
   *
   * Replay mechanics: the foreachBatch loaders expose their exact
-  * micro-batch frames via *Plan twins (hubLoadPlan etc. — the write
-  * wrapper appends the same frame), seeded against a real stored side so
+  * micro-batch frames via *Plan twins (nearDupSinkPlan,
+  * DvLoader.streamTableLoadPlans etc. — the write wrapper appends the
+  * same frame), seeded against a real stored side so
   * the anti-join IS in the swept plan; the stateful/stream-static
   * transforms are applied to batch frames of the same schema (the
   * analyzer strips the watermark and plans the identical join topology a
@@ -39,13 +40,6 @@ class StreamPlanSweepSpec extends SparkSpec {
     */
   private lazy val tmp: String = {
     val dir = Files.createTempDirectory("graft_plan_sweep").toString
-    Streams.hubLoadBatch(spark, ev.limit(200), "event_id", s"$dir/hub", "t0")
-    Streams.satLoadBatch(spark, cust.limit(200), "c_custkey", Seq("c_name", "c_acctbal"),
-      s"$dir/sat", "t0")
-    Streams.linkLoadBatch(spark, ords.limit(200), Seq("o_orderkey", "o_custkey"),
-      s"$dir/link", "t0")
-    Streams.martRefreshBatch(spark, ords.limit(200), Streams.martDims(spark, sfDir),
-      s"$dir/mart", "t0")
     locally {
       import spark.implicits._
       Streams.nearDupBatch(spark, Seq((1L, 2L, 1.0)).toDF("in_doc", "corpus_doc", "jaccard"),
@@ -70,10 +64,7 @@ class StreamPlanSweepSpec extends SparkSpec {
       Streams.semanticProdBatch(spark,
         Seq((1L, 2L, 1.0)).toDF("in_vec", "corpus_vec", "cosine"), s"$dir/prodpairs")
     }
-    Files.createDirectories(Paths.get(s"$dir/repo"))
-    Files.writeString(Paths.get(s"$dir/repo/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, "sweep",
-        Set("hub_customer", "sat_customer", "sat_customer_sensitive")))
+    emptyVault(s"$dir/repo", "sweep", Set("hub_customer", "sat_customer", "sat_customer_sensitive"))
     DvLoader.streamTableLoadBatch(spark, cust.limit(200), "customer", s"$dir/repo", "t0")
     dir
   }
@@ -117,21 +108,13 @@ class StreamPlanSweepSpec extends SparkSpec {
     Map(
       "stream_events_tumbling" -> (() => Seq(plan(Streams.tumblingCounts(ev)))),
       "stream_sessionize_state" -> (() => Seq(plan(Streams.sessionize(ev).toDF()))),
-      "stream_dv_hub_load" -> (() =>
-        Seq(plan(Streams.hubLoadPlan(spark, ev, "event_id", s"$tmp/hub", "t1")))),
       "stream_stream_join" -> (() => Seq(plan(Streams.purchaseEnrich(
         ev.filter(col("event_type") === "purchase"),
         ev.filter(col("event_type") === "click"))))),
-      "stream_dv_sat_load" -> (() => Seq(plan(Streams.satLoadPlan(
-        spark, cust, "c_custkey", Seq("c_name", "c_acctbal"), s"$tmp/sat", "t1")))),
       "stream_dedup_exact" -> (() => Seq(dedupExactReplayedPlan())),
       "stream_dv_schema_load" -> (() => DvLoader.streamTableLoadPlans(
         spark, cust, "customer", s"$tmp/repo", "t1").map(p => plan(p._2))),
-      "stream_dv_link_load" -> (() => Seq(plan(Streams.linkLoadPlan(
-        spark, ords, Seq("o_orderkey", "o_custkey"), s"$tmp/link", "t1")))),
       "stream_anomaly" -> (() => Seq(plan(Streams.anomalyStream(dayCounts()).toDF()))),
-      "stream_mart_refresh" -> (() => Seq(plan(Streams.martRefreshPlan(
-        spark, ords, Streams.martDims(spark, sfDir), s"$tmp/mart", "t1")))),
       "stream_transitions" -> (() => Seq(plan(Streams.transitionsStream(ev).toDF()))),
       // the near-dup op = the gate join chain PLUS its exactly-once sink plan
       "stream_near_dup" -> { () =>
@@ -222,8 +205,7 @@ class StreamPlanSweepSpec extends SparkSpec {
     val joining = plans.count(_._2.exists(p => "Join".r.findAllIn(p).nonEmpty))
     assert(joining >= 8, s"only $joining swept ops contain joins — seeding broke?")
     // and the anti-join sinks really swept their stored side (seeded paths)
-    Seq("stream_dv_hub_load", "stream_dv_sat_load", "stream_dv_link_load",
-        "stream_mart_refresh", "stream_dv_schema_load", "stream_ivf_incr",
+    Seq("stream_dv_schema_load", "stream_ivf_incr",
         "stream_near_dup", "stream_semantic_dedup_prod", "stream_pack_write").foreach { n =>
       assert(byName(n).exists(_.contains("LeftAnti")),
         s"$n plan lost its stored-side anti-join — the sweep is auditing a first-batch projection")
@@ -261,43 +243,6 @@ class StreamPlanSweepSpec extends SparkSpec {
         // at corpus-pair scale reshuffled the whole store per micro-batch.
         val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
         assert(exchanges <= 2, s"$name sink stored side shuffled ($exchanges exchanges):\n$p")
-      }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("standalone demo loaders' anti-join is Exchange-free on the bucketed stored side") {
-    // r15 (r14 verdict #9): the single-table teaching loaders (#40/#42/#45
-    // hub/sat/link + #47 mart refresh) took the same SinkRepo treatment as
-    // the pair/window sinks — stored rows live as ONE bucketed catalog
-    // object keyed by the anti-join key, so the per-micro-batch anti-join
-    // no longer reshuffles the whole store. Same pin as the sink test:
-    // forced shuffle joins, bucketed stored scan, no stored-side Exchange.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      Seq(
-        ("hub_load", Streams.hubLoadPlan(spark, ev.limit(50), "event_id", s"$tmp/hub", "t2")),
-        ("sat_load", Streams.satLoadPlan(spark, cust.limit(50), "c_custkey",
-          Seq("c_name", "c_acctbal"), s"$tmp/sat", "t2")),
-        ("link_load", Streams.linkLoadPlan(spark, ords.limit(50),
-          Seq("o_orderkey", "o_custkey"), s"$tmp/link", "t2")),
-        ("mart_refresh", Streams.martRefreshPlan(spark, ords.limit(50),
-          Streams.martDims(spark, sfDir), s"$tmp/mart", "t2"))
-      ).foreach { case (name, df) =>
-        val p = plan(df)
-        assert(p.contains("LeftAnti"), s"$name plan lost its anti-join:\n$p")
-        assert(p.contains("Bucketed: true") && p.contains("SelectedBucketsCount"),
-          s"$name stored side is not a bucketed scan:\n$p")
-        // batch-side exchanges only: the distinct/dedup agg + alignment to
-        // the bucket count; the stored side must contribute none. Mart's
-        // batch side additionally carries its per-key window exchange and
-        // the dim-lookup subtree's joins (SMJ under the forced-shuffle
-        // conf, hence the larger observed batch-side count) — one MORE
-        // exchange than the cap would mean the store reshuffles per
-        // micro-batch again.
-        val cap = if (name == "mart_refresh") 5 else 2
-        val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-        assert(exchanges <= cap, s"$name stored side shuffled ($exchanges exchanges):\n$p")
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }

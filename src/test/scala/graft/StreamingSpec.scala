@@ -1,15 +1,35 @@
 package graft
 
+import graft.dv.{ContinuousPipeline, SinkRepo}
 import graft.streaming.Streams
 import graft.streaming.Streams.{Ev, SessionUpdate}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+
+/** A customer source row carrying hub_customer's key and sat_customer's
+  * descriptors.
+  */
+final case class CustRow(c_custkey: Long, c_nationkey: Int, c_mktsegment: String)
+
+/** An orders source row carrying link_orders' member keys. */
+final case class OrdRow(o_orderkey: Long, o_custkey: Long)
 
 class StreamingSpec extends SparkSpec {
 
   private def day(d: Int, h: Int = 0, m: Int = 0): Long =
     1704067200000L + d * 86400000L + h * 3600000L + m * 60000L // 2024-01-01 + d days
+
+  /** The vault load (#44, [[ContinuousPipeline.sink]]) of `table` rows into
+    * an empty bucketed vault of `scope` under `dir`; returns the vault dir.
+    */
+  private def vaultSink(dir: String, rows: DataFrame, table: String,
+                        scope: Set[String]) = {
+    val st = ContinuousPipeline.State(s"$dir/catalog", s"$dir/responses",
+      emptyVault(s"$dir/repo", "streaming", scope))
+    st.repoDir -> ContinuousPipeline.sink(rows, table, st, s"$dir/ckpt").start()
+  }
 
   test("stream tumbling agg matches batch on the same rows") {
     import spark.implicits._
@@ -73,16 +93,16 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft_sat").toString
-    val mem = MemoryStream[Ev]
-    val q = Streams.satLoadSink(mem.toDF(), "user_id", Seq("event_type"), s"$dir/sat", s"$dir/ckpt").start()
-    mem.addData(Ev(1, day(0), 1, "a", 0), Ev(2, day(0), 1, "a", 0))
+    val mem = MemoryStream[CustRow]
+    val (repo, q) = vaultSink(dir, mem.toDF(), "customer", Set("hub_customer", "sat_customer"))
+    mem.addData(CustRow(1, 5, "a"), CustRow(1, 5, "a"))
     q.processAllAvailable()
-    mem.addData(Ev(3, day(0), 1, "a", 0)) // same user, same attrs -> no insert
-    mem.addData(Ev(4, day(0), 1, "b", 0)) // changed attribute -> one new version
+    mem.addData(CustRow(1, 5, "a")) // same customer, same attrs -> no insert
+    mem.addData(CustRow(1, 5, "b")) // changed attribute -> one new version
     q.processAllAvailable()
     q.stop()
-    val sat = graft.dv.SinkRepo.read(spark, s"$dir/sat")
-    assert(sat.count() == 2) // two (hk, hd) versions despite four events
+    val sat = spark.read.parquet(s"$repo/sat_customer")
+    assert(sat.count() == 2) // two (hk, hd) versions despite four rows
   }
 
   test("stream-stream join enriches purchases with in-window signups only") {
@@ -132,21 +152,21 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_filesrc").toString
     val src = s"$dir/incoming"
     // batch 1 lands before the stream starts
-    Seq(Ev(1, day(0), 1, "a", 0), Ev(2, day(0), 2, "a", 0)).toDF()
+    Seq(CustRow(1, 1, "a"), CustRow(2, 1, "a")).toDF()
       .write.mode("append").parquet(src)
     val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Ev].schema)
+      .schema(org.apache.spark.sql.Encoders.product[CustRow].schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
-    val q = Streams.hubLoadSink(stream, "user_id", s"$dir/hub", s"$dir/ckpt").start()
+    val (repo, q) = vaultSink(dir, stream, "customer", Set("hub_customer"))
     q.processAllAvailable()
-    // batch 2 arrives as a new file while the stream runs; user 2 repeats
-    Seq(Ev(3, day(0), 2, "a", 0), Ev(4, day(0), 3, "a", 0)).toDF()
+    // batch 2 arrives as a new file while the stream runs; customer 2 repeats
+    Seq(CustRow(2, 1, "a"), CustRow(3, 1, "a")).toDF()
       .write.mode("append").parquet(src)
     q.processAllAvailable()
     q.stop()
-    val hub = graft.dv.SinkRepo.read(spark, s"$dir/hub")
-    assert(hub.count() == 3 && hub.select("hub_hk").distinct().count() == 3)
+    val hub = spark.read.parquet(s"$repo/hub_customer").filter(col("record_source") =!= "SYSTEM")
+    assert(hub.count() == 3 && hub.select("hub_customer_hk").distinct().count() == 3)
   }
 
   test("streaming anomaly flags a spike against running integer stats") {
@@ -173,78 +193,36 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft_link").toString
-    val mem = MemoryStream[Ev]
-    // relationship = (user_id, event_type); re-delivered pairs must not double-insert
-    val q = Streams.linkLoadSink(mem.toDF(), Seq("user_id", "event_type"),
-      s"$dir/link", s"$dir/ckpt").start()
-    mem.addData(Ev(1, day(0), 1, "a", 0), Ev(2, day(0), 1, "b", 0))
+    val mem = MemoryStream[OrdRow]
+    // relationship = (order, customer); re-delivered pairs must not double-insert
+    val (repo, q) = vaultSink(dir, mem.toDF(), "orders", Set("link_orders"))
+    mem.addData(OrdRow(1, 1), OrdRow(2, 1))
     q.processAllAvailable()
-    mem.addData(Ev(3, day(0), 1, "a", 0), Ev(4, day(0), 2, "a", 0)) // (1,a) repeats
+    mem.addData(OrdRow(1, 1), OrdRow(3, 2)) // (1,1) repeats
     q.processAllAvailable()
     q.stop()
-    val link = graft.dv.SinkRepo.read(spark, s"$dir/link")
+    val link = spark.read.parquet(s"$repo/link_orders")
     assert(link.count() == 3)
-    assert(link.select("link_hk").distinct().count() == 3)
+    assert(link.select("link_orders_hk").distinct().count() == 3)
     // member hub hks and bk payload ride along
-    assert(link.columns.toSet ==
-      Set("link_hk", "load_ts", "hub_user_id_hk", "hub_event_type_hk", "user_id_bk", "event_type_bk"))
+    assert(link.columns.toSet == Set("link_orders_hk", "load_ts", "record_source",
+      "hub_order_hk", "hub_customer_hk", "o_orderkey_bk", "o_custkey_bk"))
   }
 
   test("streaming hub load appends only novel keys across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft_hub").toString
-    val mem = MemoryStream[Ev]
-    val q = Streams.hubLoadSink(mem.toDF(), "user_id", s"$dir/hub", s"$dir/ckpt").start()
-    mem.addData(Ev(1, day(0), 1, "a", 0), Ev(2, day(0), 2, "a", 0))
+    val mem = MemoryStream[CustRow]
+    val (repo, q) = vaultSink(dir, mem.toDF(), "customer", Set("hub_customer"))
+    mem.addData(CustRow(1, 1, "a"), CustRow(2, 1, "a"))
     q.processAllAvailable()
-    mem.addData(Ev(3, day(0), 2, "a", 0), Ev(4, day(0), 3, "a", 0)) // user 2 repeats
+    mem.addData(CustRow(2, 1, "a"), CustRow(3, 1, "a")) // customer 2 repeats
     q.processAllAvailable()
     q.stop()
-    val hub = graft.dv.SinkRepo.read(spark, s"$dir/hub")
+    val hub = spark.read.parquet(s"$repo/hub_customer").filter(col("record_source") =!= "SYSTEM")
     assert(hub.count() == 3)
-    assert(hub.select("hub_hk").distinct().count() == 3)
-  }
-
-  test("streaming mart refresh: order batches land as resolved mart rows, no double-inserts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_mart").toString
-    val dims = Streams.martDims(spark, sfDir)
-    // pick two real customers so the dim join resolves
-    val custs = Tables.load(spark, sfDir, "customer")
-      .select(col("c_custkey")).orderBy("c_custkey").limit(2)
-      .collect().map(_.getLong(0))
-    val mem = MemoryStream[Streams.OrderRow]
-    val q = Streams.martRefreshSink(mem.toDF(), dims, s"$dir/mart", s"$dir/ckpt").start()
-    mem.addData(
-      Streams.OrderRow(9001L, custs(0), "O", 100.0),
-      Streams.OrderRow(9002L, custs(1), "F", 250.0))
-    q.processAllAvailable()
-    mem.addData(
-      Streams.OrderRow(9001L, custs(0), "O", 100.0), // redelivered — must not double-land
-      Streams.OrderRow(9003L, custs(0), "P", 75.0),
-      Streams.OrderRow(9003L, custs(0), "F", 75.0), // same key TWICE in one batch
-      Streams.OrderRow(9004L, 999999L, "O", 10.0))  // customer not in the dimension
-    q.processAllAvailable()
-    q.stop()
-    val mart = graft.dv.SinkRepo.read(spark, s"$dir/mart")
-    assert(mart.count() == 4)
-    assert(mart.select("hub_order_hk").distinct().count() == 4)
-    // within-batch same-key delivery kept ONE deterministic representative
-    assert(mart.filter(col("o_orderkey_bk") === "9003").count() == 1)
-    assert(mart.filter(col("o_orderkey_bk") === "9003")
-      .select("o_orderstatus").collect()(0).getString(0) == "F")
-    // a fact whose customer hasn't reached the dimension still lands (UNKNOWN member)
-    assert(mart.filter(col("o_orderkey_bk") === "9004")
-      .select("region").collect()(0).getString(0) == "UNKNOWN")
-    // the dimension resolved for every known customer
-    val regions = Tables.load(spark, sfDir, "region")
-      .select("r_name").collect().map(_.getString(0)).toSet
-    assert(mart.filter(col("o_orderkey_bk") =!= "9004")
-      .select("region").collect().forall(r => regions(r.getString(0))))
-    // insert-only: the batch-1 row kept its original attributes
-    assert(mart.filter(col("o_orderkey_bk") === "9001").count() == 1)
+    assert(hub.select("hub_customer_hk").distinct().count() == 3)
   }
 
   test("stateful transitions chain across micro-batch boundaries") {
@@ -745,7 +723,7 @@ class StreamingSpec extends SparkSpec {
       // drift log: per-cell arrivals across the two batches sum to the
       // registered batch op's n_arrived
       val batchOp = SparkEntry.queries("ann_ivf_incr")(spark, sfDir)
-      val streamedArrivals = spark.read.parquet(driftPath)
+      val streamedArrivals = SinkRepo.read(spark, driftPath)
         .groupBy("cell").agg(sum("n_arrived").as("n")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       batchOp.select("cell", "n_arrived").collect().foreach { r =>
