@@ -40,7 +40,7 @@ object Tables {
     * broadcast-scale dims, hash-distributes on ONE key-named column (NOT
     * round-robin — keyless repartition(n) locally sorts its single input
     * partition first, guide §2.5; NOT a whole-row hash — that would defeat
-    * column pruning). `GRAFT_BALANCE_SCANS=off` restores raw scans.
+    * column pruning).
     * Row order is free to change: every operator is order-insensitive by
     * construction (SURVEY §5; the full gate re-proves it at every SF).
     */
@@ -53,8 +53,7 @@ object Tables {
       graft.queries.SessionCache.onSessionEnd(spark, "balance_cache") {
         balanceCache.keys.filter(_._1 eq spark).foreach(balanceCache.remove)
       }
-      !sys.env.get("GRAFT_BALANCE_SCANS").contains("off") &&
-        dirBytes(p) >= BalanceMinBytes &&
+      dirBytes(p) >= BalanceMinBytes &&
         df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism
     })
     (want, balanceKey(df)) match {

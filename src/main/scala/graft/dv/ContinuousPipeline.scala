@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * transformer_responses scale). Where the reference rewrites them with
   * transactional UPDATEs, every rewrite here is a
   * [[DvMaintenance.swap]] (stage beside, move in, lease-guarded) and every
-  * turn [[DvMaintenance.restore]]s both dirs first, so a crash at any step
-  * of a turn is repaired by replaying it. The vault data itself only ever
+  * probe of either dir asks [[DvMaintenance.liveExists]], so a crash at any
+  * step of a turn is repaired by replaying it. The vault data itself only ever
   * APPENDS through the bucketed-aware loader.
   */
 object ContinuousPipeline {
@@ -133,7 +133,7 @@ object ContinuousPipeline {
     */
   private def loopStateCurrent(s: SparkSession, st: State, table: String, batch: DataFrame,
                                scanTs: String): Boolean =
-    DvLoader.pathExists(s, st.catalogDir) && DvLoader.pathExists(s, st.responsesDir) && {
+    DvMaintenance.liveExists(s, st.catalogDir) && DvMaintenance.liveExists(s, st.responsesDir) && {
       // typed as CatalogScd2 writes them; valid_to is not needed here
       val slice = s.read.schema("table_name STRING, column_name STRING, ordinal INT, " +
           "data_type STRING, valid_from STRING, current_flag STRING, deleted_flag STRING")
@@ -167,7 +167,7 @@ object ContinuousPipeline {
       // against a one-table snapshot would flag every OTHER table's
       // columns as vanished
       val mergedState =
-        if (DvLoader.pathExists(s, st.catalogDir)) {
+        if (DvMaintenance.liveExists(s, st.catalogDir)) {
           val prev = s.read.parquet(st.catalogDir)
           CatalogScd2.merge(prev.filter(col("table_name") === table), snap, scanTs)
             .unionByName(prev.filter(col("table_name") =!= table))
@@ -181,7 +181,7 @@ object ContinuousPipeline {
     //    every other column carry forward untouched. Scoped to THIS
     //    table: two sinks can stamp the same scanTs, and another table's
     //    same-stamp rows must not be anti-joined out of the responses.
-    val prior = Option.when(DvLoader.pathExists(s, st.responsesDir))(
+    val prior = Option.when(DvMaintenance.liveExists(s, st.responsesDir))(
       s.read.parquet(st.responsesDir))
     val current = s.read.parquet(st.catalogDir)
       .filter(col("table_name") === table &&
@@ -215,8 +215,6 @@ object ContinuousPipeline {
     */
   def onBatch(s: SparkSession, st: State, table: String, batch: DataFrame,
               scanTs: String, loadTs: String): Unit = {
-    DvMaintenance.restore(st.catalogDir)
-    DvMaintenance.restore(st.responsesDir)
     if (!loopStateCurrent(s, st, table, batch, scanTs))
       refreshLoopState(s, st, table, batch, scanTs)
     val schema = DvLoader.readSchema(s, st.repoDir)
@@ -225,7 +223,7 @@ object ContinuousPipeline {
     //    rides along as the sensitive-satellite suppression list, so a
     //    replayed feed still carrying purged victims resurrects nothing
     DvLoader.streamTableLoadBatch(s, schema, conformToRepo(schema, batch, table),
-      table, st.repoDir, loadTs, st.erasureDir)
+      table, loadTs, st.erasureDir)
     // 4. physical erasure between loads (r12 verdict #7)
     st.erasureDir.foreach(ed => purgeAndMark(s, st, pendingErasures(s, ed), loadTs, schema))
   }
@@ -297,7 +295,7 @@ object ContinuousPipeline {
       import s.implicits._
       val ed = st.erasureDir.getOrElse(sys.error("purgeAndMark without an erasureDir"))
       val results = pending.groupBy(_.obj).toSeq.sortBy(_._1).map { case (obj, es) =>
-        val hkCol = DvLoader.schemaKeys(schema, obj).head
+        val hkCol = schema.keys(obj).head
         val victims = es.map(_.hk).toDF(hkCol)
         val (b, a) = DvMaintenance.purgeSensitive(s, st.repoDir, obj, victims, hkCol)
         (obj, b, a)

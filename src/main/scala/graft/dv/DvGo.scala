@@ -17,7 +17,7 @@ import graft.Tables
 object DvGo {
   import DvPlanner._
 
-  final case class BuildResult(buildId: String, outDir: String, objects: Seq[(String, Long)])
+  final case class BuildResult(buildId: String, repo: DvLoader.Repo, objects: Seq[(String, Long)])
 
   /** Source-parquet bytes past which the bucketed build goes fully
     * object-sequential (~= sf2 of the gate tables on this testdata).
@@ -135,7 +135,7 @@ object DvGo {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val prefix = DvLoader.tablePrefix(outDir)
+    val repo = DvLoader.Repo(outDir, DvLoader.Bucketing(DvLoader.tablePrefix(outDir), buckets))
     def writeOne(name: String, df: DataFrame): (String, Long) = {
       val obs = org.apache.spark.sql.Observation(s"go_${name}_${System.nanoTime()}")
       // one file per bucket: without the writer's repartition every
@@ -143,7 +143,7 @@ object DvGo {
       // files per object — measured 2x build wall-time at sf0.1) and
       // the first compaction pays the same shuffle anyway
       DvLoader.bucketedWriter(df.observe(obs, count(lit(1)).as("n")), bucketKeys(p, name),
-        buckets, s"$outDir/$name").saveAsTable(s"$prefix$name")
+        buckets, repo.path(name)).saveAsTable(repo.table(name))
       name -> obs.get("n").asInstanceOf[Long]
     }
     val counts = try {
@@ -182,15 +182,12 @@ object DvGo {
         builds.map { case (name, _) => name -> got(name) }
       }
     } finally shared.values.foreach(_.unpersist())
-    val schemaJson = planJson(p, buildId, include, bucketing = (prefix, buckets))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/dv_schema.json"), schemaJson)
+    DvLoader.writeText(s, s"$outDir/dv_schema.json",
+      planJson(p, buildId, include, bucketing = (repo.layout.tablePrefix, buckets)))
     // DDL scoped to what this build wrote (sat_orders_link, for example, is
     // a standalone operator, not a go() object — it must not be advertised)
-    val built = builds.map(_._1).toSet
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/dv_schema.sql"), DvSqlGen.allDdl(p, built))
-    BuildResult(buildId, outDir, counts)
+    DvLoader.writeText(s, s"$outDir/dv_schema.sql", DvSqlGen.allDdl(p, builds.map(_._1).toSet))
+    BuildResult(buildId, repo, counts)
   }
 
   /** dv_repo JSON: the serialized plan (hand-rolled; no JSON lib on the CP).
@@ -256,7 +253,7 @@ object DvGo {
     * single writer.
     *
     * Only a MISSING history is "no builds yet" (sequence 1), the rule
-    * [[DvLoader.appendNovel]] follows: a history that exists but whose
+    * [[DvLoader.Repo.novel]] follows: a history that exists but whose
     * `build_seq` cannot be read (the column is missing, the files are not
     * parquet) fails before the build runs, and nothing is appended to it.
     */
@@ -460,13 +457,15 @@ object DvGo {
 
   /** Query-shaped wrapper: runs the full build into a temp dir and returns
     * the (object, row_count) summary — the driver-checkable face of go().
+    * The counts are observed on the write and do not depend on the bucket
+    * count, so the throwaway vault takes goBucketedE2E's 16, not 64.
     */
   def goSummary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_go_").toString
     // the summary lives in res.objects (driver-side counts from observe()),
     // so the materialized temp vault can be disposed of immediately
-    try go(s, dir, out).objects.toDF("object", "row_count").orderBy("object")
+    try go(s, dir, out, buckets = 16).objects.toDF("object", "row_count").orderBy("object")
     finally disposeTempVault(s, out)
   }
 
@@ -478,7 +477,7 @@ object DvGo {
     * once surfaced as the cleanup's DirectoryNotEmptyException and hid the
     * real cause), so it logs instead.
     */
-  private[dv] def disposeTempVault(s: SparkSession, root: String,
+  private[graft] def disposeTempVault(s: SparkSession, root: String,
                                    vaults: Seq[String] = Nil): Unit = {
     val prefixes = (root +: vaults).map(DvLoader.tablePrefix)
     try {
@@ -529,7 +528,6 @@ object DvGo {
   def goBucketedE2E(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_go_bkt_").toString
-    val prefix = DvLoader.tablePrefix(out)
     // try/finally (round-6 advice): a failure anywhere in the lifecycle
     // must not leak the temp vault directory or its graft_dv_* session
     // catalog tables for the rest of the session
@@ -554,7 +552,7 @@ object DvGo {
       // driver-side (objects-scale) so the temp vault and its catalog
       // entries can be dropped immediately
       val counts = Await.result(Future.sequence(res.objects.map(_._1).sorted.map { obj =>
-        Future(obj -> s.table(s"$prefix$obj").count())
+        Future(obj -> s.table(res.repo.table(obj)).count())
       }), Duration.Inf)
       counts.toDF("object", "row_count").orderBy("object")
     } finally disposeTempVault(s, out)
@@ -607,9 +605,8 @@ object DvGo {
     val spec = satCustomerSensitive
     val obj = s"sat_${spec.name}"
     val out = java.nio.file.Files.createTempDirectory("graft_dv_purge_").toString
-    val prefix = DvLoader.tablePrefix(out)
     try {
-      go(s, dir, out, buckets = 8, include = Set("hub_customer", obj))
+      val repo = go(s, dir, out, buckets = 8, include = Set("hub_customer", obj)).repo
       val victims = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") % PurgeMod === PurgeRes)
         .select(dvHash(spec.bkParts.map(p => canon(col(p.name), p.typeName)))
@@ -621,7 +618,7 @@ object DvGo {
         val hp = new org.apache.hadoop.fs.Path(resPath)
         hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       }
-      s.table(s"$prefix$obj")
+      s.table(repo.table(obj))
         .select((Seq(col(spec.hkName), col("load_ts"), col("record_source"),
           col(spec.hdName)) ++ spec.descriptors.map(d => col(d.name))): _*)
         .write.mode("overwrite").parquet(resPath)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * in the repo and `dv_data_loader` generates the hub/sat DML from it
   * (controller/dv_loader.rs:5-66). Here: parse `dv_schema.json` back into
   * typed specs and drive the (hk) / (hk, hd) anti-join increments against
-  * the stored objects through [[appendNovel]] — the one insert-only append
+  * the stored objects through [[Repo.append]] — the one insert-only append
   * path, which the streaming sinks and the IVF index share.
   *
   * At scale this is the steady-state pipeline: build once, then every
@@ -19,22 +19,143 @@ import org.apache.spark.sql.functions._
 object DvLoader {
 
   /** The bucket spec every repo pins (dv_schema.json's `bucketing` block,
-    * `sink_meta.json`, `ivf_meta.json`): objects live as catalog tables
-    * `<tablePrefix><object>` bucketed by their anti-join keys, so loads
-    * read and append through the catalog — reading the parquet path
-    * directly would drop the bucket metadata and reintroduce the
-    * stored-side shuffle. A session whose catalog lacks a table
-    * re-registers it from the repo path and this spec ([[registerBucketed]]).
+    * `sink_meta.json`, `ivf_meta.json`).
     */
   final case class Bucketing(tablePrefix: String, buckets: Int)
 
-  /** A parsed repo schema. Every repo is bucketed: `layout` is its
+  /** A bucketed repo — a vault, a sink or the IVF index — and the one
+    * read, plan and append path for its objects. Objects live under `dir`
+    * as catalog tables `<tablePrefix><object>` bucketed by their anti-join
+    * keys, so loads read and append through the catalog: reading the
+    * parquet path directly would drop the bucket metadata and reintroduce
+    * the stored-side shuffle. A session whose catalog lacks a table
+    * re-registers it from the object's dir and the layout. Rewrites are
+    * [[DvMaintenance.rewriteObject]]s of the repo. Nested in DvLoader so
+    * its jobs keep the `DvLoader` layer (perfbench cuts class names at `$`).
+    */
+  final case class Repo(dir: String, layout: Bucketing) {
+
+    /** The dir holding object `obj`'s files. */
+    def path(obj: String): String = s"$dir/$obj"
+
+    /** The catalog table of object `obj`. */
+    def table(obj: String): String = s"${layout.tablePrefix}$obj"
+
+    /** Object `obj` through the session catalog (registered if this
+      * session lacks the entry), so the read carries the bucket spec and
+      * keyed anti-joins need no Exchange on this side.
+      */
+    def read(s: SparkSession, obj: String, keys: Seq[String]): DataFrame = {
+      if (!s.catalog.tableExists(table(obj))) register(s, obj, keys)
+      s.table(table(obj))
+    }
+
+    /** The insert-only load step shared by every vault object, sink and
+      * index (dv_loader.rs:166-199, 325-357): the `rows` whose `keys` are
+      * absent from object `obj` — the unwritten plan [[append]] writes,
+      * exposed for the plan sweeps.
+      *
+      * ONLY a missing object means "nothing stored yet" (full insert), as
+      * [[DvMaintenance.liveExists]] answers it: a copy a crashed swap left
+      * set aside is put back first, or its rows would re-insert. A stored
+      * object that cannot be read with its keys (schema drift, a renamed
+      * hash-key column) fails the load loudly, or every batch would
+      * silently degrade to a full duplicate insert.
+      */
+    def novel(s: SparkSession, obj: String, keys: Seq[String], rows: DataFrame): DataFrame =
+      if (!DvMaintenance.liveExists(s, path(obj))) rows
+      else rows.join(read(s, obj, keys).select(keys.head, keys.tail: _*), keys, "left_anti")
+
+    /** Append [[novel]] to object `obj` through the catalog under the
+      * bucket spec (a plain parquet append would corrupt the layout),
+      * creating the external table over the object's dir on the first
+      * write, and return how many rows landed. The count rides on the
+      * write pass via an Observation: one action, no cache. Under the
+      * object's writer lease, so an append overlapping a rewrite or another
+      * append of the SAME object fails loudly; distinct objects append
+      * concurrently.
+      */
+    def append(s: SparkSession, obj: String, keys: Seq[String], rows: DataFrame): Long = {
+      val obs = org.apache.spark.sql.Observation()
+      val landing = novel(s, obj, keys, rows).observe(obs, count(lit(1)).as("n"))
+      DvMaintenance.withLease(path(obj), "append") {
+        val w = landing.write.mode("append").format("parquet")
+          .bucketBy(layout.buckets, keys.head, keys.tail: _*)
+          .sortBy(keys.head, keys.tail: _*)
+        (if (s.catalog.tableExists(table(obj))) w
+         else w.option("path", path(obj))).saveAsTable(table(obj))
+      }
+      obs.get("n").asInstanceOf[Long]
+    }
+
+    /** Re-register a bucketed table over the object's existing files —
+      * the fresh-session path: the files carry Spark's bucketed naming,
+      * so an external CLUSTERED BY table with the identical spec reads
+      * them shuffle-free exactly like the building session's entry did.
+      */
+    private def register(s: SparkSession, obj: String, keys: Seq[String]): Unit = {
+      val ddlSchema = s.read.parquet(path(obj)).schema.toDDL
+      val keyList = keys.mkString(", ")
+      // single quotes in the path are legal POSIX — escape them or the
+      // generated LOCATION literal breaks for such repos
+      val loc = path(obj).replace("'", "''")
+      // IF NOT EXISTS: two sessions racing the re-registration on a shared
+      // metastore must both proceed, not crash the loser's load
+      s.sql(s"""CREATE TABLE IF NOT EXISTS ${table(obj)} ($ddlSchema) USING parquet
+               |CLUSTERED BY ($keyList) SORTED BY ($keyList) INTO ${layout.buckets} BUCKETS
+               |LOCATION '$loc'""".stripMargin)
+    }
+  }
+
+  object Repo {
+
+    /** The repo at `dir` whose layout `<dir>/<meta>` (`sink_meta.json`,
+      * `ivf_meta.json`) pins; None without that file. Vaults: [[readSchema]].
+      */
+    def open(s: SparkSession, dir: String, meta: String): Option[Repo] = {
+      val mp = s"$dir/$meta"
+      Option.when(pathExists(s, mp))(Repo(dir, bucketingOf(readJson(s, mp), mp)))
+    }
+
+    /** Pin `{table_prefix, buckets}` in `<dir>/<meta>` unless it exists,
+      * then [[open]] the repo: `buckets` only applies to the creating call.
+      * Write-temp + rename, so no reader sees a partial meta file. HDFS's
+      * rename refuses an existing target, so racers on a fresh repo read
+      * ONE winner's spec; the local FS's rename replaces it, so there
+      * racers pinning different bucket counts may each read their own.
+      */
+    def pin(s: SparkSession, dir: String, meta: String, buckets: Int): Repo = {
+      val mp = new org.apache.hadoop.fs.Path(dir, meta)
+      val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (!fs.exists(mp)) {
+        val tmp = new org.apache.hadoop.fs.Path(dir,
+          s".$meta.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+        writeText(s, tmp.toString,
+          s"""{"table_prefix": "${tablePrefix(dir)}", "buckets": $buckets}""")
+        if (!fs.rename(tmp, mp)) fs.delete(tmp, false)
+      }
+      open(s, dir, meta).get
+    }
+  }
+
+  /** A parsed repo schema. Every vault is bucketed: `repo` carries the
     * `bucketing` block.
     */
   final case class DvSchemaRef(hubs: Seq[HubSpec], sats: Seq[SatSpec], links: Seq[LinkSpec],
-                               layout: Bucketing) {
-    /** [[layout]] as an Option, for callers that `.get` it; never None. */
-    def bucketing: Option[Bucketing] = Some(layout)
+                               repo: Repo) {
+    /** The repo's layout as an Option, for callers that `.get` it; never None. */
+    def bucketing: Option[Bucketing] = Some(repo.layout)
+
+    /** Anti-join keys of object `obj`, derived from the PARSED schema (not
+      * the static plan registry — a hand-authored dv_schema.json must load
+      * with its own keys): hash key for hubs/links, (hash key, hash diff)
+      * for satellites.
+      */
+    def keys(obj: String): Seq[String] =
+      hubs.find(h => s"hub_${h.name}" == obj).map(h => Seq(h.hkName))
+        .orElse(sats.find(t => s"sat_${t.name}" == obj).map(t => Seq(t.hkName, t.hdName)))
+        .orElse(links.find(l => s"link_${l.name}" == obj).map(l => Seq(l.hkName)))
+        .getOrElse(sys.error(s"object $obj not in the repo schema"))
   }
 
   /** Parse the repo's dv_schema.json back into typed specs.
@@ -70,7 +191,7 @@ object DvLoader {
         arr(l, "members").map(m =>
           LinkMember(m.get("hub").asText(), cols(m, "parts"))),
         cols(l, "degenerate")))
-    DvSchemaRef(hubs, sats, links, layout)
+    DvSchemaRef(hubs, sats, links, Repo(repoDir, layout))
   }
 
   /** One graft-authored JSON document, parsed driver-side through the
@@ -92,36 +213,21 @@ object DvLoader {
     Bucketing(field("table_prefix").asText(), field("buckets").asInt())
   }
 
-  /** The bucket spec pinned in a repo meta file (`sink_meta.json`,
-    * `ivf_meta.json`) — None when the file does not exist.
+  /** Write `text` to the file `path` (replacing it) through the session's
+    * Hadoop FS — the one writer of repo meta (dv_schema.json/.sql and the
+    * sink and index meta files). A checksummed FS (the local one) writes
+    * through its raw FS: a `.crc` sidecar would make a hand-edited meta
+    * file unreadable.
     */
-  private[graft] def readBucketing(s: SparkSession, metaPath: String): Option[Bucketing] =
-    Option.when(pathExists(s, metaPath))(bucketingOf(readJson(s, metaPath), metaPath))
-
-  /** Pin `{table_prefix, buckets}` in the meta file `<dir>/<name>` unless
-    * it exists, then return the pinned spec: `buckets` only applies to the
-    * creating call. Creation is write-temp + rename through the session's
-    * Hadoop FS: rename does not overwrite, so two sessions racing a fresh
-    * repo both end up reading ONE winner's spec instead of interleaving a
-    * partial write.
-    */
-  private[graft] def pinBucketing(s: SparkSession, dir: String, name: String,
-                                  buckets: Int): Bucketing = {
-    val mp = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mp)) {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        s".$name.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      scala.util.Using.resource(fs.create(tmp, false)) { out =>
-        out.write(s"""{"table_prefix": "${tablePrefix(dir)}", "buckets": $buckets}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      // the loser of a creation race cleans up its temp and reads the
-      // winner's pinned spec
-      if (!fs.rename(tmp, mp)) fs.delete(tmp, false)
+  private[dv] def writeText(s: SparkSession, path: String, text: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
     }
-    readBucketing(s, mp.toString).get
+    scala.util.Using.resource(fs.create(p, true)) {
+      _.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
   }
 
   /** Catalog table prefix of a bucketed repo (vault, sink or IVF index),
@@ -136,30 +242,6 @@ object DvLoader {
       .replace("-", "").take(12) + "_"
   }
 
-  /** Anti-join keys per schema object, derived from the PARSED schema (not
-    * the static plan registry — a hand-authored dv_schema.json must load
-    * with its own keys): hash key for hubs/links, (hash key, hash diff)
-    * for satellites.
-    */
-  private[dv] def schemaKeys(schema: DvSchemaRef, obj: String): Seq[String] =
-    schema.hubs.find(h => s"hub_${h.name}" == obj).map(h => Seq(h.hkName))
-      .orElse(schema.sats.find(t => s"sat_${t.name}" == obj).map(t => Seq(t.hkName, t.hdName)))
-      .orElse(schema.links.find(l => s"link_${l.name}" == obj).map(l => Seq(l.hkName)))
-      .getOrElse(sys.error(s"object $obj not in the repo schema"))
-
-  /** Generic bucketed-object READ: through the session catalog
-    * (re-registered if this session lacks the entry) so the table read
-    * carries the bucket spec and keyed anti-joins need no Exchange on
-    * this side.
-    */
-  private[graft] def storedObject(s: SparkSession, repoDir: String, obj: String,
-                                  keys: Seq[String], b: Bucketing): DataFrame = {
-    val table = s"${b.tablePrefix}$obj"
-    if (!s.catalog.tableExists(table))
-      registerBucketed(s, repoDir, obj, keys, b)
-    s.table(table)
-  }
-
   /** The one bucketed OVERWRITE writer (the build's objects and every
     * rewrite's stage): repartition by the bucket keys, then coalesce to
     * at most `defaultParallelism` tasks. Repartition's hash IS the
@@ -170,7 +252,7 @@ object DvLoader {
     * rewrite's bucketed catalog scan), the planner drops the repartition
     * and no shuffle runs; otherwise (the build) it shuffles once. The
     * caller names the table in `saveAsTable`, so the write's job carries
-    * the caller's call site. Appends go through [[appendObject]] instead:
+    * the caller's call site. Appends go through [[Repo.append]] instead:
     * they must not repartition.
     */
   private[dv] def bucketedWriter(df: DataFrame, keys: Seq[String], buckets: Int,
@@ -181,70 +263,6 @@ object DvLoader {
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .option("path", path)
-
-  /** Generic bucketed-object APPEND (see [[storedObject]]): through the
-    * catalog under the object's bucket spec, creating the external table
-    * over the repo path on the first write.
-    */
-  private[graft] def appendObject(s: SparkSession, repoDir: String, obj: String,
-                                  keys: Seq[String], b: Bucketing,
-                                  novel: DataFrame): Unit =
-    // Lease (r13 verdict #3): an append overlapping a stage-and-swap
-    // rewrite (or another append to the SAME object) fails loudly
-    // instead of racing the swap's file moves. Distinct objects append
-    // concurrently as before — the lease is per object.
-    DvMaintenance.withLease(repoDir, obj, "append") {
-      val table = s"${b.tablePrefix}$obj"
-      val w = novel.write.mode("append").format("parquet")
-        .bucketBy(b.buckets, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-      (if (s.catalog.tableExists(table)) w
-       else w.option("path", s"$repoDir/$obj")).saveAsTable(table)
-    }
-
-  /** The insert-only load step shared by every vault object, sink and
-    * index (dv_loader.rs:166-199, 325-357): the `rows` whose `keys` are
-    * absent from the bucketed object stored at `path` — the unwritten
-    * plan [[appendNovel]] appends, exposed for the plan sweeps.
-    *
-    * ONLY a missing path means "nothing stored yet" (full insert), and
-    * only after [[DvMaintenance.restore]] put back a copy a crashed swap
-    * left set aside — otherwise that copy's rows would re-insert. A
-    * stored object that cannot be read with its keys (schema drift, a
-    * renamed hash-key column) fails the load loudly, or every batch would
-    * silently degrade to a full duplicate insert. The stored side reads
-    * through the catalog, so the anti-join needs no Exchange on that side.
-    */
-  private[graft] def novelRows(s: SparkSession, rows: DataFrame, path: String,
-                               keys: Seq[String], b: Bucketing): DataFrame = {
-    DvMaintenance.restore(path)
-    if (!pathExists(s, path)) rows
-    else {
-      val (dir, obj) = splitObject(path)
-      rows.join(storedObject(s, dir, obj, keys, b).select(keys.head, keys.tail: _*),
-        keys, "left_anti")
-    }
-  }
-
-  /** Append [[novelRows]] to `path` through the catalog under its bucket
-    * spec and writer lease ([[appendObject]]; a plain parquet append would
-    * corrupt the layout) and return how many landed. The count rides on
-    * the write pass via an Observation: one action, no cache.
-    */
-  private[graft] def appendNovel(s: SparkSession, rows: DataFrame, path: String,
-                                 keys: Seq[String], b: Bucketing): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    val (dir, obj) = splitObject(path)
-    appendObject(s, dir, obj, keys, b,
-      novelRows(s, rows, path, keys, b).observe(obs, count(lit(1)).as("n")))
-    obs.get("n").asInstanceOf[Long]
-  }
-
-  /** `<repoDir>/<obj>` -> (repoDir, obj), the catalog-object coordinates. */
-  private[dv] def splitObject(path: String): (String, String) = {
-    val i = path.lastIndexOf('/')
-    (path.take(i), path.drop(i + 1))
-  }
 
   /** One schema object's load: its name, anti-join keys and shaped rows. */
   private final case class ObjectLoad(obj: String, keys: Seq[String], rows: DataFrame)
@@ -287,13 +305,13 @@ object DvLoader {
     * batch — the scheduler interleaves their jobs, like DvGo.go's builds).
     * Returns (object, n_appended).
     */
-  private def appendLoads(s: SparkSession, repoDir: String, schema: DvSchemaRef,
+  private def appendLoads(s: SparkSession, schema: DvSchemaRef,
                           loads: Seq[ObjectLoad]): Seq[(String, Long)] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     Await.result(Future.sequence(loads.map(l => Future(
-      l.obj -> appendNovel(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.layout)))),
+      l.obj -> schema.repo.append(s, l.obj, l.keys, l.rows)))),
       Duration.Inf)
   }
 
@@ -309,7 +327,7 @@ object DvLoader {
       schema.sats.map(t => s"sat_${t.name}" -> t.sourceTable) ++
       schema.links.map(l => s"link_${l.name}" -> l.sourceTable))
       .collect { case (obj, table) if scope(obj) => table }.distinct
-    fed.flatMap(t => appendLoads(s, repoDir, schema,
+    fed.flatMap(t => appendLoads(s, schema,
       tableLoads(s, schema, graft.Tables.load(s, dir, t), t, loadTs, None).filter(l => scope(l.obj))))
   }
 
@@ -323,16 +341,16 @@ object DvLoader {
   def streamTableLoadBatch(s: SparkSession, batch: DataFrame, tableName: String,
                            repoDir: String, loadTs: String,
                            suppressDir: Option[String] = None): Unit =
-    streamTableLoadBatch(s, readSchema(s, repoDir), batch, tableName, repoDir, loadTs, suppressDir)
+    streamTableLoadBatch(s, readSchema(s, repoDir), batch, tableName, loadTs, suppressDir)
 
   /** [[streamTableLoadBatch]] against a repo schema the caller already
     * parsed (the micro-batch turn parses `dv_schema.json` once and shares
     * it with its conform and purge steps).
     */
   def streamTableLoadBatch(s: SparkSession, schema: DvSchemaRef, batch: DataFrame,
-                           tableName: String, repoDir: String, loadTs: String,
+                           tableName: String, loadTs: String,
                            suppressDir: Option[String]): Unit =
-    appendLoads(s, repoDir, schema, tableLoads(s, schema, batch, tableName, loadTs, suppressDir))
+    appendLoads(s, schema, tableLoads(s, schema, batch, tableName, loadTs, suppressDir))
 
   /** The per-object micro-batch PLANS of the schema-driven streaming load
     * — (object name, novel-rows frame) pairs, exposed unwritten so the
@@ -344,26 +362,7 @@ object DvLoader {
                            suppressDir: Option[String] = None): Seq[(String, DataFrame)] = {
     val schema = readSchema(s, repoDir)
     tableLoads(s, schema, batch, tableName, loadTs, suppressDir).map(l =>
-      l.obj -> novelRows(s, l.rows, s"$repoDir/${l.obj}", l.keys, schema.layout))
-  }
-
-  /** Re-register a bucketed vault table over its existing repo files —
-    * the fresh-session path: the files carry Spark's bucketed naming, so
-    * an external CLUSTERED BY table with the identical spec reads them
-    * shuffle-free exactly like the building session's catalog entry did.
-    */
-  private[dv] def registerBucketed(s: SparkSession, repoDir: String, obj: String,
-                                   keys: Seq[String], b: Bucketing): Unit = {
-    val ddlSchema = s.read.parquet(s"$repoDir/$obj").schema.toDDL
-    val keyList = keys.mkString(", ")
-    // single quotes in the path are legal POSIX — escape them or the
-    // generated LOCATION literal breaks for such repos
-    val loc = s"$repoDir/$obj".replace("'", "''")
-    // IF NOT EXISTS: two sessions racing the re-registration on a shared
-    // metastore must both proceed, not crash the loser's load
-    s.sql(s"""CREATE TABLE IF NOT EXISTS ${b.tablePrefix}$obj ($ddlSchema) USING parquet
-             |CLUSTERED BY ($keyList) SORTED BY ($keyList) INTO ${b.buckets} BUCKETS
-             |LOCATION '$loc'""".stripMargin)
+      l.obj -> schema.repo.novel(s, l.obj, l.keys, l.rows))
   }
 
   /** Existence probe through the session's Hadoop FS (works for any
@@ -382,25 +381,24 @@ object DvLoader {
   def loadFromRepo(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import DvPlanner.{hubCustomer, satCustomer}
-    val repo = java.nio.file.Files.createTempDirectory("graft_dv_repo_").toString
-    val b = Bucketing(tablePrefix(repo), 8)
+    val out = java.nio.file.Files.createTempDirectory("graft_dv_repo_").toString
+    val repo = Repo(out, Bucketing(tablePrefix(out), 8))
     val keep = expr("cast(c_custkey_bk as bigint) % 5 != 0") // ghosts (-1,-2) stay
     try {
       // ordered = false: seed frames are written, never read ordered (r14)
       val hub0 = DvBuild.hub(s, dir, hubCustomer, ordered = false).filter(keep)
-      bucketedWriter(hub0, Seq(hubCustomer.hkName), b.buckets, s"$repo/hub_customer")
-        .saveAsTable(s"${b.tablePrefix}hub_customer")
+      bucketedWriter(hub0, Seq(hubCustomer.hkName), repo.layout.buckets, repo.path("hub_customer"))
+        .saveAsTable(repo.table("hub_customer"))
       bucketedWriter(DvBuild.sat(s, dir, satCustomer, ordered = false)
           .join(hub0.select(satCustomer.hkName), Seq(satCustomer.hkName), "left_semi"),
-        Seq(satCustomer.hkName, satCustomer.hdName), b.buckets, s"$repo/sat_customer")
-        .saveAsTable(s"${b.tablePrefix}sat_customer")
+        Seq(satCustomer.hkName, satCustomer.hdName), repo.layout.buckets, repo.path("sat_customer"))
+        .saveAsTable(repo.table("sat_customer"))
       val scope = Set("hub_customer", "sat_customer")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$repo/dv_schema.json"),
-        DvGo.planJson(DvPlanner.literalPlan, "repo-load-demo", scope, (b.tablePrefix, b.buckets)))
+      writeText(s, s"$out/dv_schema.json", DvGo.planJson(DvPlanner.literalPlan,
+        "repo-load-demo", scope, (repo.layout.tablePrefix, repo.layout.buckets)))
       // the counts are driver-side, so the seeded repo can go right away
-      incrementalLoad(s, dir, repo, scope = scope).toDF("object", "n_new").orderBy("object")
-    } finally DvGo.disposeTempVault(s, repo)
+      incrementalLoad(s, dir, out, scope = scope).toDF("object", "n_new").orderBy("object")
+    } finally DvGo.disposeTempVault(s, out)
   }
 
   /** Depth-first recursive delete; the Files.walk stream is closed (it

@@ -23,11 +23,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Every persistent REWRITE in graft goes through one primitive here,
   * [[swap]] (stage beside, move live aside, move stage in, under the
-  * per-object lease), and every reader of a swapped dir calls [[restore]]
-  * first: vault compaction and erasure, sink and IVF index compaction
-  * ([[rewriteObject]]), the IVF centroid and drift-baseline refresh, and
-  * the micro-batch loop's catalog and responses. Appends stay in
-  * [[DvLoader.appendNovel]].
+  * per-object lease): vault compaction and erasure, sink and IVF index
+  * compaction ([[rewriteObject]]), the IVF centroid and drift-baseline
+  * refresh, and the micro-batch loop's catalog and responses. The
+  * protocol (lease, set-aside copy, stage) is known only to this object:
+  * a reader of a swapped dir asks [[liveExists]], which first puts back a
+  * copy a crashed swap left set aside. Appends stay in
+  * [[DvLoader.Repo.append]].
   */
 object DvMaintenance {
 
@@ -36,13 +38,15 @@ object DvMaintenance {
   // window protecting compaction/purge/append used to be convention —
   // a second concurrent writer corrupted silently. Now it is structural:
   // every stage-and-swap rewrite and every bucketed append
-  // checks-and-claims `<repoDir>/<obj>__lease` first, so an overlapping
+  // checks-and-claims `<object path>__lease` first, so an overlapping
   // writer FAILS LOUDLY instead of interleaving file moves.
   //
-  // Claim protocol (atomic on any POSIX filesystem): write the holder's
-  // token to a private temp file, then `Files.move(tmp, lease)` WITHOUT
-  // REPLACE_EXISTING — exactly one mover wins; the loser reads the
-  // token. A token registered in this JVM's live set is a real
+  // Claim protocol: write the holder's token to a private temp file, then
+  // hard-link it as the lease (`Files.createLink`). link(2) fails with
+  // EEXIST when the lease exists, so exactly one claimer wins and the
+  // lease appears with its full token in it; the losers read the token
+  // (a move is not exclusive: rename(2) replaces an existing lease). A
+  // token registered in this JVM's live set is a real
   // concurrent writer → refuse. A token NOT in the live set is a stale
   // lease from a crashed writer → reclaimed automatically, so the
   // compaction crash ladder's "re-running repairs every interrupted
@@ -52,54 +56,57 @@ object DvMaintenance {
   // external lock service, which this sandbox cannot model.
   private val liveLeases = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private[graft] def leasePath(repoDir: String, obj: String): java.nio.file.Path =
-    java.nio.file.Paths.get(s"$repoDir/${obj}__lease")
+  private[graft] def leasePath(path: String): java.nio.file.Path =
+    java.nio.file.Paths.get(s"${path}__lease")
 
-  private[graft] def claimLease(repoDir: String, obj: String, who: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption => _}
-    val lease = leasePath(repoDir, obj)
+  /** Claim the writer lease of the object at `path`; returns the token. */
+  private[graft] def claimLease(path: String, who: String): String = {
+    import java.nio.file.{Files, Paths}
+    val lease = leasePath(path)
     val token = s"$who@${java.util.UUID.randomUUID()}"
-    liveLeases.add(token)
-    val tmp = Paths.get(s"$repoDir/${obj}__lease.claim.${token.hashCode.toHexString}${System.nanoTime()}")
-    Files.createDirectories(lease.getParent)
-    Files.writeString(tmp, token)
-    def tryMove(): Boolean =
-      try { Files.move(tmp, lease); true }
+    val tmp = Paths.get(s"${path}__lease.claim.${token.hashCode.toHexString}${System.nanoTime()}")
+    def holder(): String = try Files.readString(lease) catch { case _: java.io.IOException => "" }
+    def link(): Boolean =
+      try { Files.createLink(lease, tmp); true }
       catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (!tryMove()) {
-      val holder = try Files.readString(lease) catch { case _: java.io.IOException => "" }
-      if (liveLeases.contains(holder)) {
-        liveLeases.remove(token)
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"repo writer lease on $obj is HELD by a live writer ($holder) — " +
+    liveLeases.add(token)
+    try {
+      Files.createDirectories(lease.getParent)
+      Files.write(tmp, token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      if (!link()) {
+        val seen = holder()
+        if (liveLeases.contains(seen)) throw new IllegalStateException(
+          s"repo writer lease on $path is HELD by a live writer ($seen) — " +
             "a second concurrent compaction/purge/append on the same object " +
             "violates the single-writer window; serialize the writers")
-      }
-      // stale lease from a crashed writer: reclaim (the crash ladder's
-      // re-run-repairs contract), but only the one observed holder —
-      // losing a reclaim race to ANOTHER live claimer must still refuse
-      Files.deleteIfExists(lease)
-      if (!tryMove()) {
-        liveLeases.remove(token)
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"repo writer lease on $obj was re-claimed concurrently while " +
+        // stale lease from a crashed writer: reclaim (the crash ladder's
+        // re-run-repairs contract), but only the one observed holder —
+        // reclaims are serialized in this JVM, and losing a reclaim race
+        // to ANOTHER claimer must still refuse
+        val reclaimed = liveLeases.synchronized {
+          holder() == seen && { if (seen.nonEmpty) Files.deleteIfExists(lease); link() }
+        }
+        if (!reclaimed) throw new IllegalStateException(
+          s"repo writer lease on $path was re-claimed concurrently while " +
             "reclaiming a stale lease — a live writer holds the object")
       }
-    }
-    token
+      token
+    } catch {
+      case e: Throwable => liveLeases.remove(token); throw e
+    } finally Files.deleteIfExists(tmp)
   }
 
-  private[graft] def releaseLease(repoDir: String, obj: String, token: String): Unit = {
+  /** The file goes before the token leaves the live set, so a claimer
+    * never takes a lease its holder is still releasing for a stale one. */
+  private[graft] def releaseLease(path: String, token: String): Unit = {
+    java.nio.file.Files.deleteIfExists(leasePath(path))
     liveLeases.remove(token)
-    java.nio.file.Files.deleteIfExists(leasePath(repoDir, obj))
   }
 
-  /** Run `body` under the per-object writer lease. */
-  private[graft] def withLease[A](repoDir: String, obj: String, who: String)(body: => A): A = {
-    val token = claimLease(repoDir, obj, who)
-    try body finally releaseLease(repoDir, obj, token)
+  /** Run `body` under the writer lease of the object stored at `path`. */
+  private[graft] def withLease[A](path: String, who: String)(body: => A): A = {
+    val token = claimLease(path, who)
+    try body finally releaseLease(path, token)
   }
 
   /** The one crash-safe stage-and-swap every persistent rewrite goes
@@ -125,8 +132,7 @@ object DvMaintenance {
     */
   def swap[A](path: String)(writeStage: String => A): A = {
     import java.nio.file.{Files, Paths}
-    val (dir, obj) = DvLoader.splitObject(path)
-    withLease(dir, obj, "swap") {
+    withLease(path, "swap") {
       val (live, stage, aside) =
         (Paths.get(path), Paths.get(s"${path}__compact"), Paths.get(s"${path}__old"))
       restore(path)
@@ -142,11 +148,20 @@ object DvMaintenance {
     }
   }
 
-  /** Mid-swap recovery for readers: if a crash between [[swap]]'s two
-    * moves left only `<path>__old`, move it back. Every reader of a
-    * swapped dir calls this before it probes or reads the dir.
+  /** Whether the live copy of a swapped dir exists. Every reader of a
+    * swapped dir asks this before it reads the dir: if a crash between
+    * [[swap]]'s two moves left only the set-aside copy, it is moved back
+    * first, so a reader never takes a crashed swap for a missing dir.
     */
-  def restore(path: String): Unit = {
+  def liveExists(s: SparkSession, path: String): Boolean = {
+    restore(path)
+    DvLoader.pathExists(s, path)
+  }
+
+  /** Mid-swap recovery: if a crash between [[swap]]'s two moves left only
+    * `<path>__old`, move it back.
+    */
+  private def restore(path: String): Unit = {
     import java.nio.file.{Files, Paths}
     val (live, aside) = (Paths.get(path), Paths.get(s"${path}__old"))
     if (!Files.exists(live) && Files.exists(aside)) Files.move(aside, live)
@@ -160,8 +175,8 @@ object DvMaintenance {
     * re-running repairs every interrupted state.
     */
   def compactBucketed(s: SparkSession, repoDir: String, obj: String): (Long, Long) = {
-    val (keys, b) = schemaSpec(s, repoDir, obj)
-    rewriteObject(s, repoDir, obj, keys, b, identity)
+    val schema = DvLoader.readSchema(s, repoDir)
+    rewriteObject(s, schema.repo, obj, schema.keys(obj), identity)
   }
 
   /** Physical erasure for sensitive satellites (r11 verdict #8 — GDPR
@@ -195,8 +210,8 @@ object DvMaintenance {
     require(obj.endsWith("_sensitive"),
       s"purgeSensitive: $obj is not a sensitive satellite — logical deletes (dv_sat_status) cover it")
     val (obsBefore, obsAfter) = (Observation(), Observation())
-    val (keys, b) = schemaSpec(s, repoDir, obj)
-    rewriteObject(s, repoDir, obj, keys, b, df =>
+    val schema = DvLoader.readSchema(s, repoDir)
+    rewriteObject(s, schema.repo, obj, schema.keys(obj), df =>
       df.observe(obsBefore, count(lit(1)).as("n"))
         .join(broadcast(victims.select(col(hkCol).as("victim_hk"))),
           col(hkCol) === col("victim_hk") && col("record_source") =!= lit(DvDefaults.GhostSource),
@@ -205,14 +220,8 @@ object DvMaintenance {
     (obsBefore.get("n").asInstanceOf[Long], obsAfter.get("n").asInstanceOf[Long])
   }
 
-  /** A schema repo object's anti-join keys and the repo's bucket spec. */
-  private def schemaSpec(s: SparkSession, repoDir: String, obj: String): (Seq[String], DvLoader.Bucketing) = {
-    val schema = DvLoader.readSchema(s, repoDir)
-    (DvLoader.schemaKeys(schema, obj), schema.layout)
-  }
-
-  /** [[swap]] a bucketed object, keyed by `keys` under bucket spec `b`,
-    * to `transform` of its rows, one file per bucket: compaction
+  /** [[swap]] the bucketed object `obj` of `repo`, keyed by `keys`, to
+    * `transform` of its rows, one file per bucket: compaction
     * (`identity`), erasure, the IVF retrain's cell reassignment. Returns
     * (files_before, files_after).
     *
@@ -226,19 +235,17 @@ object DvMaintenance {
     * table's catalog entry is dropped; the live table keeps its entry
     * (the transforms keep the schema) and is refreshed after the swap.
     */
-  def rewriteObject(s: SparkSession, repoDir: String, obj: String,
-                    keys: Seq[String], b: DvLoader.Bucketing,
+  def rewriteObject(s: SparkSession, repo: DvLoader.Repo, obj: String, keys: Seq[String],
                     transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) = {
-    val table = s"${b.tablePrefix}$obj"
-    val path = s"$repoDir/$obj"
+    val (table, path) = (repo.table(obj), repo.path(obj))
     val counts = swap(path) { stage =>
       val staging = s"${table}__compact"
       s.sql(s"DROP TABLE IF EXISTS $staging")
       val before = dataFiles(s, path).size
       // a listing cached before another session appended would hide rows
       if (s.catalog.tableExists(table)) s.catalog.refreshTable(table)
-      try DvLoader.bucketedWriter(transform(DvLoader.storedObject(s, repoDir, obj, keys, b)),
-          keys, b.buckets, stage).saveAsTable(staging)
+      try DvLoader.bucketedWriter(transform(repo.read(s, obj, keys)),
+          keys, repo.layout.buckets, stage).saveAsTable(staging)
       finally s.sql(s"DROP TABLE IF EXISTS $staging")
       val staged = dataFiles(s, stage)
       val split = staged.groupBy(org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId)

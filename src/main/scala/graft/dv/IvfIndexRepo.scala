@@ -9,16 +9,17 @@ import org.apache.spark.sql.functions._
   *  - `ivf_centroids` — the stored-trained coarse quantizer, K × Dim exact
   *    integer rows. Metadata-scale, stored as plain parquet (bucketing a
   *    K-row object buys nothing); refreshed wholesale on retrain through
-  *    [[DvMaintenance.swap]], and [[DvMaintenance.restore]]d before reads.
+  *    [[DvMaintenance.swap]], and read only once
+  *    [[DvMaintenance.liveExists]] says it is there.
   *  - `ivf_index` — the cell-assignment index (vec_id, cell, load_ts),
   *    BUCKETED BY vec_id and appended ONLY through
-  *    [[DvLoader.appendNovel]] (the bucketed-repo invariant: plain
+  *    [[DvLoader.Repo.append]] (the bucketed-repo invariant: plain
   *    parquet appends would corrupt the bucket layout), so the
   *    exactly-once anti-join carries the bucket spec on its stored side
   *    and needs no Exchange there.
   *  - `ivf_meta.json` — (table_prefix, buckets), pinned create-once at
-  *    init (the `sink_meta.json` writer) so every batch and streaming
-  *    session resolves the SAME bucket spec (the dv_schema.json
+  *    init ([[DvLoader.Repo.pin]], the `sink_meta.json` writer) so every
+  *    batch and streaming session opens the SAME repo (the dv_schema.json
   *    discipline applied to the index).
   *
   * Batch loads ([[appendBatch]]) and the streaming maintainer
@@ -41,33 +42,36 @@ object IvfIndexRepo {
     */
   val Keys: Seq[String] = Seq("vec_id")
 
+  private val MetaName = "ivf_meta.json"
+
   /** Create the repo: pin `ivf_meta.json` create-once (its table prefix
-    * derived from `repoDir`, [[DvLoader.pinBucketing]]) and write the
-    * initial quantizer.
+    * derived from `repoDir`, [[DvLoader.Repo.pin]]) and write the initial
+    * quantizer.
     */
   def init(s: SparkSession, repoDir: String, cents: Seq[(Long, Seq[Long])],
            buckets: Int = 8): Unit = {
     import s.implicits._
-    DvLoader.pinBucketing(s, repoDir, "ivf_meta.json", buckets)
+    val repo = DvLoader.Repo.pin(s, repoDir, MetaName, buckets)
     cents.toDF("cell", "q").coalesce(1)
-      .write.mode("overwrite").parquet(s"$repoDir/$CentObj")
+      .write.mode("overwrite").parquet(repo.path(CentObj))
   }
 
-  /** The bucket spec [[init]] pinned in `ivf_meta.json` (driver-side
+  /** The repo [[init]] created, opened from `ivf_meta.json` (driver-side
     * parse: metadata never costs a cluster job).
     */
-  def bucketing(s: SparkSession, repoDir: String): DvLoader.Bucketing =
-    DvLoader.readBucketing(s, s"$repoDir/ivf_meta.json")
-      .getOrElse(sys.error(s"$repoDir has no ivf_meta.json (IvfIndexRepo.init writes it)"))
+  def open(s: SparkSession, repoDir: String): DvLoader.Repo =
+    DvLoader.Repo.open(s, repoDir, MetaName)
+      .getOrElse(sys.error(s"$repoDir has no $MetaName (IvfIndexRepo.init writes it)"))
 
   /** The stored-trained quantizer, read back in the exact literal form the
     * assignment kernel takes (K-scale collect — the coarse codebook is
-    * metadata, never corpus). [[DvMaintenance.restore]]s a copy a crashed
-    * centroid swap set aside before reading.
+    * metadata, never corpus). Read once [[DvMaintenance.liveExists]] has
+    * put back a copy a crashed centroid swap set aside.
     */
   def centroids(s: SparkSession, repoDir: String): Seq[(Long, Seq[Long])] = {
-    DvMaintenance.restore(s"$repoDir/$CentObj")
-    s.read.parquet(s"$repoDir/$CentObj").orderBy("cell").collect()
+    val path = open(s, repoDir).path(CentObj)
+    if (!DvMaintenance.liveExists(s, path)) sys.error(s"$repoDir has no $CentObj")
+    s.read.parquet(path).orderBy("cell").collect()
       .map(r => (r.getLong(0), r.getAs[scala.collection.Seq[Long]](1).toSeq)).toSeq
   }
 
@@ -113,15 +117,16 @@ object IvfIndexRepo {
     try {
       val newCents = Similarity.trainCentroidsFrom(q)
       import s.implicits._
-      DvMaintenance.swap(s"$repoDir/$CentObj")(stage =>
+      val repo = open(s, repoDir)
+      DvMaintenance.swap(repo.path(CentObj))(stage =>
         newCents.toDF("cell", "q").coalesce(1).write.parquet(stage))
-      DvMaintenance.rewriteObject(s, repoDir, IndexObj, Keys, bucketing(s, repoDir),
+      DvMaintenance.rewriteObject(s, repo, IndexObj, Keys,
         stored => reassignFrame(stored, q, newCents))
       // refresh the stored-side drift baseline to the NEW quantizer
       // (index-scale: cells × Dim rows) so a running maintainer's drift
       // evidence tracks the retrained generation (Streams.ivfIncrRepoSink
       // prefers this over its caller-supplied fallback)
-      DvMaintenance.swap(s"$repoDir/$StoredAggObj")(stage =>
+      DvMaintenance.swap(repo.path(StoredAggObj))(stage =>
         Similarity.ivfDimAgg(q, newCents, "s_d", "n_s").write.parquet(stage))
       newCents.size
     } finally ephemeral.foreach(_.unpersist())
@@ -145,9 +150,8 @@ object IvfIndexRepo {
   val StoredAggObj = "ivf_stored_agg"
 
   def storedAgg(s: SparkSession, repoDir: String): Option[DataFrame] = {
-    DvMaintenance.restore(s"$repoDir/$StoredAggObj")
-    Option.when(DvLoader.pathExists(s, s"$repoDir/$StoredAggObj"))(
-      s.read.parquet(s"$repoDir/$StoredAggObj"))
+    val path = open(s, repoDir).path(StoredAggObj)
+    Option.when(DvMaintenance.liveExists(s, path))(s.read.parquet(path))
   }
 
   /** The maintenance DECISION (drift evidence → action): retrain iff the
@@ -179,28 +183,25 @@ object IvfIndexRepo {
     graft.queries.Similarity.repoIvfRecall(s, repoDir, corpus)
       .withColumn("event", lit(event))
       .withColumn("event_ts", lit(eventTs))
-      .write.mode("append").parquet(s"$repoDir/recall_log")
+      .write.mode("append").parquet(open(s, repoDir).path("recall_log"))
 
   /** The index through the session catalog — carries the bucket spec. */
   def storedIndex(s: SparkSession, repoDir: String): DataFrame =
-    DvLoader.storedObject(s, repoDir, IndexObj, Keys, bucketing(s, repoDir))
+    open(s, repoDir).read(s, IndexObj, Keys)
 
   /** The micro-batch append PLAN: distinct arriving vec_ids not yet in
-    * the index ([[DvLoader.novelRows]] on the bucketed object) — exposed
-    * so StreamPlanSweepSpec sweeps the exact frame [[appendAssigned]]
-    * writes.
+    * the index ([[DvLoader.Repo.novel]]) — exposed so StreamPlanSweepSpec
+    * sweeps the exact frame [[appendAssigned]] writes.
     */
   def appendPlan(s: SparkSession, repoDir: String, assigned: DataFrame): DataFrame =
-    DvLoader.novelRows(s, assigned.dropDuplicates("vec_id"), s"$repoDir/$IndexObj", Keys,
-      bucketing(s, repoDir))
+    open(s, repoDir).novel(s, IndexObj, Keys, assigned.dropDuplicates("vec_id"))
 
   /** Append only never-seen vec_ids from an assigned frame
-    * (vec_id, cell, load_ts) through [[DvLoader.appendNovel]]. Returns rows
+    * (vec_id, cell, load_ts) through [[DvLoader.Repo.append]]. Returns rows
     * appended.
     */
   def appendAssigned(s: SparkSession, repoDir: String, assigned: DataFrame): Long =
-    DvLoader.appendNovel(s, assigned.dropDuplicates("vec_id"), s"$repoDir/$IndexObj", Keys,
-      bucketing(s, repoDir))
+    open(s, repoDir).append(s, IndexObj, Keys, assigned.dropDuplicates("vec_id"))
 
   /** Batch face: assign a vector batch to the repo's stored centroids
     * (scan-local literal argmax — no retrain) and append exactly-once.
@@ -224,5 +225,5 @@ object IvfIndexRepo {
     * object.
     */
   def compact(s: SparkSession, repoDir: String): (Long, Long) =
-    DvMaintenance.rewriteObject(s, repoDir, IndexObj, Keys, bucketing(s, repoDir), identity)
+    DvMaintenance.rewriteObject(s, open(s, repoDir), IndexObj, Keys, identity)
 }

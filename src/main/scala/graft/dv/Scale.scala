@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *     their hash key (every `DvGo.go` vault is). An incremental
   *     anti-join against a bucketed table needs no exchange on the stored
   *     side — only the (small) batch side shuffles into the same
-  *     bucketing (`DvLoader.novelRows`).
+  *     bucketing (`DvLoader.Repo.novel`).
   *  2. **Salting**: skewed group-by keys (one user producing 1% of all
   *     events) pre-aggregate under a deterministic salt, then merge —
   *     bounding any single reducer's input.

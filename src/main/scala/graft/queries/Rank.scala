@@ -286,7 +286,7 @@ object Rank extends QueryModule {
     // localCheckpoint preserves the physical output partitioning into
     // the LogicalRDD, so each round's src-equi-join finds its clustered
     // distribution already satisfied on the (corpus-scale) edge side and
-    // only the (node-scale) rank frame moves — the DvLoader.novelRows
+    // only the (node-scale) rank frame moves — the DvLoader.Repo.novel
     // bucketing discipline applied to the iteration. RankSpec pins the
     // partitioned round plan edge-side-exchange-free under forced
     // shuffle joins.

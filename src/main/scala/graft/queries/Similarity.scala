@@ -1149,7 +1149,6 @@ object Similarity extends QueryModule {
   // dropped without a corpus-scale driver collect.
   private def annIvfRetrain(s: SparkSession, dir: String): DataFrame = {
     val out = java.nio.file.Files.createTempDirectory("graft_ivf_retrain_").toString
-    val prefix = graft.dv.DvLoader.tablePrefix(out)
     try {
       // the session-memoized quantized corpus: appendBatch's assignment,
       // the retrain's Lloyd rounds, the reassignment rewrite and the drift
@@ -1163,11 +1162,7 @@ object Similarity extends QueryModule {
       graft.dv.IvfIndexRepo.storedIndex(s, out)
         .select(col("vec_id"), col("cell")).orderBy("vec_id")
         .localCheckpoint()
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${prefix}ivf_index")
-      graft.dv.DvLoader.deletePathQuietly(
-        java.nio.file.Paths.get(out), "ann_ivf_retrain temp index repo")
-    }
+    } finally graft.dv.DvGo.disposeTempVault(s, out)
   }
 
   private val annIvfRetrainSql =

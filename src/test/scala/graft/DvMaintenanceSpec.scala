@@ -292,7 +292,7 @@ class DvMaintenanceSpec extends SparkSpec {
     try {
       val want = contentHash(table)
       // writer 1 holds the object (claimed, mid-rewrite)
-      val token = DvMaintenance.claimLease(out, "hub_customer", "writer1")
+      val token = DvMaintenance.claimLease(s"$out/hub_customer", "writer1")
       // writer 2: concurrent compaction on the SAME object → refused
       val e1 = intercept[IllegalStateException] {
         DvMaintenance.compactBucketed(spark, out, "hub_customer")
@@ -301,17 +301,17 @@ class DvMaintenanceSpec extends SparkSpec {
       // writer 2': concurrent bucketed APPEND on the same object → refused
       val schema = DvLoader.readSchema(spark, out)
       val e2 = intercept[IllegalStateException] {
-        DvLoader.appendObject(spark, out, "hub_customer", Seq("hub_customer_hk"),
-          schema.bucketing.get, spark.table(table).limit(1))
+        schema.repo.append(spark, "hub_customer", Seq("hub_customer_hk"),
+          spark.table(table).limit(1))
       }
       assert(e2.getMessage.contains("single-writer window"))
       // refusal corrupted nothing, and a DIFFERENT object is not blocked
       assert(contentHash(table) == want)
       // writer 1 finishes; the object is writable again
-      DvMaintenance.releaseLease(out, "hub_customer", token)
+      DvMaintenance.releaseLease(s"$out/hub_customer", token)
       val (_, after) = DvMaintenance.compactBucketed(spark, out, "hub_customer")
       assert(after == 4 && contentHash(table) == want)
-      assert(!Files.exists(DvMaintenance.leasePath(out, "hub_customer")),
+      assert(!Files.exists(DvMaintenance.leasePath(s"$out/hub_customer")),
         "lease survived a completed rewrite")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -327,14 +327,43 @@ class DvMaintenanceSpec extends SparkSpec {
       // disk but its token is in no live writer's set (other JVM / prior
       // crashed run) — the documented recovery action "retry" must claim
       // through it, not deadlock behind it
-      Files.writeString(DvMaintenance.leasePath(out, "hub_customer"), "dead-writer@crashed")
+      Files.writeString(DvMaintenance.leasePath(s"$out/hub_customer"), "dead-writer@crashed")
       val (_, after) = DvMaintenance.compactBucketed(spark, out, "hub_customer")
       assert(after == 4, s"expected one file per bucket, files=$after")
       assert(contentHash(table) == want, "object content changed across stale-lease recovery")
-      assert(!Files.exists(DvMaintenance.leasePath(out, "hub_customer")))
+      assert(!Files.exists(DvMaintenance.leasePath(s"$out/hub_customer")))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       DvLoader.deletePath(Paths.get(out))
+    }
+  }
+
+  // link(2)-claimed lease: a move without REPLACE_EXISTING let two or three
+  // of four racing claimers win in 35 of these 200 rounds
+  test("repo lease: of four claimers racing one object, exactly one wins every round") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+    import scala.util.Try
+    val dir = Files.createTempDirectory("graft_lease_race").toString
+    val obj = s"$dir/hub_customer"
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val bad = (1 to 200).flatMap { round =>
+        val barrier = new CyclicBarrier(4)
+        val claims = (1 to 4).map(i => pool.submit(new Callable[Try[String]] {
+          def call(): Try[String] = {
+            barrier.await()
+            Try(DvMaintenance.claimLease(obj, s"racer$i"))
+          }
+        })).map(_.get())
+        val won = claims.flatMap(_.toOption)
+        won.foreach(DvMaintenance.releaseLease(obj, _))
+        val loud = claims.flatMap(_.failed.toOption).forall(_.getMessage.contains("HELD by a live writer"))
+        Option.when(won.size != 1 || !loud)(round -> won.size)
+      }
+      assert(bad.isEmpty, s"${bad.size} of 200 rounds had no single winner (round -> winners): ${bad.take(10)}")
+    } finally {
+      pool.shutdown()
+      DvLoader.deletePath(Paths.get(dir))
     }
   }
 }

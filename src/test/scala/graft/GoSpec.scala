@@ -84,15 +84,16 @@ class GoSpec extends SparkSpec {
   }
 
   test("dv_schema.json round-trips to the typed specs") {
-    val out = Files.createTempDirectory("graft_schema_rt").toString
-    Files.writeString(Paths.get(s"$out/dv_schema.json"),
-      DvGo.planJson(DvPlanner.literalPlan, "rt", bucketing = (DvLoader.tablePrefix(out), 4)))
-    val ref = DvLoader.readSchema(spark, out)
-    assert(ref.hubs.toSet == DvPlanner.hubs.toSet)
-    assert(ref.sats.map(t => (t.name, t.sourceTable, t.bkParts, t.descriptors)).toSet ==
-      Set(DvPlanner.satCustomer, DvPlanner.satCustomerSensitive)
-        .map(t => (t.name, t.sourceTable, t.bkParts, t.descriptors)))
-    assert(ref.links.toSet == Set(DvPlanner.linkOrders, DvPlanner.linkLineitem))
+    withTempVault("graft_schema_rt") { out =>
+      Files.writeString(Paths.get(s"$out/dv_schema.json"),
+        DvGo.planJson(DvPlanner.literalPlan, "rt", bucketing = (DvLoader.tablePrefix(out), 4)))
+      val ref = DvLoader.readSchema(spark, out)
+      assert(ref.hubs.toSet == DvPlanner.hubs.toSet)
+      assert(ref.sats.map(t => (t.name, t.sourceTable, t.bkParts, t.descriptors)).toSet ==
+        Set(DvPlanner.satCustomer, DvPlanner.satCustomerSensitive)
+          .map(t => (t.name, t.sourceTable, t.bkParts, t.descriptors)))
+      assert(ref.links.toSet == Set(DvPlanner.linkOrders, DvPlanner.linkLineitem))
+    }
   }
 
   test("schema-driven incremental load appends the missing keys, then is idempotent") {
@@ -101,12 +102,13 @@ class GoSpec extends SparkSpec {
     assert(counts("hub_customer") > 0 && counts("sat_customer") > 0)
     // a second pass over an up-to-date repo appends nothing: seed a full
     // repo of the literal objects, then load from the same source
-    val repo = Files.createTempDirectory("graft_repo_idem").toString
-    val scope = Set("hub_customer", "sat_customer", "link_orders")
-    DvGo.go(spark, sfDir, repo, include = scope, buckets = 4, plan = Some(DvPlanner.literalPlan))
-    val again = DvLoader.incrementalLoad(spark, sfDir, repo, scope = scope).toMap
-    assert(again.keySet == Set("hub_customer", "sat_customer", "link_orders"))
-    assert(again.values.forall(_ == 0L), s"second load not idempotent: $again")
+    withTempVault("graft_repo_idem") { repo =>
+      val scope = Set("hub_customer", "sat_customer", "link_orders")
+      DvGo.go(spark, sfDir, repo, include = scope, buckets = 4, plan = Some(DvPlanner.literalPlan))
+      val again = DvLoader.incrementalLoad(spark, sfDir, repo, scope = scope).toMap
+      assert(again.keySet == Set("hub_customer", "sat_customer", "link_orders"))
+      assert(again.values.forall(_ == 0L), s"second load not idempotent: $again")
+    }
   }
 
   test("bucketed go(): repo-driven increment runs shuffle-free on the stored side") {
@@ -226,30 +228,31 @@ class GoSpec extends SparkSpec {
   }
 
   test("streaming continuous load converges to the batch build (bgw loop)") {
-    val tmp = Files.createTempDirectory("graft_stream_repo").toString
-    val repo = emptyVault(s"$tmp/repo", "stream")
-    val st = ContinuousPipeline.State(s"$tmp/catalog", s"$tmp/responses", repo)
-    // customer rows arrive as two file chunks on a streaming source
-    val cust = Tables.load(spark, sfDir, "customer")
-    val src = s"$tmp/incoming"
-    cust.filter(col("c_custkey") % 2 === 0).write.mode("append").parquet(src)
-    val stream = spark.readStream.schema(cust.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = ContinuousPipeline.sink(stream, "customer", st, s"$tmp/ckpt").start()
-    q.processAllAvailable()
-    cust.filter(col("c_custkey") % 2 === 1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    // the streamed vault equals the one-shot batch build, rows and all
-    val streamedHub = spark.read.parquet(s"$repo/hub_customer")
-    val batchHub = DvBuild.hub(spark, sfDir, DvPlanner.hubCustomer)
-    assert(streamedHub.count() == batchHub.count())
-    val diff = streamedHub.select("hub_customer_hk", "c_custkey_bk")
-      .exceptAll(batchHub.select("hub_customer_hk", "c_custkey_bk")).count()
-    assert(diff == 0)
-    val streamedSat = spark.read.parquet(s"$repo/sat_customer")
-    val batchSat = DvBuild.sat(spark, sfDir, DvPlanner.satCustomer)
-    assert(streamedSat.count() == batchSat.count())
+    withTempVault("graft_stream_repo") { tmp =>
+      val repo = emptyVault(s"$tmp/repo", "stream")
+      val st = ContinuousPipeline.State(s"$tmp/catalog", s"$tmp/responses", repo)
+      // customer rows arrive as two file chunks on a streaming source
+      val cust = Tables.load(spark, sfDir, "customer")
+      val src = s"$tmp/incoming"
+      cust.filter(col("c_custkey") % 2 === 0).write.mode("append").parquet(src)
+      val stream = spark.readStream.schema(cust.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+      val q = ContinuousPipeline.sink(stream, "customer", st, s"$tmp/ckpt").start()
+      q.processAllAvailable()
+      cust.filter(col("c_custkey") % 2 === 1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
+      // the streamed vault equals the one-shot batch build, rows and all
+      val streamedHub = spark.read.parquet(s"$repo/hub_customer")
+      val batchHub = DvBuild.hub(spark, sfDir, DvPlanner.hubCustomer)
+      assert(streamedHub.count() == batchHub.count())
+      val diff = streamedHub.select("hub_customer_hk", "c_custkey_bk")
+        .exceptAll(batchHub.select("hub_customer_hk", "c_custkey_bk")).count()
+      assert(diff == 0)
+      val streamedSat = spark.read.parquet(s"$repo/sat_customer")
+      val batchSat = DvBuild.sat(spark, sfDir, DvPlanner.satCustomer)
+      assert(streamedSat.count() == batchSat.count())
+    }
   }
 
   test("a default go() vault can be compacted and purged") {
@@ -258,7 +261,7 @@ class GoSpec extends SparkSpec {
     val spec = DvPlanner.satCustomerSensitive
     val obj = s"sat_${spec.name}"
     DvGo.go(spark, sfDir, out, include = Set("hub_customer", obj))
-    val prefix = DvLoader.readSchema(spark, out).layout.tablePrefix
+    val prefix = DvLoader.readSchema(spark, out).repo.layout.tablePrefix
     try {
       val cust = Tables.load(spark, sfDir, "customer")
       // one appended micro-batch leaves a second file set in the buckets

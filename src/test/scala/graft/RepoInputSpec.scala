@@ -18,7 +18,7 @@ class RepoInputSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_bad_meta").toString
     try {
       Files.writeString(Paths.get(s"$dir/sink_meta.json"), """{"table_prefix": "bad_meta_"}""")
-      val e = intercept[RuntimeException](SinkRepo.bucketing(spark, dir))
+      val e = intercept[RuntimeException](SinkRepo.open(spark, dir))
       assert(e.getMessage.contains(s"$dir/sink_meta.json") && e.getMessage.contains("buckets"),
         e.getMessage)
       // a load through the sink fails the same way and lands nothing

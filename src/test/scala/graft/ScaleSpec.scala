@@ -12,8 +12,8 @@ class ScaleSpec extends SparkSpec {
       val batch = Tables.load(spark, sfDir, "customer")
         .select(graft.functions.GraftFunctions.dvHash(Seq(col("c_custkey").cast("string")))
           .as("hub_customer_hk"))
-      val inc = DvLoader.novelRows(spark, batch, s"$out/hub_customer", Seq("hub_customer_hk"),
-        DvLoader.readSchema(spark, out).layout)
+      val inc = DvLoader.readSchema(spark, out).repo.novel(spark, "hub_customer",
+        Seq("hub_customer_hk"), batch)
       val physical = inc.queryExecution.executedPlan.toString
       // the bucketed (right/stored) side must be scan->join with no shuffle:
       val exchanges = "Exchange hashpartitioning".r.findAllIn(physical).size

@@ -22,6 +22,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         (graft.dv.DvLoader.tablePrefix(repo), 4)))
     repo
   }
+
+  /** Run `body` on a fresh temp dir named `prefix`, then dispose of it
+    * ([[disposeVault]]). The disposal never throws, so it never masks the
+    * body's exception.
+    */
+  def withTempVault[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir) finally disposeVault(dir)
+  }
+
+  /** Drop the catalog tables of `dir` and of each of its subdirs (every
+    * vault, sink and index repo names its tables after its own dir), then
+    * delete `dir`.
+    */
+  def disposeVault(dir: String): Unit =
+    graft.dv.DvGo.disposeTempVault(spark, dir,
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten.filter(_.isDirectory).map(_.getPath))
 }
 
 object SparkSpec {

@@ -38,8 +38,12 @@ class StreamPlanSweepSpec extends SparkSpec {
     * and the second plan carries the anti-join (a missing path would
     * sweep only the projection).
     */
+  private var swept: Option[String] = None
+  override def afterAll(): Unit = swept.foreach(disposeVault)
+
   private lazy val tmp: String = {
     val dir = Files.createTempDirectory("graft_plan_sweep").toString
+    swept = Some(dir)
     locally {
       import spark.implicits._
       Streams.nearDupBatch(spark, Seq((1L, 2L, 1.0)).toDF("in_doc", "corpus_doc", "jaccard"),

@@ -109,64 +109,65 @@ class StreamUpgradeSpec extends SparkSpec {
 
   test("upgraded state class cannot restore a live checkpoint; old class resumes it to parity") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_upgrade").toString
-    val src = s"$tmp/incoming"; val ckpt = s"$tmp/ckpt"
-    val outV1 = s"$tmp/out_v1"; val outV2 = s"$tmp/out_v2"
-    val ords = orderLog()
-    val (b1, b2) = ords.splitAt(ords.length / 2)
-    b1.toSeq.toDS().write.mode("append").parquet(src)
-    def fileStream = spark.readStream
-      .schema(b1.toSeq.toDS().schema).parquet(src)
+    withTempVault("graft_upgrade") { tmp =>
+      val src = s"$tmp/incoming"; val ckpt = s"$tmp/ckpt"
+      val outV1 = s"$tmp/out_v1"; val outV2 = s"$tmp/out_v2"
+      val ords = orderLog()
+      val (b1, b2) = ords.splitAt(ords.length / 2)
+      b1.toSeq.toDS().write.mode("append").parquet(src)
+      def fileStream = spark.readStream
+        .schema(b1.toSeq.toDS().schema).parquet(src)
 
-    // phase 1: pre-upgrade stream consumes slice A against the checkpoint
-    // (foreachBatch parquet sink — the recoverable-sink shape the vault
-    // loaders use; memory sinks cannot restore a checkpoint at all)
-    val q1 = Streams.computedSatStream(fileStream).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch((b: Dataset[Streams.BvVersion], _: Long) =>
-        b.write.mode("append").parquet(outV1))
-      .outputMode("append").start()
-    q1.processAllAvailable(); q1.stop()
-    assert(spark.read.parquet(outV1).count() == b1.length)
+      // phase 1: pre-upgrade stream consumes slice A against the checkpoint
+      // (foreachBatch parquet sink — the recoverable-sink shape the vault
+      // loaders use; memory sinks cannot restore a checkpoint at all)
+      val q1 = Streams.computedSatStream(fileStream).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((b: Dataset[Streams.BvVersion], _: Long) =>
+          b.write.mode("append").parquet(outV1))
+        .outputMode("append").start()
+      q1.processAllAvailable(); q1.stop()
+      assert(spark.read.parquet(outV1).count() == b1.length)
 
-    // slice B lands while the operator is being "upgraded"
-    b2.toSeq.toDS().write.mode("append").parquet(src)
+      // slice B lands while the operator is being "upgraded"
+      b2.toSeq.toDS().write.mode("append").parquet(src)
 
-    // phase 2: the upgraded class against the SAME checkpoint — the
-    // state-schema check must reject the restore loudly
-    val q2 = computedSatStreamV2(fileStream).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch((b: Dataset[BvVersionV2], _: Long) =>
-        b.write.mode("append").parquet(outV2))
-      .outputMode("append").start()
-    val ex = intercept[StreamingQueryException] { q2.processAllAvailable() }
-    q2.stop()
-    val msg = Option(ex.getCause).map(_.toString).getOrElse(ex.toString).toLowerCase
-    assert(msg.contains("schema") || msg.contains("compatible"),
-      s"restore failed for an unexpected reason: $msg")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(outV2)) ||
-      spark.read.parquet(outV2).isEmpty, "rejected restore still emitted rows")
+      // phase 2: the upgraded class against the SAME checkpoint — the
+      // state-schema check must reject the restore loudly
+      val q2 = computedSatStreamV2(fileStream).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((b: Dataset[BvVersionV2], _: Long) =>
+          b.write.mode("append").parquet(outV2))
+        .outputMode("append").start()
+      val ex = intercept[StreamingQueryException] { q2.processAllAvailable() }
+      q2.stop()
+      val msg = Option(ex.getCause).map(_.toString).getOrElse(ex.toString).toLowerCase
+      assert(msg.contains("schema") || msg.contains("compatible"),
+        s"restore failed for an unexpected reason: $msg")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(outV2)) ||
+        spark.read.parquet(outV2).isEmpty, "rejected restore still emitted rows")
 
-    // phase 3: non-destructive — the ORIGINAL class resumes the same
-    // checkpoint, consumes slice B, and the combined chain matches the
-    // batch twin exactly
-    val q3 = Streams.computedSatStream(fileStream).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch((b: Dataset[Streams.BvVersion], _: Long) =>
-        b.write.mode("append").parquet(outV1))
-      .outputMode("append").start()
-    q3.processAllAvailable(); q3.stop()
-    val all = spark.read.parquet(outV1).as[Streams.BvVersion].collect()
-    assert(all.length == ords.length,
-      s"resume re-emitted or dropped versions: ${all.length} for ${ords.length} orders")
-    val last = all.groupBy(_.o_custkey)
-      .map { case (ck, vs) => ck -> vs.maxBy(_.order_cnt) }
-    val batch = batchTwin()
-    assert(last.nonEmpty)
-    last.foreach { case (ck, v) =>
-      val b = batch(sha(ck.toString))
-      assert((v.order_cnt, v.total_cents, v.last_order_ms, v.hd) == b,
-        s"customer $ck diverges from dv_computed_sat after resume: $v vs $b")
+      // phase 3: non-destructive — the ORIGINAL class resumes the same
+      // checkpoint, consumes slice B, and the combined chain matches the
+      // batch twin exactly
+      val q3 = Streams.computedSatStream(fileStream).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((b: Dataset[Streams.BvVersion], _: Long) =>
+          b.write.mode("append").parquet(outV1))
+        .outputMode("append").start()
+      q3.processAllAvailable(); q3.stop()
+      val all = spark.read.parquet(outV1).as[Streams.BvVersion].collect()
+      assert(all.length == ords.length,
+        s"resume re-emitted or dropped versions: ${all.length} for ${ords.length} orders")
+      val last = all.groupBy(_.o_custkey)
+        .map { case (ck, vs) => ck -> vs.maxBy(_.order_cnt) }
+      val batch = batchTwin()
+      assert(last.nonEmpty)
+      last.foreach { case (ck, v) =>
+        val b = batch(sha(ck.toString))
+        assert((v.order_cnt, v.total_cents, v.last_order_ms, v.hd) == b,
+          s"customer $ck diverges from dv_computed_sat after resume: $v vs $b")
+      }
     }
   }
 
@@ -184,48 +185,49 @@ class StreamUpgradeSpec extends SparkSpec {
       tag: String, log: Seq[E],
       v1: DataFrame => Dataset[V1], v2: DataFrame => Dataset[V2]): (Seq[V1], Seq[V1], Seq[V2]) = {
     import spark.implicits._
-    val tmp = Files.createTempDirectory(s"graft_upgrade_$tag").toString
-    val src = s"$tmp/incoming"; val ckpt = s"$tmp/ckpt"
-    val outV1 = s"$tmp/out_v1"; val outV2 = s"$tmp/out_v2"
-    val (a, b) = log.splitAt(log.length / 2)
-    a.toDS().write.mode("append").parquet(src)
-    def fileStream = spark.readStream.schema(a.toDS().schema).parquet(src)
-    // phase 1: V1 consumes slice A against the checkpoint
-    val q1 = v1(fileStream).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch((batch: Dataset[V1], _: Long) => batch.write.mode("append").parquet(outV1))
-      .outputMode("append").start()
-    q1.processAllAvailable(); q1.stop()
-    val phase1 = if (java.nio.file.Files.exists(java.nio.file.Paths.get(outV1)))
-      spark.read.parquet(outV1).as[V1].collect().toSeq else Seq.empty[V1]
-    b.toDS().write.mode("append").parquet(src)
-    // phase 2: upgraded class against the SAME checkpoint — loud rejection
-    val q2 = v2(fileStream).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch((batch: Dataset[V2], _: Long) => batch.write.mode("append").parquet(outV2))
-      .outputMode("append").start()
-    val ex = intercept[StreamingQueryException] { q2.processAllAvailable() }
-    q2.stop()
-    val msg = Option(ex.getCause).map(_.toString).getOrElse(ex.toString).toLowerCase
-    assert(msg.contains("schema") || msg.contains("compatible"),
-      s"$tag: restore failed for an unexpected reason: $msg")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(outV2)) ||
-      spark.read.parquet(outV2).isEmpty, s"$tag: rejected restore still emitted rows")
-    // phase 3: the ORIGINAL class resumes the same checkpoint over slice B
-    val q3 = v1(fileStream).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch((batch: Dataset[V1], _: Long) => batch.write.mode("append").parquet(outV1))
-      .outputMode("append").start()
-    q3.processAllAvailable(); q3.stop()
-    val combined = spark.read.parquet(outV1).as[V1].collect().toSeq
-    // prescribed migration: checkpoint reset + one-shot full replay under V2
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[E]
-    val qm = v2(mem.toDF()).writeStream
-      .format("memory").queryName(s"up_${tag}_v2").outputMode("append").start()
-    mem.addData(log.toIndexedSeq: _*); qm.processAllAvailable(); qm.stop()
-    val migrated = spark.table(s"up_${tag}_v2").as[V2].collect().toSeq
-    (phase1, combined, migrated)
+    withTempVault(s"graft_upgrade_$tag") { tmp =>
+      val src = s"$tmp/incoming"; val ckpt = s"$tmp/ckpt"
+      val outV1 = s"$tmp/out_v1"; val outV2 = s"$tmp/out_v2"
+      val (a, b) = log.splitAt(log.length / 2)
+      a.toDS().write.mode("append").parquet(src)
+      def fileStream = spark.readStream.schema(a.toDS().schema).parquet(src)
+      // phase 1: V1 consumes slice A against the checkpoint
+      val q1 = v1(fileStream).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((batch: Dataset[V1], _: Long) => batch.write.mode("append").parquet(outV1))
+        .outputMode("append").start()
+      q1.processAllAvailable(); q1.stop()
+      val phase1 = if (java.nio.file.Files.exists(java.nio.file.Paths.get(outV1)))
+        spark.read.parquet(outV1).as[V1].collect().toSeq else Seq.empty[V1]
+      b.toDS().write.mode("append").parquet(src)
+      // phase 2: upgraded class against the SAME checkpoint — loud rejection
+      val q2 = v2(fileStream).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((batch: Dataset[V2], _: Long) => batch.write.mode("append").parquet(outV2))
+        .outputMode("append").start()
+      val ex = intercept[StreamingQueryException] { q2.processAllAvailable() }
+      q2.stop()
+      val msg = Option(ex.getCause).map(_.toString).getOrElse(ex.toString).toLowerCase
+      assert(msg.contains("schema") || msg.contains("compatible"),
+        s"$tag: restore failed for an unexpected reason: $msg")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(outV2)) ||
+        spark.read.parquet(outV2).isEmpty, s"$tag: rejected restore still emitted rows")
+      // phase 3: the ORIGINAL class resumes the same checkpoint over slice B
+      val q3 = v1(fileStream).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((batch: Dataset[V1], _: Long) => batch.write.mode("append").parquet(outV1))
+        .outputMode("append").start()
+      q3.processAllAvailable(); q3.stop()
+      val combined = spark.read.parquet(outV1).as[V1].collect().toSeq
+      // prescribed migration: checkpoint reset + one-shot full replay under V2
+      implicit val sqlCtx = spark.sqlContext
+      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[E]
+      val qm = v2(mem.toDF()).writeStream
+        .format("memory").queryName(s"up_${tag}_v2").outputMode("append").start()
+      mem.addData(log.toIndexedSeq: _*); qm.processAllAvailable(); qm.stop()
+      val migrated = spark.table(s"up_${tag}_v2").as[V2].collect().toSeq
+      (phase1, combined, migrated)
+    }
   }
 
   private def attributionStreamV2(events: DataFrame): Dataset[AttributionV2] = {

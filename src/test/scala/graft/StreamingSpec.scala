@@ -92,17 +92,18 @@ class StreamingSpec extends SparkSpec {
   test("streaming sat load appends only changed attribute versions") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_sat").toString
-    val mem = MemoryStream[CustRow]
-    val (repo, q) = vaultSink(dir, mem.toDF(), "customer", Set("hub_customer", "sat_customer"))
-    mem.addData(CustRow(1, 5, "a"), CustRow(1, 5, "a"))
-    q.processAllAvailable()
-    mem.addData(CustRow(1, 5, "a")) // same customer, same attrs -> no insert
-    mem.addData(CustRow(1, 5, "b")) // changed attribute -> one new version
-    q.processAllAvailable()
-    q.stop()
-    val sat = spark.read.parquet(s"$repo/sat_customer")
-    assert(sat.count() == 2) // two (hk, hd) versions despite four rows
+    withTempVault("graft_sat") { dir =>
+      val mem = MemoryStream[CustRow]
+      val (repo, q) = vaultSink(dir, mem.toDF(), "customer", Set("hub_customer", "sat_customer"))
+      mem.addData(CustRow(1, 5, "a"), CustRow(1, 5, "a"))
+      q.processAllAvailable()
+      mem.addData(CustRow(1, 5, "a")) // same customer, same attrs -> no insert
+      mem.addData(CustRow(1, 5, "b")) // changed attribute -> one new version
+      q.processAllAvailable()
+      q.stop()
+      val sat = spark.read.parquet(s"$repo/sat_customer")
+      assert(sat.count() == 2) // two (hk, hd) versions despite four rows
+    }
   }
 
   test("stream-stream join enriches purchases with in-window signups only") {
@@ -149,24 +150,25 @@ class StreamingSpec extends SparkSpec {
 
   test("file-based streaming source drives the hub load (real source, not MemoryStream)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_filesrc").toString
-    val src = s"$dir/incoming"
-    // batch 1 lands before the stream starts
-    Seq(CustRow(1, 1, "a"), CustRow(2, 1, "a")).toDF()
-      .write.mode("append").parquet(src)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[CustRow].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    val (repo, q) = vaultSink(dir, stream, "customer", Set("hub_customer"))
-    q.processAllAvailable()
-    // batch 2 arrives as a new file while the stream runs; customer 2 repeats
-    Seq(CustRow(2, 1, "a"), CustRow(3, 1, "a")).toDF()
-      .write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    val hub = spark.read.parquet(s"$repo/hub_customer").filter(col("record_source") =!= "SYSTEM")
-    assert(hub.count() == 3 && hub.select("hub_customer_hk").distinct().count() == 3)
+    withTempVault("graft_filesrc") { dir =>
+      val src = s"$dir/incoming"
+      // batch 1 lands before the stream starts
+      Seq(CustRow(1, 1, "a"), CustRow(2, 1, "a")).toDF()
+        .write.mode("append").parquet(src)
+      val stream = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[CustRow].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+      val (repo, q) = vaultSink(dir, stream, "customer", Set("hub_customer"))
+      q.processAllAvailable()
+      // batch 2 arrives as a new file while the stream runs; customer 2 repeats
+      Seq(CustRow(2, 1, "a"), CustRow(3, 1, "a")).toDF()
+        .write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
+      val hub = spark.read.parquet(s"$repo/hub_customer").filter(col("record_source") =!= "SYSTEM")
+      assert(hub.count() == 3 && hub.select("hub_customer_hk").distinct().count() == 3)
+    }
   }
 
   test("streaming anomaly flags a spike against running integer stats") {
@@ -192,37 +194,39 @@ class StreamingSpec extends SparkSpec {
   test("streaming link load appends only novel relationships across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_link").toString
-    val mem = MemoryStream[OrdRow]
-    // relationship = (order, customer); re-delivered pairs must not double-insert
-    val (repo, q) = vaultSink(dir, mem.toDF(), "orders", Set("link_orders"))
-    mem.addData(OrdRow(1, 1), OrdRow(2, 1))
-    q.processAllAvailable()
-    mem.addData(OrdRow(1, 1), OrdRow(3, 2)) // (1,1) repeats
-    q.processAllAvailable()
-    q.stop()
-    val link = spark.read.parquet(s"$repo/link_orders")
-    assert(link.count() == 3)
-    assert(link.select("link_orders_hk").distinct().count() == 3)
-    // member hub hks and bk payload ride along
-    assert(link.columns.toSet == Set("link_orders_hk", "load_ts", "record_source",
-      "hub_order_hk", "hub_customer_hk", "o_orderkey_bk", "o_custkey_bk"))
+    withTempVault("graft_link") { dir =>
+      val mem = MemoryStream[OrdRow]
+      // relationship = (order, customer); re-delivered pairs must not double-insert
+      val (repo, q) = vaultSink(dir, mem.toDF(), "orders", Set("link_orders"))
+      mem.addData(OrdRow(1, 1), OrdRow(2, 1))
+      q.processAllAvailable()
+      mem.addData(OrdRow(1, 1), OrdRow(3, 2)) // (1,1) repeats
+      q.processAllAvailable()
+      q.stop()
+      val link = spark.read.parquet(s"$repo/link_orders")
+      assert(link.count() == 3)
+      assert(link.select("link_orders_hk").distinct().count() == 3)
+      // member hub hks and bk payload ride along
+      assert(link.columns.toSet == Set("link_orders_hk", "load_ts", "record_source",
+        "hub_order_hk", "hub_customer_hk", "o_orderkey_bk", "o_custkey_bk"))
+    }
   }
 
   test("streaming hub load appends only novel keys across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_hub").toString
-    val mem = MemoryStream[CustRow]
-    val (repo, q) = vaultSink(dir, mem.toDF(), "customer", Set("hub_customer"))
-    mem.addData(CustRow(1, 1, "a"), CustRow(2, 1, "a"))
-    q.processAllAvailable()
-    mem.addData(CustRow(2, 1, "a"), CustRow(3, 1, "a")) // customer 2 repeats
-    q.processAllAvailable()
-    q.stop()
-    val hub = spark.read.parquet(s"$repo/hub_customer").filter(col("record_source") =!= "SYSTEM")
-    assert(hub.count() == 3)
-    assert(hub.select("hub_customer_hk").distinct().count() == 3)
+    withTempVault("graft_hub") { dir =>
+      val mem = MemoryStream[CustRow]
+      val (repo, q) = vaultSink(dir, mem.toDF(), "customer", Set("hub_customer"))
+      mem.addData(CustRow(1, 1, "a"), CustRow(2, 1, "a"))
+      q.processAllAvailable()
+      mem.addData(CustRow(2, 1, "a"), CustRow(3, 1, "a")) // customer 2 repeats
+      q.processAllAvailable()
+      q.stop()
+      val hub = spark.read.parquet(s"$repo/hub_customer").filter(col("record_source") =!= "SYSTEM")
+      assert(hub.count() == 3)
+      assert(hub.select("hub_customer_hk").distinct().count() == 3)
+    }
   }
 
   test("stateful transitions chain across micro-batch boundaries") {
